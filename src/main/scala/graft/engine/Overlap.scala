@@ -3,7 +3,7 @@ package graft.engine
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import scala.util.Try
+import scala.util.{Failure, Try}
 
 /** Overlap INDEPENDENT Spark actions from a small driver-side thread pool
   * (optimization guide §2.6 "Overlap independent jobs"): Spark's scheduler
@@ -32,7 +32,8 @@ import scala.util.Try
   * could run arms against a stale session or escape their job group.
   *
   * Failure hygiene (round 22): every form AWAITS ALL arms before
-  * rethrowing the first failure in declaration order. Abandoning in-flight
+  * rethrowing the first failure in declaration order, with every sibling
+  * failure attached to it as suppressed. Abandoning in-flight
   * arms on a sibling failure let detached jobs outlive the caller's scope
   * — in the index writers, a publishRoot failure handler could delete a
   * .tmp staging dir a zombie write was still filling.
@@ -58,29 +59,47 @@ object Overlap {
     "spark.job.interruptOnCancel", "spark.scheduler.pool")
 
   /** Submit one arm to the pool with the caller's session and job-scoped
-    * local properties re-established on the pool thread. */
+    * local properties re-established on the pool thread; the thread's
+    * own properties are restored afterwards, so an arm's job group never
+    * leaks into a later arm that runs without a session. */
   private def submit[A](body: => A): Future[A] = {
     val session = org.apache.spark.sql.SparkSession.getActiveSession
     val props = session.map(s =>
       inheritedProps.map(k => k -> s.sparkContext.getLocalProperty(k)))
     Future {
-      session.foreach { s =>
-        org.apache.spark.sql.SparkSession.setActiveSession(s)
-        props.foreach(_.foreach { case (k, v) =>
-          s.sparkContext.setLocalProperty(k, v) })
+      session match {
+        case None => body
+        case Some(s) =>
+          val sc = s.sparkContext
+          val saved = inheritedProps.map(k => k -> sc.getLocalProperty(k))
+          org.apache.spark.sql.SparkSession.setActiveSession(s)
+          props.foreach(_.foreach { case (k, v) => sc.setLocalProperty(k, v) })
+          try body
+          finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
       }
-      body
     }(pool)
   }
 
-  // Every form wraps each arm in Try and AWAITS every future before the
-  // first .get — so a failure cannot abandon a sibling in flight, and the
-  // first failure in declaration order is the one rethrown.
+  // Every form wraps each arm in Try and AWAITS every future before
+  // rethrowing — so a failure cannot abandon a sibling in flight. The
+  // first failure in declaration order is rethrown with every sibling
+  // failure attached as suppressed, so a failure reports all its causes.
+
+  private def await[A](f: Future[A]): Try[A] = Try(Await.result(f, Duration.Inf))
+
+  private def rethrowFirst(rs: Seq[Try[_]]): Unit = {
+    val errs = rs.collect { case Failure(e) => e }
+    errs.headOption.foreach { first =>
+      errs.tail.filterNot(_ eq first).distinct.foreach(first.addSuppressed)
+      throw first
+    }
+  }
 
   def par[A, B](a: => A, b: => B): (A, B) = {
     val fa = submit(a)
     val rb = Try(b)
-    val ra = Try(Await.result(fa, Duration.Inf))
+    val ra = await(fa)
+    rethrowFirst(Seq(ra, rb))
     (ra.get, rb.get)
   }
 
@@ -88,8 +107,9 @@ object Overlap {
     val fa = submit(a)
     val fb = submit(b)
     val rc = Try(c)
-    val ra = Try(Await.result(fa, Duration.Inf))
-    val rb = Try(Await.result(fb, Duration.Inf))
+    val ra = await(fa)
+    val rb = await(fb)
+    rethrowFirst(Seq(ra, rb, rc))
     (ra.get, rb.get, rc.get)
   }
 
@@ -98,9 +118,10 @@ object Overlap {
     val fb = submit(b)
     val fc = submit(c)
     val rd = Try(d)
-    val ra = Try(Await.result(fa, Duration.Inf))
-    val rb = Try(Await.result(fb, Duration.Inf))
-    val rc = Try(Await.result(fc, Duration.Inf))
+    val ra = await(fa)
+    val rb = await(fb)
+    val rc = await(fc)
+    rethrowFirst(Seq(ra, rb, rc, rd))
     (ra.get, rb.get, rc.get, rd.get)
   }
 
@@ -115,7 +136,8 @@ object Overlap {
     if (ts.isEmpty) return Nil
     val fs = ts.init.map(t => submit(t()))
     val last = Try(ts.last())
-    val rs = fs.map(f => Try(Await.result(f, Duration.Inf)))
-    (rs :+ last).map(_.get)
+    val rs = fs.map(await) :+ last
+    rethrowFirst(rs)
+    rs.map(_.get)
   }
 }

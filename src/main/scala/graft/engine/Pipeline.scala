@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * arcpy statements per feature class
   * (/root/reference/src/wins_transform_staging.py:143-273) become ONE lazy
   * Catalyst plan per output table — append, ordered field calculations,
-  * blank normalization, join enrichment, QA split — with actions only at
-  * the QA counts and sink writes.
+  * blank normalization, join enrichment, QA classification — with one
+  * count action per table and the sink writes.
   */
 object Pipeline {
 
@@ -27,11 +27,12 @@ object Pipeline {
       refDim: DataFrame, refLeftKey: String, refRightKey: String,
       refReason: String)
 
-  /** As-executed physical layout of the staged frame — the straggler
-    * predictor surfaced where users look (the run report): `skew` =
-    * max/avg partition rows; 1.0 is perfectly balanced, 10 means the
-    * slowest task did 10x the average work and the stage ran at its pace.
-    * Derived from [[graft.operators.Profile.partitionStats]]. */
+  /** As-executed physical layout of the staged (classified, persisted)
+    * frame the sinks read — the straggler predictor surfaced where users
+    * look (the run report): `skew` = max/avg partition rows; 1.0 is
+    * perfectly balanced, 10 means the slowest task did 10x the average
+    * work and the stage ran at its pace. Counts NON-EMPTY partitions, as
+    * [[graft.operators.Profile.partitionStats]] does. */
   final case class LayoutStats(
       nPartitions: Int, minRows: Long, maxRows: Long, avgRows: Double, skew: Double)
 
@@ -46,8 +47,8 @@ object Pipeline {
   final case class TableResult(
       keep: DataFrame, rejects: DataFrame, report: RunReport,
       private val staged: Option[DataFrame] = None) {
-    /** Release the QA input cached by [[runTable]] once keep/rejects have
-      * been written to their sinks. */
+    /** Release the classified frame cached by [[runTable]] once
+      * keep/rejects have been written to their sinks. */
     def unpersist(): Unit = staged.foreach(_.unpersist())
     /** Whether this result is holding a persisted frame that [[unpersist]]
       * must release. */
@@ -57,13 +58,21 @@ object Pipeline {
   /** Run the full §3.3 trace for one table. `template` fixes the output
     * schema (S5 — NO_TEST append into the template's column set).
     *
-    * CACHE CONTRACT: the returned [[TableResult]] holds the enriched frame
-    * persisted at `cache` (default MEMORY_AND_DISK) because three consumers
-    * evaluate it; callers that use `runTable` directly MUST call
+    * Each row's QA outcome is decided ONCE: the enriched rows plus
+    * [[Qa.FlagCol]] (the first failing rule's reason, or NULL) form one
+    * CLASSIFIED frame ([[Qa.classify]]), and keep/rejects are two filters
+    * over it ([[Qa.split]]). One action per table — a count grouped by
+    * (partition, flag) — yields the input count, the rejects by reason and
+    * the layout of the staged frame the sinks read.
+    *
+    * CACHE CONTRACT: the returned [[TableResult]] holds the classified
+    * frame persisted at `cache` (default MEMORY_AND_DISK) because the count
+    * and both sink writes read it — with it, the writes neither shuffle nor
+    * broadcast. Callers that use `runTable` directly MUST call
     * `TableResult.unpersist()` after writing keep/rejects, or route through
     * [[runAndPublish]], which releases it. Pass
     * `cache = StorageLevel.NONE` to opt out (each consumer then re-runs the
-    * upstream plan). */
+    * upstream plan, QA included). */
   def runTable(
       name: String,
       download: DataFrame,
@@ -83,59 +92,50 @@ object Pipeline {
     }
     // R5: '' -> NULL
     val blanked = blankToNullFields.foldLeft(calced)(Ops.blankToNull)
-    // J1/J2: first-match enrichment. The result is persisted (see the cache
-    // contract in the scaladoc) because THREE consumers evaluate it: the
-    // input count, the reject-count action, and the caller's keep/rejects
-    // sink writes — without the cache the whole upstream
-    // (scan+append+calcs+join) executes once per consumer. Single
-    // evaluation is pinned by a PipelineSpec accumulator test.
-    val cached = cache != org.apache.spark.storage.StorageLevel.NONE
-    val joined = enrich.fold(blanked) { e =>
+    // J1/J2: first-match enrichment
+    val enriched = enrich.fold(blanked) { e =>
       Ops.joinEnrich(blanked, e.dim, e.leftKey, e.rightKey, e.rightOrder, e.copies)
     }
-    val enriched = if (cached) joined.persist(cache) else joined
-    // Q1..Q3: sequential split + routed rejects
-    val result = qa match {
-      case Some(q) =>
-        val seed = enriched.limit(0).withColumn(Qa.FlagCol, lit(""))
-        Qa.runRules(enriched, seed, Seq(
-          df => Qa.dupSplit(df, q.dupKeys, q.dupReason),
-          df => Qa.refSplit(df, q.refDim, q.refLeftKey, q.refRightKey, q.refReason)))
-      case None =>
-        Qa.QaSplit(enriched, enriched.limit(0).withColumn(Qa.FlagCol, lit("")))
-    }
-    // A2-style forced counts — the engine's only actions besides sinks.
-    // append/calc/blank/enrich are all row-preserving (first-match join
-    // never multiplies), so aggregating the PERSISTED frame both
-    // materializes the cache and yields the input count in one pass;
-    // keep/rejects partition the input (QaSpec property), so keptRows is
-    // derived instead of recomputing the whole plan a third time. The
-    // aggregation is per-PARTITION counts (|partitions| rows, collected),
-    // so the same single pass also yields the as-executed layout/skew
-    // diagnostics for the report — no extra scan.
-    val pstats = graft.operators.Profile.partitionStats(enriched)
-      .collect().map(_.getLong(1))
-    val inputRows = pstats.sum
+    // Q1+Q2: the classified frame, persisted (see the cache contract) so
+    // the dup window and both broadcasts run once, not once per consumer.
+    // Single evaluation is pinned by PipelineSpec accumulator tests.
+    val cached = cache != org.apache.spark.storage.StorageLevel.NONE
+    val classified0 = Qa.classify(enriched, qa.toSeq.flatMap(q => Seq[DataFrame => DataFrame](
+      Qa.dupFlag(_, q.dupKeys, q.dupReason),
+      Qa.refFlag(_, q.refDim, q.refLeftKey, q.refRightKey, q.refReason))))
+    val classified = if (cached) classified0.persist(cache) else classified0
+    // A2-style forced count — the engine's only action besides the sinks.
+    // append/calc/blank/enrich/QA are all row-preserving (first-match and
+    // the distinct-key ref join never multiply), so one aggregate over the
+    // classified frame materializes the cache and yields, per (partition,
+    // flag): the input count, the rejects by reason and the layout.
+    val counts = classified
+      .groupBy(spark_partition_id(), col(Qa.FlagCol)).count()
+      .collect()
+    val perPartition = counts.groupMapReduce(_.getInt(0))(_.getLong(2))(_ + _).values
+    val inputRows = perPartition.sum
     val layout =
-      if (pstats.isEmpty) None
+      if (perPartition.isEmpty) None
       else {
-        val avg = pstats.sum.toDouble / pstats.length
+        val avg = inputRows.toDouble / perPartition.size
         def r2(x: Double) = math.round(x * 100) / 100.0
-        Some(LayoutStats(pstats.length, pstats.min, pstats.max, r2(avg),
-          r2(pstats.max / avg)))
+        Some(LayoutStats(perPartition.size, perPartition.min, perPartition.max,
+          r2(avg), r2(perPartition.max / avg)))
       }
-    val rejectCounts = result.rejects.groupBy(Qa.FlagCol).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val rejectCounts = counts.filterNot(_.isNullAt(1))
+      .groupMapReduce(_.getString(1))(_.getLong(2))(_ + _)
     val report = RunReport(name, inputRows, inputRows - rejectCounts.values.sum,
       rejectCounts, layout)
-    TableResult(result.keep, result.rejects, report,
-      staged = if (cached) Some(enriched) else None)
+    val split = Qa.split(classified)
+    TableResult(split.keep, split.rejects, report,
+      staged = if (cached) Some(classified) else None)
   }
 
   /** Run many tables and publish keeps + one merged reject table atomically
-    * (S8). The merged reject schema is the UNION of all reject schemas
-    * (missing columns null-filled) — appendNoTest would project onto the
-    * first table's columns and silently drop later tables' payloads. */
+    * (S8); [[Sinks.publish]] writes the tables concurrently. The merged
+    * reject schema is the UNION of all reject schemas (missing columns
+    * null-filled) — appendNoTest would project onto the first table's
+    * columns and silently drop later tables' payloads. */
   def runAndPublish(
       tables: Seq[(String, TableResult)], stagingDir: String): Seq[RunReport] = {
     // both collisions below would otherwise SILENTLY drop a table's keep

@@ -3,16 +3,18 @@ package graft.engine
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** QA / reject routing — the reference's signature compound operator
   * (SURVEY §2.5; /root/reference/src/wins_transform_staging.py:236-273).
   *
-  * Each rule splits a table into (keep, rejects) and stamps the rejects with
-  * a reason column. The reference applies rules sequentially — rule 2 only
-  * sees rows that survived rule 1 (:255 deletes before :258 selects), and its
-  * `REJECT_FLAG IS null` guard (:268) keeps rule-1 reasons from being
-  * overwritten in the accumulated reject table. Tagging each reject batch
-  * with its reason at split time reproduces both behaviors (SURVEY §7.3).
+  * Each rule stamps the rows it rejects with a reason column. The reference
+  * applies rules sequentially — rule 2 only sees rows that survived rule 1
+  * (:255 deletes before :258 selects), and its `REJECT_FLAG IS null` guard
+  * (:268) keeps rule-1 reasons from being overwritten in the accumulated
+  * reject table. [[runRules]] reproduces that literally, split by split;
+  * [[classify]] reproduces it on one frame, each rule setting the reason
+  * only where none is set yet (SURVEY §7.3).
   */
 object Qa {
 
@@ -20,43 +22,78 @@ object Qa {
     * keep ∩ rejects = ∅ (property-tested in QaSpec). */
   final case class QaSplit(keep: DataFrame, rejects: DataFrame)
 
+  /** The reason a row was rejected: NULL while the row passes every rule
+    * applied so far, else the FIRST failing rule's reason. */
   val FlagCol = "REJECT_FLAG"
 
-  /** Q1 — duplicate-key split (:240-257). The reference joins back to a
-    * materialized Frequency table and selects FREQUENCY > 1 (J3); a window
-    * count over the key is the same semantics with one shuffle and no
-    * materialized intermediate.
-    */
-  def dupSplit(df: DataFrame, keys: Seq[String], reason: String): QaSplit = {
+  private def flagWhere(df: DataFrame, fails: Column, reason: String): DataFrame =
+    df.withColumn(FlagCol, coalesce(col(FlagCol), when(fails, lit(reason))))
+
+  /** Q1 flagging rule — duplicate keys (:240-257). The reference joins back
+    * to a materialized Frequency table and selects FREQUENCY > 1 (J3); a
+    * window count over the key is the same semantics with one shuffle and
+    * no materialized intermediate. Only unflagged rows are counted. */
+  def dupFlag(df: DataFrame, keys: Seq[String], reason: String): DataFrame = {
     val w = Window.partitionBy(keys.map(col).toIndexedSeq: _*)
-    val tagged = df.withColumn("__freq", count(lit(1)).over(w))
-    QaSplit(
-      keep = tagged.filter(col("__freq") === 1).drop("__freq"),
-      rejects = tagged.filter(col("__freq") > 1).drop("__freq")
-        .withColumn(FlagCol, lit(reason)))
+    flagWhere(df, count(when(col(FlagCol).isNull, lit(1))).over(w) > 1, reason)
   }
 
-  /** Q2 — referential-integrity split (:258-269): rows whose key has no match
-    * in the dimension are rejected (left_anti); survivors are the left_semi.
-    * The dimension side is deduplicated and pruned to the key column so the
-    * build side stays small (broadcast-able even when the dim table is wide).
-    * NULL keys match nothing (`=` semantics, matching ArcGIS and DuckDB —
-    * SURVEY §7.3).
-    */
+  /** Q2 flagging rule — referential integrity (:258-269): rows whose key
+    * has no match in the dimension are rejected. A left join against the
+    * dimension's DISTINCT keys (pruned to the key column, so the build side
+    * stays small and broadcast-able even when the dim table is wide) with a
+    * hit marker never multiplies a row. NULL keys match nothing (`=`
+    * semantics, matching ArcGIS and DuckDB — SURVEY §7.3). Row-local. */
+  def refFlag(
+      df: DataFrame,
+      dim: DataFrame,
+      leftKey: String,
+      rightKey: String,
+      reason: String,
+      broadcastDim: Boolean = true): DataFrame = {
+    val keys0 = dim.select(col(rightKey).as("__ref_key")).distinct()
+      .withColumn("__ref_hit", lit(true))
+    val keys = if (broadcastDim) broadcast(keys0) else keys0
+    val joined = df.join(keys, df(leftKey) === keys("__ref_key"), "left")
+    flagWhere(joined, col("__ref_hit").isNull, reason).drop("__ref_key", "__ref_hit")
+  }
+
+  /** Apply flagging rules in order to one frame: `df` plus [[FlagCol]].
+    *
+    * Each rule is stated once, as a flagging rule ([[dupFlag]],
+    * [[refFlag]]): it sets its reason on the failing rows whose flag is
+    * still NULL and passes every row, column and earlier reason through;
+    * the splits are filters over the same rules.
+    *
+    * PRECONDITION: a flagging rule must decide each unflagged row from the
+    * unflagged rows alone. Then folding the rules over ONE frame equals
+    * [[runRules]]' sequential semantics (rule N+1 sees only rule N's keep
+    * side, and the first reason wins, :268). The ref rule meets it because
+    * it is row-local; the dup rule because its window counts only
+    * unflagged rows (as the first rule, that is the whole input). */
+  def classify(df: DataFrame, rules: Seq[DataFrame => DataFrame]): DataFrame =
+    rules.foldLeft(df.withColumn(FlagCol, lit(null).cast(StringType)))((d, rule) => rule(d))
+
+  /** Split a classified frame: keep = the unflagged rows without
+    * [[FlagCol]], rejects = the flagged rows with it. */
+  def split(classified: DataFrame): QaSplit = QaSplit(
+    keep = classified.filter(col(FlagCol).isNull).drop(FlagCol),
+    rejects = classified.filter(col(FlagCol).isNotNull))
+
+  /** Q1 — duplicate-key split: every row of a duplicated key is rejected. */
+  def dupSplit(df: DataFrame, keys: Seq[String], reason: String): QaSplit =
+    split(classify(df, Seq(dupFlag(_, keys, reason))))
+
+  /** Q2 — referential-integrity split: rows without a dimension match are
+    * rejected. */
   def refSplit(
       df: DataFrame,
       dim: DataFrame,
       leftKey: String,
       rightKey: String,
       reason: String,
-      broadcastDim: Boolean = true): QaSplit = {
-    val keys0 = dim.select(col(rightKey)).distinct()
-    val keys = if (broadcastDim) broadcast(keys0) else keys0
-    val cond = df(leftKey) === keys(rightKey)
-    QaSplit(
-      keep = df.join(keys, cond, "left_semi"),
-      rejects = df.join(keys, cond, "left_anti").withColumn(FlagCol, lit(reason)))
-  }
+      broadcastDim: Boolean = true): QaSplit =
+    split(classify(df, Seq(refFlag(_, dim, leftKey, rightKey, reason, broadcastDim))))
 
   /** Q3 — reject routing (:254-256,264-269): accumulate a reject batch into
     * the running reject table. The reject table's schema is the base schema +

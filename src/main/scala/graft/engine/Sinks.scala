@@ -363,13 +363,19 @@ object Sinks {
     * hand-rolled version here built its staging path by raw string
     * concat, so a trailing-slash `stagingDir` staged INSIDE the live
     * root and then failed `swapInto`'s exists-check after writing every
-    * table — and it left that debris behind). */
+    * table — and it left that debris behind).
+    *
+    * The per-table writes are independent jobs, so they are submitted
+    * together through [[Overlap.all]] — each alone is a few small stages
+    * that never fill the cluster. `Overlap.all` awaits EVERY arm before
+    * rethrowing, so no write is still filling the staging dir when
+    * `publishRoot` swaps it in or deletes it. */
   def publish(tables: Map[String, DataFrame], stagingDir: String): Unit = {
     require(tables.nonEmpty, "publish: no tables")
     val spark = tables.head._2.sparkSession
     val fs = new Path(stagingDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     publishRoot(fs, stagingDir) { tmp =>
-      tables.foreach { case (name, df) => write(df, s"$tmp/$name") }
+      Overlap.all(tables.toSeq.map { case (name, df) => () => write(df, s"$tmp/$name") })
     }
   }
 }

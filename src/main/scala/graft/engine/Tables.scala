@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Source connectors (SURVEY §2.1 S2/S6).
   *
@@ -37,12 +38,25 @@ object Tables {
   // guide §6); this memo is the local stand-in: the schema is inferred
   // from the file ONCE per JVM and then passed explicitly, which skips the
   // inference job but changes NOTHING about what the query computes — the
-  // supplied schema is byte-identical to what inference would return
-  // (fixture files are immutable for the life of a run), every row is
-  // still read from parquet by every invocation, and no query result or
-  // intermediate is ever memoized.
+  // supplied schema is byte-identical to what inference would return,
+  // every row is still read from parquet by every invocation, and no
+  // query result or intermediate is ever memoized. The memo is keyed on
+  // the file's IDENTITY — (path, modification time, length) — so a path
+  // rewritten with another schema is inferred afresh instead of read
+  // through a stale schema; a path that cannot be stat'ed is not memoized
+  // (the plain read reports it as Spark always has).
   private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), StructType)]()
+
+  private def memoSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    scala.util.Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      .toOption.map { st =>
+        val id = (st.getModificationTime, st.getLen)
+        schemaMemo.compute(path, (_, old) =>
+          if (old != null && old._1 == id) old else (id, spark.read.parquet(path).schema))._2
+      }
+  }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Session-level by necessity (the flag is consulted at scan execution,
@@ -61,9 +75,7 @@ object Tables {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
-    val schema = schemaMemo.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
-    spark.read.schema(schema).parquet(path)
+    memoSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
   }
 
   /** `events` with `ts` normalized to a µs TimestampType column regardless

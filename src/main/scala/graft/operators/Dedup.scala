@@ -891,11 +891,11 @@ object Dedup {
         free(labelRdd)
         labelRdd = updatedRdd
         labels = updated.select("id", "cluster_id")
-        done = observedChanged(obs) match {
+        done = observedChanged(obs, updated.sparkSession.sparkContext) match {
           case Some(changed) => changed == 0L
           // the metric rides the async listener bus; if it has not landed
-          // within the grace window, fall back to the exact count() job the
-          // metric replaced — never guess convergence
+          // after the drain, fall back to the exact count() job the metric
+          // replaced — never guess convergence
           case None =>
             updated.filter(col("cluster_id") =!= col("prev")).count() == 0L
         }
@@ -916,20 +916,27 @@ object Dedup {
     }
   }
 
-  // The observed convergence metric lands on the async listener bus some
-  // milliseconds after the checkpoint action returns — poll briefly instead
-  // of Observation.get (which blocks forever if the action was not tracked)
-  // and let the caller fall back to the exact count() when the window
-  // expires. The window is generous next to a per-pass job (~100 ms) and
-  // irrelevant to results: both paths compute the same predicate.
+  // The observed convergence metric lands on the async listener bus after
+  // the checkpoint action returns, usually before the loop gets here: if it
+  // has not landed yet, drain the bus once, then check once
+  // (Observation.get would block forever if the action was not tracked).
+  // A bus that does not drain in Spark's timeout, or a metric that still
+  // has not landed, falls back to the exact count() — never a guess, and
+  // both paths compute the same predicate.
   private def observedChanged(
-      obs: org.apache.spark.sql.Observation): Option[Long] = {
-    val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
-    while (!obs.future.isCompleted && System.nanoTime() < deadline)
-      Thread.sleep(2)
-    if (!obs.future.isCompleted) None
-    else obs.get.get("changed").map(_.asInstanceOf[Long])
+      obs: org.apache.spark.sql.Observation, sc: org.apache.spark.SparkContext): Option[Long] = {
+    if (!obs.future.isCompleted)
+      try org.apache.spark.graftshim.ListenerShim.waitUntilEmpty(sc)
+      catch { case _: java.util.concurrent.TimeoutException => () }
+    val changed =
+      if (!obs.future.isCompleted) None
+      else obs.get.get("changed").map(_.asInstanceOf[Long])
+    if (changed.isEmpty) observeFallbacks.incrementAndGet(): Unit
+    changed
   }
+
+  /** How many convergence checks fell back to the exact count(). */
+  private[graft] val observeFallbacks = new java.util.concurrent.atomic.AtomicLong
 
   // localCheckpoint persists its backing RDD OUTSIDE the CacheManager, so
   // Dataset.unpersist() can't release the blocks and the ContextCleaner

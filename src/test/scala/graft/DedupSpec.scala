@@ -468,6 +468,23 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.keepClusterSurvivors(df, "doc_id", empty).count() == 2)
   }
 
+  test("resolveClusters: the observed convergence metric lands after one bus drain (no count() fallback)") {
+    // every min-label pass reads its changed-row count from an observed
+    // metric; a fallback means the metric was missing after the listener
+    // bus drained and the pass paid the exact count() job instead
+    val before = Dedup.observeFallbacks.get
+    val graphs = Seq(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id"),
+      (0L until 9L).map(i => (i, i + 1)).toDF("a_id", "b_id"),
+      Seq(("b-7f3a", "a-19c2"), ("b-7f3a", "c-04d1"), ("z-9", "y-8")).toDF("a_id", "b_id"),
+      Seq.empty[(Long, Long)].toDF("a_id", "b_id"))
+    val rnd = new scala.util.Random(7)
+    val random = (0 until 3).map(_ =>
+      Seq.fill(45)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)).toDF("a_id", "b_id"))
+    (graphs ++ random).foreach(g => Dedup.resolveClusters(g).collect())
+    assert(Dedup.observeFallbacks.get - before == 0L)
+  }
+
   test("resolveClusters(star): equals min-label and union-find on random graphs; ids stay native") {
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 3) {

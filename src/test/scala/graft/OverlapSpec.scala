@@ -79,15 +79,64 @@ class OverlapSpec extends SparkSpec {
   test("all() forces a lazy sequence before submission (round 22)") {
     // a view's thunks would otherwise be created only as Await walks them,
     // silently serializing the arms; forcing makes them all submit up
-    // front — observed here as overlapping sleeps finishing well under the
-    // serial sum
-    val t0 = System.nanoTime()
+    // front — observed here as a latch that opens only once all four arms
+    // are running at the same time (a serialized arm waits out the
+    // timeout alone and fails)
+    val running = new java.util.concurrent.CountDownLatch(4)
     val rs = Overlap.all(LazyList.from(1).take(4).map(n => () => {
-      Thread.sleep(150); n
+      running.countDown()
+      assert(running.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        s"arm $n never saw its siblings running: the arms ran serially")
+      n
     }))
-    val ms = (System.nanoTime() - t0) / 1e6
     assert(rs == Seq(1, 2, 3, 4))
-    assert(ms < 450, s"arms ran serially (${ms}ms for 4 x 150ms sleeps)")
+  }
+
+  test("every failing arm is reachable from the rethrown exception") {
+    val e = intercept[RuntimeException] {
+      Overlap.all(Seq(
+        () => throw new RuntimeException("first arm failed"),
+        () => 1,
+        () => throw new IllegalStateException("last arm failed")))
+    }
+    assert(e.getMessage == "first arm failed") // declaration order
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("last arm failed"))
+    val e2 = intercept[RuntimeException] {
+      Overlap.par(throw new RuntimeException("pool arm"), throw new RuntimeException("caller arm"))
+    }
+    assert(e2.getMessage == "pool arm" &&
+      e2.getSuppressed.map(_.getMessage).toSeq == Seq("caller arm"))
+  }
+
+  test("a pool thread's job-scoped properties are restored after each arm") {
+    val sc = spark.sparkContext
+    // seven latched arms occupy all six pool threads (and the caller) at
+    // once, so every pool thread runs exactly one arm of each call
+    def onEveryThread[A](body: => A): Seq[A] = {
+      val latch = new java.util.concurrent.CountDownLatch(7)
+      Overlap.all(Seq.fill(7)(() => {
+        latch.countDown()
+        assert(latch.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        body
+      }))
+    }
+    def jobGroup = Option(sc.getLocalProperty("spark.jobGroup.id"))
+    onEveryThread(()) // the pool's threads exist before the probe group is set
+    sc.setJobGroup("overlap-restore-probe", "probe")
+    val during =
+      try onEveryThread(jobGroup)
+      finally sc.clearJobGroup()
+    assert(during.forall(_.contains("overlap-restore-probe")))
+    // a caller WITHOUT an active session re-establishes nothing on the
+    // pool threads, so they must have restored their own properties
+    var after = Seq.empty[Option[String]]
+    val t = new Thread(() => {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      after = onEveryThread(jobGroup)
+    })
+    t.start(); t.join()
+    assert(after.length == 7 && after.forall(_.isEmpty),
+      s"the probe's job group leaked into later arms: $after")
   }
 
   test("pool arms see the caller's active session and job description (round 22)") {

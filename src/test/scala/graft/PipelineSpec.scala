@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.{Pipeline, Qa, Sinks}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import graft.engine.{Ops, Pipeline, Qa, Sinks}
 import graft.engine.Pipeline.{CalcRule, Enrich, QaRules}
 
 /** End-to-end golden test mirroring the reference trace for
@@ -155,5 +157,110 @@ class PipelineSpec extends SparkSpec {
       Sinks.publish(Map("RRR" -> poisoned), dir)
     }
     assert(spark.read.parquet(s"$dir/RRR").count() == 3) // old version intact
+  }
+
+  test("runTable: classified keep/rejects/report equal the sequential runRules reference") {
+    // generated tags mix NULL, blank (-> NULL), matched, unmatched and
+    // duplicated values, so some rows are both duplicated and unmatched
+    // (the dup reason must win) and NULL tags are both duplicated and
+    // unmatched
+    val tags = Gen.listOfN(25, Gen.oneOf(
+      Some("A"), Some("B"), Some("C"), Some("ZZ"), Some("YY"), Some(""), None))
+    val dim = Seq("A", "B", "X").toDF("CODE")
+    val tmpl = Seq.empty[(String, Int)].toDF("TRRR_TAG", "ROW_ID")
+    (1 to 8).foreach { i =>
+      val rows = tags.pureApply(Gen.Parameters.default, Seed(i.toLong))
+      val df = rows.zipWithIndex.toDF("TRRR_TAG", "ROW_ID")
+      val r = Pipeline.runTable(
+        name = s"gen$i", download = df, template = tmpl,
+        calcRules = Nil, blankToNullFields = Seq("TRRR_TAG"), enrich = None,
+        qa = Some(QaRules(Seq("TRRR_TAG"), "dup", dim, "TRRR_TAG", "CODE", "ref")))
+      val blanked = Ops.blankToNull(Ops.appendNoTest(tmpl, df), "TRRR_TAG")
+      val ref = Qa.runRules(blanked, blanked.limit(0).withColumn(Qa.FlagCol, lit("")), Seq(
+        d => Qa.dupSplit(d, Seq("TRRR_TAG"), "dup"),
+        d => Qa.refSplit(d, dim, "TRRR_TAG", "CODE", "ref")))
+      def ids(d: org.apache.spark.sql.DataFrame) = d.select("ROW_ID").as[Int].collect().toSet
+      def flags(d: org.apache.spark.sql.DataFrame) =
+        d.select("ROW_ID", Qa.FlagCol).as[(Int, String)].collect().toMap
+      assert(ids(r.keep) == ids(ref.keep), s"seed $i keep")
+      assert(flags(r.rejects) == flags(ref.rejects), s"seed $i rejects")
+      assert(r.keep.columns.toSeq == ref.keep.columns.toSeq)
+      assert(r.rejects.columns.toSeq == ref.rejects.columns.toSeq)
+      val refReasons = flags(ref.rejects).values.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+      assert(r.report == Pipeline.RunReport(s"gen$i", rows.size,
+        ids(ref.keep).size, refReasons, r.report.layout), s"seed $i report")
+      r.unpersist()
+    }
+  }
+
+  test("runTable: one action per table — a single collect yields counts, reasons and layout") {
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = actions.add(funcName): Unit
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = actions.add(s"failed $funcName"): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftshim.ListenerShim.waitUntilEmpty(sc)
+    spark.listenerManager.register(listener)
+    val r =
+      try { val r = run(); org.apache.spark.graftshim.ListenerShim.waitUntilEmpty(sc); r }
+      finally spark.listenerManager.unregister(listener)
+    assert(actions.toArray.toSeq == Seq("collect"))
+    r.unpersist()
+  }
+
+  test("runAndPublish: the source is evaluated once across the count and every published write") {
+    val acc = spark.sparkContext.longAccumulator("source-evals-publish")
+    val tick = udf { (s: String) => acc.add(1L); s }.asNondeterministic()
+    val dir = java.nio.file.Files.createTempDirectory("graft-staging3").toString + "/staged"
+    val r = Pipeline.runTable(
+      name = "tick",
+      download = download.withColumn("TRRR_TAG", tick(col("TRRR_TAG"))),
+      template = template,
+      calcRules = Nil,
+      blankToNullFields = Seq("TRRR_TAG"),
+      enrich = Some(Enrich(pod, "TRRR_TAG", "PNTS_CODE", Seq(col("OID")),
+        Map("DESCRIPTION" -> "PNTS_DESCR"))),
+      qa = Some(QaRules(
+        Seq("TRRR_TAG"), "dup", pod, "TRRR_TAG", "PNTS_CODE", "ref")))
+    val plain = Pipeline.runTable(
+      name = "plain", download = download, template = template,
+      calcRules = Nil, blankToNullFields = Nil, enrich = None, qa = None)
+    Pipeline.runAndPublish(Seq("tick" -> r, "plain" -> plain), dir)
+    assert(acc.value == 7) // count + keep write + merged-rejects write: one evaluation
+    assert(spark.read.parquet(s"$dir/tick").count() == 3)
+    assert(spark.read.parquet(s"$dir/plain").count() == 7)
+    assert(spark.read.parquet(s"$dir/rejects").count() == 4)
+  }
+
+  test("publish: one poisoned table among several leaves the previous staging, no .tmp, no running write") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-staging4").toString + "/staged"
+    Pipeline.runAndPublish(Seq("RRR" -> run()), dir)
+    val sc = spark.sparkContext
+    val slowRows = sc.longAccumulator("slow-rows")
+    val slow = udf { (x: Int) => Thread.sleep(100); slowRows.add(1L); x }
+    val boom = udf { (s: String) =>
+      if (s != null) throw new RuntimeException("decode failure"); s
+    }
+    val group = "publish-poison-probe"
+    sc.setJobGroup(group, "poisoned publish")
+    try intercept[Exception] {
+      Sinks.publish(Map(
+        "RRR" -> download.withColumn("TRRR_TAG", boom(col("TRRR_TAG"))),
+        "SLOW" -> (1 to 8).toDF("x").repartition(2).withColumn("x", slow(col("x"))),
+        "OK" -> download), dir)
+    } finally sc.clearJobGroup()
+    // the failure surfaced only after the slow sibling wrote every row
+    assert(slowRows.value == 8)
+    org.apache.spark.graftshim.ListenerShim.waitUntilEmpty(sc)
+    val running = sc.statusTracker.getJobIdsForGroup(group).toSeq
+      .flatMap(sc.statusTracker.getJobInfo)
+      .filter(_.status == org.apache.spark.JobExecutionStatus.RUNNING)
+    assert(running.isEmpty, s"jobs still running after publish failed: ${running.map(_.jobId)}")
+    assert(!new java.io.File(dir + ".tmp").exists(), "staging debris left behind")
+    assert(new java.io.File(dir).list().toSet == Set("RRR", "rejects"))
+    assert(spark.read.parquet(s"$dir/RRR").count() == 3) // previous version intact
   }
 }

@@ -23,6 +23,18 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
+  test("Tables.load schema memo is keyed on file identity: a rewritten path yields its new schema") {
+    import sqlContext.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo").toString
+    Seq(1, 2).toDF("a").write.parquet(s"$dir/t.parquet")
+    val first = graft.engine.Tables.load(spark, dir, "t")
+    assert(first.columns.toSeq == Seq("a"))
+    Seq(("x", 1L)).toDF("b", "c").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val second = graft.engine.Tables.load(spark, dir, "t")
+    assert(second.columns.toSeq == Seq("b", "c"), "stale memoized schema served")
+    assert(second.collect().map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("x", 1L)))
+  }
+
   test("loadValidated: a table read under the wrong name fails fast with a column-level report") {
     val e = intercept[Sources.SchemaMismatch] {
       // read orders parquet while claiming it is lineitem
