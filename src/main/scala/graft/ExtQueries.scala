@@ -174,7 +174,7 @@ object ExtQueries {
     * span count, longest span, and exact union char mass — all BIGINTs. */
   val substringSpansQ: Q = (s, d) =>
     Dedup.substringSpans(t(s, d, "documents"), "doc_id", "text",
-      k = 16, w = 8, minShared = 3, maxFingerprintDf = 20)
+      k = 16, w = 8, minShared = 3, maxFingerprintDf = 20).df
       .orderBy("a_id", "b_id")
 
   /** minShared threshold sweep for the winnowing family (the dedup_sweep
@@ -202,7 +202,7 @@ object ExtQueries {
     * produce the same total mass but opposite decisions). */
   val spansHist: Q = (s, d) =>
     Dedup.substringSpanLengths(t(s, d, "documents"), "doc_id", "text",
-      k = 16, w = 8, minShared = 3, maxFingerprintDf = 20)
+      k = 16, w = 8, minShared = 3, maxFingerprintDf = 20).df
       .groupBy("span_chars").agg(count(lit(1)).as("n_spans"))
       .orderBy("span_chars")
 
@@ -212,7 +212,7 @@ object ExtQueries {
     * per-character reassembly. */
   val dedupSubstringStrip: Q = (s, d) =>
     Dedup.stripCopiedSpans(t(s, d, "documents"), "doc_id", "text",
-      k = 16, w = 8, minShared = 3, maxFingerprintDf = 20)
+      k = 16, w = 8, minShared = 3, maxFingerprintDf = 20).df
       .select(col("doc_id").as("id"), col("text"), col("n_removed"))
       .orderBy("id")
 
@@ -376,7 +376,7 @@ object ExtQueries {
       Dedup.minhashCandidates(docs, "doc_id", "text",
         numHashes = 4, bands = 2, shingleN = 3, family = Dedup.Md5Family),
       Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        shingleN = 3, minJaccard = 0.5).select("a_id", "b_id"))
+        shingleN = 3, minJaccard = 0.5).select("a_id", "b_id")).df
   }
 
   /** The learned-tokenizer table: 8 BPE merges induced from the corpus's
@@ -514,7 +514,7 @@ object ExtQueries {
   /** The winnowing verify stage: exact k-gram overlap for every
     * fingerprint-candidate pair (LSH two-phase shape). */
   val substringExtentQ: Q = (s, d) =>
-    Dedup.substringExtent(t(s, d, "documents"), "doc_id", "text")
+    Dedup.substringExtent(t(s, d, "documents"), "doc_id", "text").df
       .orderBy("a_id", "b_id")
 
   /** Per-document shingle novelty vs everything earlier in id order —
@@ -842,7 +842,7 @@ object ExtQueries {
   val dedupResolve: Q = (s, d) => {
     val pairs = Dedup.ngramJaccardPairs(t(s, d, "documents"), "doc_id", "text",
       shingleN = 3, minJaccard = 0.5)
-    Dedup.resolveClusters(pairs)
+    Dedup.resolveClusters(pairs).df
       .select(col("id").as("doc_id"), col("cluster_id"))
       .orderBy("doc_id")
   }
@@ -858,7 +858,7 @@ object ExtQueries {
     val docs = t(s, d, "documents")
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
       shingleN = 3, minJaccard = 0.5)
-    val labels = Dedup.resolveClusters(pairs)
+    val labels = Dedup.resolveClusters(pairs).df
     val hist = labels.groupBy("cluster_id")
       .agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
@@ -2275,7 +2275,7 @@ object ExtQueries {
     val pairs = Dedup.substringDupPairs(survivors, "doc_id", "text",
       k = 16, w = 8, minShared = 3, maxFingerprintDf = 20)
       .select("a_id", "b_id").localCheckpoint()
-    Dedup.stripCopiedSpansFromPairs(survivors, pairs, "doc_id", "text", k = 16)
+    Dedup.stripCopiedSpansFromPairs(survivors, pairs, "doc_id", "text", k = 16).df
       .select(col("doc_id"), col("lang"), col("n_removed"),
         length(col("text")).cast("long").as("n_chars"))
       .orderBy("doc_id")
@@ -2670,7 +2670,7 @@ object ExtQueries {
   /** Pairwise 3-gram Jaccard overlap between document sources — the
     * corpus-diversity / redundancy audit over the 20-source fixture. */
   val sourceOverlapQ: Q = (s, d) =>
-    TextAnalysis.sourceOverlap(t(s, d, "documents"), "source", "text")
+    TextAnalysis.sourceOverlap(t(s, d, "documents"), "source", "text").df
       .orderBy("a", "b")
 
   /** Tokenizer fertility (BPE-ish subwords per whitespace word) by

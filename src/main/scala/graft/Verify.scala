@@ -8,8 +8,9 @@ object Verify {
     * the per-query error map (empty = all wrote cleanly).
     *
     * Queries run `par`-wide in CHUNKS with a storage sweep at each chunk
-    * barrier: registered queries use the unmanaged operator variants, whose
-    * internal `localCheckpoint` RDDs (resolveClusters, substringDupPairs,
+    * barrier: registered queries read the operators' `.df` and never close
+    * the [[graft.engine.Materialized]] handle, so their internal
+    * `localCheckpoint` RDDs (resolveClusters, the substring family,
     * pipeline staging) otherwise accumulate across the ~200-query dump
     * until the JVM GCs the RDD handles — latent executor-storage growth at
     * larger SFs (the Bench between-sample sweep precedent). The sweep MUST
@@ -26,7 +27,7 @@ object Verify {
     * hit an unrecoverable failure on its next action). Diffing the global
     * registry is safe HERE because the diff runs strictly at the barrier
     * with nothing in flight; mid-query it would race lazy cache
-    * registration (see Dedup.checkpointTracked's capture-from-plan
+    * registration (see Materialized.checkpoint's capture-from-plan
     * rationale). Queries launched DURING the dump by someone else are
     * still outside the contract — the barrier cannot tell their new RDDs
     * from the chunk's. */

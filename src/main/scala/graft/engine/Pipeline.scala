@@ -50,9 +50,6 @@ object Pipeline {
     /** Release the classified frame cached by [[runTable]] once
       * keep/rejects have been written to their sinks. */
     def unpersist(): Unit = staged.foreach(_.unpersist())
-    /** Whether this result is holding a persisted frame that [[unpersist]]
-      * must release. */
-    def isCached: Boolean = staged.nonEmpty
   }
 
   /** Run the full §3.3 trace for one table. `template` fixes the output
@@ -66,13 +63,12 @@ object Pipeline {
     * the layout of the staged frame the sinks read.
     *
     * CACHE CONTRACT: the returned [[TableResult]] holds the classified
-    * frame persisted at `cache` (default MEMORY_AND_DISK) because the count
-    * and both sink writes read it — with it, the writes neither shuffle nor
-    * broadcast. Callers that use `runTable` directly MUST call
-    * `TableResult.unpersist()` after writing keep/rejects, or route through
-    * [[runAndPublish]], which releases it. Pass
-    * `cache = StorageLevel.NONE` to opt out (each consumer then re-runs the
-    * upstream plan, QA included). */
+    * frame persisted at MEMORY_AND_DISK because the count and both sink
+    * writes read it — with it, the writes neither shuffle nor broadcast.
+    * Callers that use `runTable` directly MUST call
+    * `TableResult.unpersist()` after writing keep/rejects (or after
+    * reading the report alone), or route through [[runAndPublish]], which
+    * releases it. */
   def runTable(
       name: String,
       download: DataFrame,
@@ -80,9 +76,7 @@ object Pipeline {
       calcRules: Seq[CalcRule],
       blankToNullFields: Seq[String],
       enrich: Option[Enrich],
-      qa: Option[QaRules],
-      cache: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): TableResult = {
+      qa: Option[QaRules]): TableResult = {
 
     // R1: land the download in the template schema
     val appended = Ops.appendNoTest(template, download)
@@ -99,11 +93,10 @@ object Pipeline {
     // Q1+Q2: the classified frame, persisted (see the cache contract) so
     // the dup window and both broadcasts run once, not once per consumer.
     // Single evaluation is pinned by PipelineSpec accumulator tests.
-    val cached = cache != org.apache.spark.storage.StorageLevel.NONE
-    val classified0 = Qa.classify(enriched, qa.toSeq.flatMap(q => Seq[DataFrame => DataFrame](
+    val classified = Qa.classify(enriched, qa.toSeq.flatMap(q => Seq[DataFrame => DataFrame](
       Qa.dupFlag(_, q.dupKeys, q.dupReason),
       Qa.refFlag(_, q.refDim, q.refLeftKey, q.refRightKey, q.refReason))))
-    val classified = if (cached) classified0.persist(cache) else classified0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // A2-style forced count — the engine's only action besides the sinks.
     // append/calc/blank/enrich/QA are all row-preserving (first-match and
     // the distinct-key ref join never multiply), so one aggregate over the
@@ -127,8 +120,7 @@ object Pipeline {
     val report = RunReport(name, inputRows, inputRows - rejectCounts.values.sum,
       rejectCounts, layout)
     val split = Qa.split(classified)
-    TableResult(split.keep, split.rejects, report,
-      staged = if (cached) Some(classified) else None)
+    TableResult(split.keep, split.rejects, report, staged = Some(classified))
   }
 
   /** Run many tables and publish keeps + one merged reject table atomically

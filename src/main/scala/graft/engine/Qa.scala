@@ -40,20 +40,18 @@ object Qa {
 
   /** Q2 flagging rule — referential integrity (:258-269): rows whose key
     * has no match in the dimension are rejected. A left join against the
-    * dimension's DISTINCT keys (pruned to the key column, so the build side
-    * stays small and broadcast-able even when the dim table is wide) with a
-    * hit marker never multiplies a row. NULL keys match nothing (`=`
+    * dimension's DISTINCT keys, broadcast (pruned to the key column, so the
+    * build side stays small even when the dim table is wide), with a hit
+    * marker never multiplies a row. NULL keys match nothing (`=`
     * semantics, matching ArcGIS and DuckDB — SURVEY §7.3). Row-local. */
   def refFlag(
       df: DataFrame,
       dim: DataFrame,
       leftKey: String,
       rightKey: String,
-      reason: String,
-      broadcastDim: Boolean = true): DataFrame = {
-    val keys0 = dim.select(col(rightKey).as("__ref_key")).distinct()
-      .withColumn("__ref_hit", lit(true))
-    val keys = if (broadcastDim) broadcast(keys0) else keys0
+      reason: String): DataFrame = {
+    val keys = broadcast(dim.select(col(rightKey).as("__ref_key")).distinct()
+      .withColumn("__ref_hit", lit(true)))
     val joined = df.join(keys, df(leftKey) === keys("__ref_key"), "left")
     flagWhere(joined, col("__ref_hit").isNull, reason).drop("__ref_key", "__ref_hit")
   }
@@ -91,9 +89,8 @@ object Qa {
       dim: DataFrame,
       leftKey: String,
       rightKey: String,
-      reason: String,
-      broadcastDim: Boolean = true): QaSplit =
-    split(classify(df, Seq(refFlag(_, dim, leftKey, rightKey, reason, broadcastDim))))
+      reason: String): QaSplit =
+    split(classify(df, Seq(refFlag(_, dim, leftKey, rightKey, reason))))
 
   /** Q3 — reject routing (:254-256,264-269): accumulate a reject batch into
     * the running reject table. The reject table's schema is the base schema +

@@ -577,29 +577,18 @@ object Curation {
     * query-many / per-micro-batch path, sharing the strip AND the kept
     * gate with the one-shot operator so the streaming twin
     * ([[graft.streaming.DocStreams.decontamArrivalsSink]]) cannot drift
-    * from batch semantics. */
+    * from batch semantics. Returned as a [[graft.engine.Materialized]]
+    * over the strip's internal partner-pair checkpoint: per-micro-batch
+    * callers (the decontamination streaming sink) close it after
+    * materializing; one-shot callers may just read `.df`. */
   def decontaminateIndexed(
       corpus: DataFrame, benchFpsCapped: DataFrame, benchGrams: DataFrame,
       idCol: String, textCol: String,
       k: Int = 16, w: Int = 8, minShared: Int = 3,
-      minCharsAfter: Int = 200): DataFrame =
-    decontaminateIndexedManaged(corpus, benchFpsCapped, benchGrams, idCol,
-      textCol, k, w, minShared, minCharsAfter)._1
-
-  /** [[decontaminateIndexed]] plus the release handle for the strip's
-    * internal partner-pair checkpoint
-    * ([[graft.operators.Dedup.stripBenchmarkSpansIndexedManaged]]):
-    * per-micro-batch callers (the decontamination streaming sink) release
-    * after materializing; one-shot callers may discard the handle. */
-  def decontaminateIndexedManaged(
-      corpus: DataFrame, benchFpsCapped: DataFrame, benchGrams: DataFrame,
-      idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, minShared: Int = 3,
-      minCharsAfter: Int = 200): (DataFrame, () => Unit) = {
-    val (stripped, release) = Dedup.stripBenchmarkSpansIndexedManaged(
-      corpus, benchFpsCapped, benchGrams, idCol, textCol, k, w, minShared)
-    (withKeptGate(stripped, textCol, minCharsAfter), release)
-  }
+      minCharsAfter: Int = 200): graft.engine.Materialized =
+    Dedup.stripBenchmarkSpansIndexed(corpus, benchFpsCapped, benchGrams,
+      idCol, textCol, k, w, minShared)
+      .map(withKeptGate(_, textCol, minCharsAfter))
 
   /** [[decontaminate]] against N benchmarks in ONE corpus pass with
     * per-benchmark span attribution

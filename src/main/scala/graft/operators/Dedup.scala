@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Materialized
 import graft.functions.{TextFns, VectorFns}
 
 /** Deduplication family for large-scale training-data pipelines: exact,
@@ -792,68 +793,48 @@ object Dedup {
     * ContextCleaner reclaims the blocks once the caller drops the frame;
     * with `reliableCheckpoints` the files are durable and each call leaves
     * ONE converged snapshot in the checkpoint dir — long-lived services
-    * should use [[resolveClustersManaged]] and invoke the cleanup handle
-    * after materializing the labels. */
+    * should close the returned handle after materializing the labels.
+    *
+    * Returns the labels (id, cluster_id) as a [[graft.engine.Materialized]]
+    * over the converged pass's checkpoint: `close()` unpersists the
+    * backing blocks and deletes the reliable checkpoint's files.
+    * Idempotent and best-effort, like the per-pass reclamation. */
   def resolveClusters(
       pairs: DataFrame,
       aCol: String = "a_id",
       bCol: String = "b_id",
       maxIters: Int = 50,
       algorithm: String = "minlabel",
-      reliableCheckpoints: Boolean = false): DataFrame =
-    resolveClustersManaged(pairs, aCol, bCol, maxIters, algorithm, reliableCheckpoints)._1
-
-  /** [[resolveClusters]] plus an explicit release of the result's backing
-    * checkpoint: returns (labels, cleanup). Call `cleanup()` ONLY after the
-    * labels have been fully materialized (written to a sink / collected /
-    * staged via a further checkpoint) — it unpersists the backing blocks
-    * and deletes the reliable checkpoint's files, after which any further
-    * action on `labels` fails (truncated lineage cannot recompute).
-    * Idempotent and best-effort, like the per-pass reclamation. */
-  def resolveClustersManaged(
-      pairs: DataFrame,
-      aCol: String = "a_id",
-      bCol: String = "b_id",
-      maxIters: Int = 50,
-      algorithm: String = "minlabel",
-      reliableCheckpoints: Boolean = false): (DataFrame, () => Unit) = {
-    val (labels, rdd) = algorithm match {
+      reliableCheckpoints: Boolean = false): Materialized =
+    algorithm match {
       case "minlabel" => resolveMinLabel(pairs, aCol, bCol, maxIters, reliableCheckpoints)
-      case "star" =>
-        val (l, _, r) = resolveStar(pairs, aCol, bCol, maxIters, reliableCheckpoints)
-        (l, r)
+      case "star" => resolveStar(pairs, aCol, bCol, maxIters, reliableCheckpoints)._1
       case other => throw new IllegalArgumentException(
         s"unknown algorithm '$other' (expected 'minlabel' or 'star')")
     }
-    (labels, () => free(rdd))
-  }
 
   private def resolveMinLabel(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
       maxIters: Int,
-      reliable: Boolean = false): (DataFrame, Option[org.apache.spark.rdd.RDD[_]]) = {
-    def checkpointTracked(df: DataFrame) = Dedup.checkpointTracked(df, reliable)
+      reliable: Boolean = false): Materialized = {
+    def checkpoint(df: DataFrame) = Materialized.checkpoint(df, reliable)
     // Materialize the (possibly expensive) pair pipeline ONCE before fanning
     // it out: the bidirectional edge union references it twice, and the
     // iteration loop re-reads it every pass — without this barrier the
     // whole upstream (e.g. a shingle self-join) would execute 2+ times
     // inside the first job alone (measured 2x wall clock on pipeline_docs).
-    val (half, halfRdd) = checkpointTracked(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
-    val edges = half.union(half.select(col("dst").as("src"), col("src").as("dst"))).persist()
-    var labelRdd: Option[org.apache.spark.rdd.RDD[_]] = None
+    val half = checkpoint(pairs.select(col(aCol).as("src"), col(bCol).as("dst")))
+    val edges = half.df.union(half.df.select(col("dst").as("src"), col("src").as("dst")))
+      .persist()
+    var labels: Materialized = null
     var done = false
     // try/finally so a failing pass (or non-convergence) cannot leak the
     // edges cache, the half checkpoint, or the in-flight labels checkpoint.
     try {
-      var labels = {
-        val (l, r) = checkpointTracked(
-          edges.select(col("src").as("id")).distinct()
-            .select(col("id"), col("id").as("cluster_id")))
-        labelRdd = r; l
-      }
+      labels = checkpoint(edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("cluster_id")))
       var it = 0
       while (!done && it < maxIters) {
         // one pass = one equi-join + one partial-aggregated min: each node's
@@ -862,7 +843,7 @@ object Dedup {
         // second join is needed to merge it back — and keeping it visible as
         // max(own label) gives the previous label for the convergence check.
         val nbrContrib = edges
-          .join(labels.select(col("id").as("dst"), col("cluster_id").as("nlbl")), "dst")
+          .join(labels.df.select(col("id").as("dst"), col("cluster_id").as("nlbl")), "dst")
           .select(col("src"), col("nlbl"), lit(false).as("own"))
         // the convergence count rides the checkpoint job as an OBSERVED
         // metric (CollectMetrics) instead of a second count() job per pass
@@ -872,8 +853,8 @@ object Dedup {
         // two. Results are untouched: observe() is a pass-through node and
         // the changed-row predicate is the old count()'s filter verbatim.
         val obs = new org.apache.spark.sql.Observation()
-        val (updated, updatedRdd) = checkpointTracked(nbrContrib
-          .union(labels.select(col("id").as("src"), col("cluster_id").as("nlbl"),
+        val updated = checkpoint(nbrContrib
+          .union(labels.df.select(col("id").as("src"), col("cluster_id").as("nlbl"),
             lit(true).as("own")))
           .groupBy("src").agg(
             min("nlbl").as("cluster_id"),
@@ -888,16 +869,15 @@ object Dedup {
         // pass's checkpoint BEFORE the convergence count, so a throwing
         // action frees the new checkpoint in the finally block instead of
         // leaking it.
-        free(labelRdd)
-        labelRdd = updatedRdd
-        labels = updated.select("id", "cluster_id")
-        done = observedChanged(obs, updated.sparkSession.sparkContext) match {
+        labels.close()
+        labels = updated.map(_.select("id", "cluster_id"))
+        done = observedChanged(obs, updated.df.sparkSession.sparkContext) match {
           case Some(changed) => changed == 0L
           // the metric rides the async listener bus; if it has not landed
           // after the drain, fall back to the exact count() job the metric
           // replaced — never guess convergence
           case None =>
-            updated.filter(col("cluster_id") =!= col("prev")).count() == 0L
+            updated.df.filter(col("cluster_id") =!= col("prev")).count() == 0L
         }
         it += 1
       }
@@ -908,11 +888,12 @@ object Dedup {
       if (!done) throw new IllegalStateException(
         s"resolveClusters did not converge in $maxIters passes — component " +
           "diameter exceeds maxIters; raise it (passes are O(diameter))")
-      (labels, labelRdd)
+      labels
     } finally {
       edges.unpersist(blocking = false)
-      free(halfRdd) // the returned labels reference only their OWN checkpoint
-      if (!done) free(labelRdd) // failure exit — the result is never returned
+      half.close() // the returned labels reference only their OWN checkpoint
+      // failure exit — the result is never returned
+      if (!done && labels != null) labels.close()
     }
   }
 
@@ -938,50 +919,6 @@ object Dedup {
   /** How many convergence checks fell back to the exact count(). */
   private[graft] val observeFallbacks = new java.util.concurrent.atomic.AtomicLong
 
-  // localCheckpoint persists its backing RDD OUTSIDE the CacheManager, so
-  // Dataset.unpersist() can't release the blocks and the ContextCleaner
-  // only reclaims them at some future GC. An iterative loop that leaks one
-  // checkpoint per pass degrades every LATER query in the session (storage
-  // pool pressure) — so each pass frees its predecessor explicitly. The
-  // checkpointed RDD is captured PRECISELY from the returned Dataset's own
-  // analyzed plan (a LogicalRDD wrapping exactly the RDD localCheckpoint
-  // persisted) — never by diffing global sc.getPersistentRDDs, which races
-  // with lazy cache registration in this thread (e.g. resolveMinLabel's
-  // edges persist) and with concurrent jobs, and unpersisting a FOREIGN
-  // local checkpoint is fatal (lineage is truncated; later actions on it
-  // cannot recompute).
-  private def checkpointTracked(
-      df: DataFrame, reliable: Boolean): (DataFrame, Option[org.apache.spark.rdd.RDD[_]]) = {
-    if (reliable) require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliableCheckpoints = true requires spark.sparkContext.setCheckpointDir " +
-        "(an HDFS/object-store path on a real cluster)")
-    val cp = if (reliable) df.checkpoint() else df.localCheckpoint()
-    (cp, cp.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    })
-  }
-  private def free(rdd: Option[org.apache.spark.rdd.RDD[_]]): Unit =
-    rdd.foreach { r =>
-      r.unpersist(blocking = false)
-      // reliable checkpoints additionally leave files in the checkpoint dir;
-      // Spark only deletes them via the ContextCleaner (and only with
-      // cleanCheckpoints=true, at some future GC) — an iterative loop must
-      // reclaim each superseded pass eagerly or a long resolve accumulates
-      // one full edge/label snapshot per pass in durable storage.
-      // Best-effort: a failed delete costs disk, never correctness.
-      r.getCheckpointFile.foreach { p =>
-        try {
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(r.context.hadoopConfiguration).delete(path, true)
-        } catch {
-          // genuinely best-effort: Path/getFileSystem can throw non-IO
-          // exceptions (malformed URI, unbound scheme) and a cleanup
-          // failure must never abort the resolve mid-iteration
-          case scala.util.control.NonFatal(_) => ()
-        }
-      }
-    }
-
   /** Large-star/small-star connected components (Kiveris et al., SOCC'14).
     *
     * One round = large-star then small-star, each a groupBy-min plus a
@@ -998,31 +935,29 @@ object Dedup {
     * match AND new∖old = ∅ (both sides distinct), one count + one
     * anti-join probe per round on the checkpointed edges.
     *
-    * Returns (labels, rounds, labels' backing checkpoint RDD); rounds is
-    * exposed for DedupSpec's O(log n) convergence pin, the RDD for
-    * [[resolveClustersManaged]]'s cleanup handle. */
+    * Returns (labels, rounds); rounds is exposed for DedupSpec's O(log n)
+    * convergence pin. */
   private[graft] def resolveStar(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
       maxIters: Int,
-      reliable: Boolean = false): (DataFrame, Int, Option[org.apache.spark.rdd.RDD[_]]) = {
-    def checkpointTracked(df: DataFrame) = Dedup.checkpointTracked(df, reliable)
+      reliable: Boolean = false): (Materialized, Int) = {
+    def checkpoint(df: DataFrame) = Materialized.checkpoint(df, reliable)
     // every id occurring in any pair gets a label, incl. self-pair ids
     // whose canonical edges vanish below
-    val (nodes, nodesRdd) = checkpointTracked(
-      pairs.select(col(aCol).as("id"))
-        .union(pairs.select(col(bCol).as("id"))).distinct())
-    var (edges, edgesRdd) = checkpointTracked(
+    val nodes = checkpoint(pairs.select(col(aCol).as("id"))
+      .union(pairs.select(col(bCol).as("id"))).distinct())
+    var edges = checkpoint(
       pairs.select(greatest(col(aCol), col(bCol)).as("u"),
           least(col(aCol), col(bCol)).as("v"))
         .filter(col("u") =!= col("v")).distinct())
-    var prevCount = edges.count()
+    var prevCount = edges.df.count()
     var it = 0
     var done = false
     try {
       while (!done && it < maxIters) {
-        val bidir = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+        val bidir = edges.df.union(edges.df.select(col("v").as("u"), col("u").as("v")))
         val lMin = bidir.groupBy("u").agg(min("v").as("mn"))
           .select(col("u"), least(col("mn"), col("u")).as("m"))
         // emit (v, m) for v > u only: exactly one row per undirected edge,
@@ -1035,13 +970,12 @@ object Dedup {
           .select(col("v").as("u"), col("m").as("v")) // nbr -> group min
           .union(sMin.select(col("u"), col("m").as("v"))) // u -> group min
           .filter(col("u") =!= col("v"))
-        val (next, nextRdd) = checkpointTracked(small.distinct())
-        val nextCount = next.count()
+        val next = checkpoint(small.distinct())
+        val nextCount = next.df.count()
         done = nextCount == prevCount &&
-          next.join(edges, Seq("u", "v"), "left_anti").limit(1).count() == 0L
-        free(edgesRdd)
+          next.df.join(edges.df, Seq("u", "v"), "left_anti").limit(1).count() == 0L
+        edges.close()
         edges = next
-        edgesRdd = nextRdd
         prevCount = nextCount
         it += 1
       }
@@ -1051,15 +985,15 @@ object Dedup {
           "large components")
       // at the fixed point each component is a star (u -> root=min); roots
       // and self-pair-only ids label themselves
-      val (labels, labelsRdd) = checkpointTracked(
-        nodes.join(edges.select(col("u").as("id"), col("v").as("cl")), Seq("id"), "left")
+      val labels = checkpoint(
+        nodes.df.join(edges.df.select(col("u").as("id"), col("v").as("cl")), Seq("id"), "left")
           .select(col("id"), coalesce(col("cl"), col("id")).as("cluster_id")))
       // the returned labels reference only their OWN checkpoint; the final
       // edges/nodes checkpoints are freed below in both exit paths
-      (labels, it, labelsRdd)
+      (labels, it)
     } finally {
-      free(nodesRdd)
-      free(edgesRdd)
+      nodes.close()
+      edges.close()
     }
   }
 
@@ -1243,7 +1177,7 @@ object Dedup {
   /** Pairs → survivors in one call: drop every row whose id belongs to a
     * duplicate cluster but is not that cluster's canonical (minimum) id. */
   def keepClusterSurvivors(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val losers = resolveClusters(pairs)
+    val losers = resolveClusters(pairs).df
       .filter(col("id") =!= col("cluster_id"))
       .select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
@@ -1265,7 +1199,7 @@ object Dedup {
     * the loser ids. Rows outside every pair pass through untouched. */
   def keepClusterSurvivorsBy(
       df: DataFrame, idCol: String, pairs: DataFrame, scoreCol: String): DataFrame = {
-    val labels = resolveClusters(pairs) // (id, cluster_id), paired nodes only
+    val labels = resolveClusters(pairs).df // (id, cluster_id), paired nodes only
     val scored = labels.join(
       df.select(col(idCol).as("id"), col(scoreCol).as("__score")), Seq("id"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1382,17 +1316,8 @@ object Dedup {
     * maxShingleDf precedent). Dropped hashes can only LOWER n_shared, so
     * the cap trades recall on ubiquitous spans (which exact dedup handles
     * anyway) for a bounded join. All outputs are exact integer counts —
-    * no FP, no rounding gate, full hash-match oracle. */
-  def substringDupPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, minShared: Int = 3,
-      maxFingerprintDf: Int = 20): DataFrame =
-    substringDupPairsManaged(df, idCol, textCol, k, w, minShared,
-      maxFingerprintDf)._1
-
-  /** [[substringDupPairs]] plus a cleanup handle (kept for contract
-    * compatibility with the Managed family; this pipeline no longer
-    * checkpoints, so the handle is a no-op).
+    * no FP, no rounding gate, full hash-match oracle. The result is a
+    * plain lazy frame: this pipeline materializes nothing internally.
     *
     * Pair-stage shape: ONE shuffle of the fingerprint table into the
     * capped-list aggregate ([[graft.plans.CappedSortedList]]: df count
@@ -1415,10 +1340,10 @@ object Dedup {
     * it matches the oracle even for a caller feeding duplicate null ids
     * (see [[graft.plans.CappedSortedList]]). Non-null ids must be unique
     * per document — the [[winnowFingerprints]] corpus contract. */
-  def substringDupPairsManaged(
+  def substringDupPairs(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, w: Int = 8, minShared: Int = 3,
-      maxFingerprintDf: Int = 20): (DataFrame, () => Unit) = {
+      maxFingerprintDf: Int = 20): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(maxFingerprintDf >= 2,
       s"maxFingerprintDf must be >= 2 (pairs need two docs), got $maxFingerprintDf")
@@ -1434,7 +1359,7 @@ object Dedup {
       .agg(graft.plans.CappedSortedList.cappedSortedList(
         col("id"), maxFingerprintDf).as("__ids"))
       .filter(col("__ids").isNotNull && size(col("__ids")) >= 2)
-    val out = ids
+    ids
       .select(explode(flatten(transform(
         sequence(lit(0), size(col("__ids")) - 2),
         i => transform(
@@ -1444,7 +1369,6 @@ object Dedup {
       .select(col("__p.a_id"), col("__p.b_id"))
       .groupBy("a_id", "b_id").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    (out, () => ())
   }
 
   /** Detection-floor sweep for the winnowing k/w knob — the RECALL side
@@ -1465,7 +1389,7 @@ object Dedup {
     * n_docs_paired) — exact integers, full hash-match oracle.
     *
     * Scale shape: one independent fingerprint pass per swept `w`, each
-    * the [[substringDupPairsManaged]] single-shuffle shape; the per-w
+    * the [[substringDupPairs]] single-shuffle shape; the per-w
     * rollup aggregates the (small) pair frame, checkpointed once because
     * the pair count and the distinct-doc count are two consumers. A
     * shared-pass variant IS possible — window minima NEST (the minimum
@@ -1512,16 +1436,10 @@ object Dedup {
     * Scale shape: the full gram sets join ONLY for candidate pairs — the
     * candidate frame fans out by |grams(a)| (bounded by document length),
     * then one equi-join on (b_id, gram hash) and a per-pair rollup; the
-    * corpus-wide gram table is never self-joined. */
-  def substringExtent(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, minShared: Int = 3,
-      maxFingerprintDf: Int = 20): DataFrame =
-    substringExtentManaged(df, idCol, textCol, k, w, minShared,
-      maxFingerprintDf)._1
-
-  /** [[substringExtent]] plus the cleanup handle for its internal
-    * CANDIDATE checkpoint — same contract as [[substringDupPairsManaged]].
+    * corpus-wide gram table is never self-joined.
+    *
+    * Returned as a [[graft.engine.Materialized]] over its internal
+    * CANDIDATE checkpoint: close it after materializing the result.
     *
     * Barrier placement: the checkpoint sits on the candidate PAIRS (a few
     * rows per duplicated span — the 100 TB contract is candidates ≪
@@ -1537,17 +1455,14 @@ object Dedup {
     * any exchange, so only candidate documents' grams are ever shuffled
     * or checkpointed — the one gram materialization is |candidate docs| ×
     * |grams per doc|, not corpus-sized. */
-  def substringExtentManaged(
+  def substringExtent(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, w: Int = 8, minShared: Int = 3,
-      maxFingerprintDf: Int = 20): (DataFrame, () => Unit) = {
-    val (pairs, freePairs) = substringDupPairsManaged(df, idCol, textCol,
-      k, w, minShared, maxFingerprintDf)
-    val (cand, candRdd) = checkpointTracked(
-      pairs.withColumnRenamed("n_shared", "n_shared_fp"), reliable = false)
-    (substringExtentFromPairs(df, cand, idCol, textCol, k),
-      () => { freePairs(); free(candRdd) })
-  }
+      maxFingerprintDf: Int = 20): Materialized =
+    Materialized.checkpoint(substringDupPairs(df, idCol, textCol,
+        k, w, minShared, maxFingerprintDf)
+      .withColumnRenamed("n_shared", "n_shared_fp"))
+      .map(substringExtentFromPairs(df, _, idCol, textCol, k))
 
   /** [[substringExtent]] over a PRE-COMPUTED candidate pair frame — the
     * pairs-reuse entry point: a corpus run that reads the span histogram
@@ -1564,7 +1479,7 @@ object Dedup {
     * by three joins here, so a lazily derived frame would re-execute its
     * whole upstream chain per consumer (the internal overloads checkpoint
     * it for exactly that reason). Output and scale shape are identical to
-    * [[substringExtentManaged]] (gram scans map-side native, both join
+    * [[substringExtent]] (gram scans map-side native, both join
     * sides semi-cut to candidate docs before any exchange); DedupSpec pins
     * FromPairs ≡ internal-pairs equality. */
   def substringExtentFromPairs(
@@ -1647,58 +1562,36 @@ object Dedup {
     * Scale shape: positional grams explode only for candidate LATER docs
     * (semi-cut before the exchange), the match join is hash-keyed per
     * pair, and both islands passes window PARTITIONED BY THE PAIR —
-    * bounded by one document's positions, never corpus-wide. */
+    * bounded by one document's positions, never corpus-wide.
+    *
+    * Returned as a [[graft.engine.Materialized]] over the internal
+    * candidate-pair checkpoint — the [[substringExtent]] contract. */
   def substringSpans(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, w: Int = 8, minShared: Int = 3,
-      maxFingerprintDf: Int = 20): DataFrame =
-    substringSpansManaged(df, idCol, textCol, k, w, minShared,
-      maxFingerprintDf)._1
-
-  /** The [[substringSpanLengthsManaged]] span frame without the cleanup
-    * handle (the standard unmanaged-wrapper contract). */
-  def substringSpanLengths(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, minShared: Int = 3,
-      maxFingerprintDf: Int = 20): DataFrame =
-    substringSpanLengthsManaged(df, idCol, textCol, k, w, minShared,
-      maxFingerprintDf)._1
-
-  /** [[substringSpans]] plus the cleanup handle for its internal
-    * candidate-pair checkpoint — the [[substringExtentManaged]]
-    * contract. */
-  def substringSpansManaged(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, minShared: Int = 3,
-      maxFingerprintDf: Int = 20): (DataFrame, () => Unit) = {
-    val (spans, free) = substringSpanLengthsManaged(df, idCol, textCol,
-      k, w, minShared, maxFingerprintDf)
-    val out = spans.groupBy("a_id", "b_id").agg(
-      count(lit(1)).as("n_spans"),
-      max(col("span_chars")).cast("long").as("max_span_chars"),
-      sum(col("span_chars")).cast("long").as("copied_chars"))
-    (out, free)
-  }
+      maxFingerprintDf: Int = 20): Materialized =
+    substringSpanLengths(df, idCol, textCol, k, w, minShared, maxFingerprintDf)
+      .map(_.groupBy("a_id", "b_id").agg(
+        count(lit(1)).as("n_spans"),
+        max(col("span_chars")).cast("long").as("max_span_chars"),
+        sum(col("span_chars")).cast("long").as("copied_chars")))
 
   /** The individual merged copied spans behind [[substringSpans]] — one
     * row per (pair, maximal contiguous copied region) with its exact char
     * length. This is the frame the span-length DISTRIBUTION reads from
     * (the histogram Lee et al. plot before picking removal thresholds);
     * [[substringSpans]] is its per-pair rollup. Span semantics (matched
-    * positions, run/merge rules, the ≤-k touch merge) documented there. */
-  def substringSpanLengthsManaged(
+    * positions, run/merge rules, the ≤-k touch merge) documented there;
+    * the handle covers the candidate-pair checkpoint, as there. */
+  def substringSpanLengths(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, w: Int = 8, minShared: Int = 3,
-      maxFingerprintDf: Int = 20): (DataFrame, () => Unit) = {
-    val (pairs, freePairs) = substringDupPairsManaged(df, idCol, textCol,
-      k, w, minShared, maxFingerprintDf)
-    val (cand, candRdd) = checkpointTracked(
-      pairs.select("a_id", "b_id"), reliable = false)
-    (substringSpanLengthsFromPairs(df, cand, idCol, textCol, k),
-      () => { freePairs(); free(candRdd) })
-  }
+      maxFingerprintDf: Int = 20): Materialized =
+    Materialized.checkpoint(substringDupPairs(df, idCol, textCol,
+        k, w, minShared, maxFingerprintDf).select("a_id", "b_id"))
+      .map(substringSpanLengthsFromPairs(df, _, idCol, textCol, k))
 
-  /** [[substringSpanLengthsManaged]] over a PRE-COMPUTED candidate pair
+  /** [[substringSpanLengths]] over a PRE-COMPUTED candidate pair
     * frame — the pairs-reuse entry point (contract, materialization
     * requirement, and the one-pair-stage-many-consumers rationale:
     * [[substringExtentFromPairs]]). Only (a_id, b_id) is consumed.
@@ -1906,30 +1799,20 @@ object Dedup {
     * which is the 100 TB-side of the trade). The strip itself is ONE
     * codegen'd per-row expression ([[graft.plans.StripMatchedGrams]]) —
     * no positional explode, no per-character rows, no reassembly
-    * window. */
+    * window.
+    *
+    * Returned as a [[graft.engine.Materialized]] over the internal
+    * candidate-pair and pair-doc gram checkpoints — the
+    * [[substringExtent]] contract. */
   def stripCopiedSpans(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, w: Int = 8, minShared: Int = 3,
-      maxFingerprintDf: Int = 20): DataFrame =
-    stripCopiedSpansManaged(df, idCol, textCol, k, w, minShared,
-      maxFingerprintDf)._1
-
-  /** [[stripCopiedSpans]] plus the cleanup handle for its internal
-    * candidate-pair checkpoint — the [[substringExtentManaged]]
-    * contract. */
-  def stripCopiedSpansManaged(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, minShared: Int = 3,
-      maxFingerprintDf: Int = 20): (DataFrame, () => Unit) = {
+      maxFingerprintDf: Int = 20): Materialized = {
     require(!df.columns.contains("n_removed"),
       "stripCopiedSpans adds an n_removed column; the input already has one")
-    val (pairs, freePairs) = substringDupPairsManaged(df, idCol, textCol,
-      k, w, minShared, maxFingerprintDf)
-    val (cand, candRdd) = checkpointTracked(
-      pairs.select("a_id", "b_id"), reliable = false)
-    val (out, freeGrams) = stripCopiedSpansFromPairsManaged(df, cand,
-      idCol, textCol, k)
-    (out, () => { freePairs(); free(candRdd); freeGrams() })
+    Materialized.checkpoint(substringDupPairs(df, idCol, textCol,
+        k, w, minShared, maxFingerprintDf).select("a_id", "b_id"))
+      .flatMap(stripCopiedSpansFromPairs(df, _, idCol, textCol, k))
   }
 
   /** [[stripCopiedSpans]] over a PRE-COMPUTED candidate pair frame — the
@@ -1938,18 +1821,12 @@ object Dedup {
     * [[substringExtentFromPairs]]). Only (a_id, b_id) is consumed; strip
     * semantics are [[stripCopiedSpans]]' verbatim (later side loses
     * characters covered by any earlier partner's k-grams, everything else
-    * passes through byte-identical). */
+    * passes through byte-identical). Returned as a
+    * [[graft.engine.Materialized]] over the internal pair-doc gram
+    * checkpoint (close only after the result is materialized). */
   def stripCopiedSpansFromPairs(
       df: DataFrame, cand: DataFrame, idCol: String, textCol: String,
-      k: Int = 16): DataFrame =
-    stripCopiedSpansFromPairsManaged(df, cand, idCol, textCol, k)._1
-
-  /** [[stripCopiedSpansFromPairs]] plus the release handle for its
-    * internal pair-doc gram checkpoint — the [[stripCopiedSpansManaged]]
-    * contract (release only after the result is materialized). */
-  def stripCopiedSpansFromPairsManaged(
-      df: DataFrame, cand: DataFrame, idCol: String, textCol: String,
-      k: Int = 16): (DataFrame, () => Unit) = {
+      k: Int = 16): Materialized = {
     require(!df.columns.contains("n_removed"),
       "stripCopiedSpansFromPairs adds an n_removed column; the input already has one")
     val c = normalizedPairs(cand, "stripCopiedSpansFromPairs")
@@ -1966,37 +1843,38 @@ object Dedup {
     // kernel.
     val pairDocIds = c.select(col("a_id").as("id"))
       .union(c.select(col("b_id").as("id"))).distinct()
-    val (grams, gramsRdd) = checkpointTracked(
+    Materialized.checkpoint(
       graft.engine.Fan.out(
           df.filter(col(textCol).isNotNull && length(col(textCol)) >= k)
             .select(col(idCol).as("id"), col(textCol))
             .join(pairDocIds, Seq("id"), "left_semi"))
         .select(col("id"),
-          explode(graft.plans.WinnowMinima.minima(col(textCol), k, 1)).as("h")),
-      reliable = false)
-    // the inner join on a_id / left-semi probe on b_id each see only their
-    // own side's ids, so reading the UNION dump on both sides is
-    // row-identical to the per-side scans it replaces
-    val aGrams = grams.select(col("id").as("a_id"), col("h"))
-    val bGrams = grams.select(col("id").as("b_id"), col("h"))
-    // the partner set is intersected with the LATER doc's own gram set
-    // BEFORE collecting: a partner gram absent from b can never match
-    // during the strip, so dropping it is semantics-free — and it shrinks
-    // the per-doc array from the partners' FULL gram sets (bounded by
-    // partner doc lengths; measured 129 MB of shuffle through the
-    // collect_set + final join at sf0.1) to just the matched grams
-    // (the copied spans' — the extent verify-join shape, ~12 MB)
-    val ph = c.join(aGrams, Seq("a_id"))
-      .join(bGrams, Seq("b_id", "h"), "left_semi")
-      .groupBy("b_id").agg(collect_set(col("h")).as("__ph"))
-      .select(col("b_id").as("__strip_id"), col("__ph"))
-    // payload side NOT fanned: the strip expression only re-hashes docs
-    // with a non-NULL __ph (the b-side of some pair — a small fraction),
-    // so a round-robin exchange of the full text corpus costs more than
-    // the kernel it parallelizes (the round-21 decontam_strip regression;
-    // guide §2.3/§8)
-    val joined = df.join(ph, df(idCol) === ph("__strip_id"), "left")
-    (stripWithPartnerHashes(joined, textCol, k), () => free(gramsRdd))
+          explode(graft.plans.WinnowMinima.minima(col(textCol), k, 1)).as("h")))
+      .map { grams =>
+        // the inner join on a_id / left-semi probe on b_id each see only their
+        // own side's ids, so reading the UNION dump on both sides is
+        // row-identical to the per-side scans it replaces
+        val aGrams = grams.select(col("id").as("a_id"), col("h"))
+        val bGrams = grams.select(col("id").as("b_id"), col("h"))
+        // the partner set is intersected with the LATER doc's own gram set
+        // BEFORE collecting: a partner gram absent from b can never match
+        // during the strip, so dropping it is semantics-free — and it shrinks
+        // the per-doc array from the partners' FULL gram sets (bounded by
+        // partner doc lengths; measured 129 MB of shuffle through the
+        // collect_set + final join at sf0.1) to just the matched grams
+        // (the copied spans' — the extent verify-join shape, ~12 MB)
+        val ph = c.join(aGrams, Seq("a_id"))
+          .join(bGrams, Seq("b_id", "h"), "left_semi")
+          .groupBy("b_id").agg(collect_set(col("h")).as("__ph"))
+          .select(col("b_id").as("__strip_id"), col("__ph"))
+        // payload side NOT fanned: the strip expression only re-hashes docs
+        // with a non-NULL __ph (the b-side of some pair — a small fraction),
+        // so a round-robin exchange of the full text corpus costs more than
+        // the kernel it parallelizes (the round-21 decontam_strip regression;
+        // guide §2.3/§8)
+        val joined = df.join(ph, df(idCol) === ph("__strip_id"), "left")
+        stripWithPartnerHashes(joined, textCol, k)
+      }
   }
 
   /** Shared tail of the strip family: a frame carrying `textCol` and the
@@ -2054,7 +1932,7 @@ object Dedup {
       maxFingerprintDf: Int = 20): DataFrame =
     stripAgainstCappedIndex(batch,
       capFingerprintIndex(corpusFps, maxFingerprintDf), corpusGrams,
-      idCol, textCol, k, w, minShared)
+      idCol, textCol, k, w, minShared).df
 
   /** The df cap as a BUILD-ONCE index transform: drop fingerprint hashes
     * present in more than `maxFingerprintDf` corpus documents (the
@@ -2122,39 +2000,31 @@ object Dedup {
 
   /** [[stripAgainstCorpus]] against an ALREADY-CAPPED (or deliberately
     * uncapped) fingerprint index — the query-many path: no per-call
-    * aggregate over the index. */
+    * aggregate over the index. Returned as a [[graft.engine.Materialized]]
+    * over the internal partner-pair checkpoint — the [[stripCopiedSpans]]
+    * contract. Long-lived callers (the streaming sinks, one strip per
+    * micro-batch) must close it after materializing or the per-batch
+    * checkpoints accumulate for the query's lifetime. */
   def stripAgainstCappedIndex(
       batch: DataFrame, cappedFps: DataFrame, corpusGrams: DataFrame,
       idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, minShared: Int = 3): DataFrame =
-    stripAgainstCappedIndexManaged(batch, cappedFps, corpusGrams, idCol,
-      textCol, k, w, minShared)._1
-
-  /** [[stripAgainstCappedIndex]] plus the release handle for its internal
-    * partner-pair checkpoint — the [[stripCopiedSpansManaged]] contract.
-    * Long-lived callers (the streaming sinks, one strip per micro-batch)
-    * must release after materializing or the per-batch checkpoints
-    * accumulate for the query's lifetime. */
-  def stripAgainstCappedIndexManaged(
-      batch: DataFrame, cappedFps: DataFrame, corpusGrams: DataFrame,
-      idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, minShared: Int = 3): (DataFrame, () => Unit) =
+      k: Int = 16, w: Int = 8, minShared: Int = 3): Materialized =
     stripAgainstIndexCore(batch, cappedFps, corpusGrams, idCol, textCol,
       k, w, minShared, excludeSameId = true)
 
   /** Shared strip core — [[pairsAgainstCore]] has the `excludeSameId`
     * rationale; everything downstream of the pair step is contract-
     * identical between the incremental and cross-dataset callers.
-    * Returns the strip frame plus the release handle for the internal
-    * partner-pair checkpoint (the [[stripCopiedSpansManaged]] contract):
-    * call it only after the result is materialized — the streaming sinks
-    * do, per micro-batch; one-shot batch callers may discard it (the
-    * ContextCleaner reclaims the blocks once the frame is unreferenced). */
+    * Returns the strip frame over the internal partner-pair checkpoint
+    * (the [[stripCopiedSpans]] contract): close it only after the result
+    * is materialized — the streaming sinks do, per micro-batch; one-shot
+    * batch callers may just read `.df` (the ContextCleaner reclaims the
+    * blocks once the frame is unreferenced). */
   private def stripAgainstIndexCore(
       batch: DataFrame, cappedFps: DataFrame, corpusGrams: DataFrame,
       idCol: String, textCol: String,
       k: Int, w: Int, minShared: Int,
-      excludeSameId: Boolean): (DataFrame, () => Unit) = {
+      excludeSameId: Boolean): Materialized = {
     require(Seq("id", "h").forall(cappedFps.columns.contains),
       s"cappedFps must carry (id, h) — the winnowFingerprints schema; " +
         s"got (${cappedFps.columns.mkString(", ")})")
@@ -2168,40 +2038,41 @@ object Dedup {
     // twice below (the ph chain and the gram-side semi-cut), so it is
     // materialized once — without the barrier the whole batch-side winnow
     // fingerprint pass would re-run per consumer
-    val (partners, partnersRdd) = checkpointTracked(
+    Materialized.checkpoint(
       pairsAgainstCore(batch, cappedFps,
         idCol, textCol, k, w, minShared, excludeSameId)
-        .select("new_id", "corpus_id"),
-      reliable = false)
-    // corpus partner gram sets intersected with the ARRIVAL's own grams
-    // before collecting — the stripCopiedSpansFromPairs rationale: a
-    // partner gram the arrival lacks can never match, and the cut shrinks
-    // the per-arrival array from full corpus-doc gram sets to the copied
-    // spans' (one extra map-side scan of the small batch side).
-    // Semi-cut FIRST (guide §2.3): only arrivals that actually pair can
-    // contribute to the left-semi probe below, so the w=1 gram kernel
-    // runs over the matched docs only, never the whole batch
-    val batchGrams = graft.engine.Fan.out(batch
-        .filter(col(textCol).isNotNull && length(col(textCol)) >= k)
-        .select(col(idCol).as("new_id"), col(textCol))
-        .join(partners.select("new_id").distinct(), Seq("new_id"),
-          "left_semi"))
-      .select(col("new_id"),
-        explode(graft.plans.WinnowMinima.minima(col(textCol), k, 1)).as("h"))
-    val ph = partners
-      .join(corpusGrams.select(col("id").as("corpus_id"), col("h")),
-        Seq("corpus_id"))
-      .join(batchGrams, Seq("new_id", "h"), "left_semi")
-      .groupBy("new_id").agg(collect_set(col("h")).as("__ph"))
-      .select(col("new_id").as("__strip_id"), col("__ph"))
-    // the payload side is NOT fanned: the strip expression only does real
-    // work on rows with a non-NULL __ph (matched docs — a small fraction),
-    // so a round-robin exchange of the full text corpus costs more than
-    // the kernel it would parallelize (the round-21 decontam_strip
-    // regression, guide §2.3/§8: don't ship heavy payloads to parallelize
-    // work that lives on a few rows)
-    val joined = batch.join(ph, batch(idCol) === ph("__strip_id"), "left")
-    (stripWithPartnerHashes(joined, textCol, k), () => free(partnersRdd))
+        .select("new_id", "corpus_id"))
+      .map { partners =>
+        // corpus partner gram sets intersected with the ARRIVAL's own grams
+        // before collecting — the stripCopiedSpansFromPairs rationale: a
+        // partner gram the arrival lacks can never match, and the cut shrinks
+        // the per-arrival array from full corpus-doc gram sets to the copied
+        // spans' (one extra map-side scan of the small batch side).
+        // Semi-cut FIRST (guide §2.3): only arrivals that actually pair can
+        // contribute to the left-semi probe below, so the w=1 gram kernel
+        // runs over the matched docs only, never the whole batch
+        val batchGrams = graft.engine.Fan.out(batch
+            .filter(col(textCol).isNotNull && length(col(textCol)) >= k)
+            .select(col(idCol).as("new_id"), col(textCol))
+            .join(partners.select("new_id").distinct(), Seq("new_id"),
+              "left_semi"))
+          .select(col("new_id"),
+            explode(graft.plans.WinnowMinima.minima(col(textCol), k, 1)).as("h"))
+        val ph = partners
+          .join(corpusGrams.select(col("id").as("corpus_id"), col("h")),
+            Seq("corpus_id"))
+          .join(batchGrams, Seq("new_id", "h"), "left_semi")
+          .groupBy("new_id").agg(collect_set(col("h")).as("__ph"))
+          .select(col("new_id").as("__strip_id"), col("__ph"))
+        // the payload side is NOT fanned: the strip expression only does real
+        // work on rows with a non-NULL __ph (matched docs — a small fraction),
+        // so a round-robin exchange of the full text corpus costs more than
+        // the kernel it would parallelize (the round-21 decontam_strip
+        // regression, guide §2.3/§8: don't ship heavy payloads to parallelize
+        // work that lives on a few rows)
+        val joined = batch.join(ph, batch(idCol) === ph("__strip_id"), "left")
+        stripWithPartnerHashes(joined, textCol, k)
+      }
   }
 
   /** Benchmark DECONTAMINATION strip — the cross-dataset form of
@@ -2254,29 +2125,21 @@ object Dedup {
       .select(col(idCol).as("id"),
         explode(graft.plans.WinnowMinima.minima(col(textCol), k, 1)).as("h"))
     stripBenchmarkSpansIndexed(corpus, fps, grams, idCol, textCol,
-      k, w, minShared)
+      k, w, minShared).df
   }
 
   /** [[stripBenchmarkSpans]] against an ALREADY-MATERIALIZED benchmark
     * index — the query-many path (df-capped fingerprints via
     * [[capFingerprintIndex]] + the WinnowMinima w=1 gram dump, both
     * build-once tables): no per-call aggregate over the benchmark, same
-    * no-same-id-guard cross-dataset pairing. */
+    * no-same-id-guard cross-dataset pairing. Returned as a
+    * [[graft.engine.Materialized]] over the internal partner-pair
+    * checkpoint — the [[stripAgainstCappedIndex]] contract (the
+    * decontamination streaming sink strips once per micro-batch). */
   def stripBenchmarkSpansIndexed(
       corpus: DataFrame, benchFpsCapped: DataFrame, benchGrams: DataFrame,
       idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, minShared: Int = 3): DataFrame =
-    stripBenchmarkSpansIndexedManaged(corpus, benchFpsCapped, benchGrams,
-      idCol, textCol, k, w, minShared)._1
-
-  /** [[stripBenchmarkSpansIndexed]] plus the release handle for its
-    * internal partner-pair checkpoint — the
-    * [[stripAgainstCappedIndexManaged]] contract (the decontamination
-    * streaming sink strips once per micro-batch). */
-  def stripBenchmarkSpansIndexedManaged(
-      corpus: DataFrame, benchFpsCapped: DataFrame, benchGrams: DataFrame,
-      idCol: String, textCol: String,
-      k: Int = 16, w: Int = 8, minShared: Int = 3): (DataFrame, () => Unit) =
+      k: Int = 16, w: Int = 8, minShared: Int = 3): Materialized =
     stripAgainstIndexCore(corpus, benchFpsCapped, benchGrams, idCol,
       textCol, k, w, minShared, excludeSameId = false)
 
@@ -2434,37 +2297,41 @@ object Dedup {
     * Scale shape: three 1-row count aggregates plus one equi-join of the
     * two pair sets collapsed to a 1-row count, combined as broadcasts.
     * Numeric contract: both ratios are ONE IEEE division of exact BIGINTs
-    * (total pairs via integer `DIV`) — bit-identical cross-engine. */
+    * (total pairs via integer `DIV`) — bit-identical cross-engine.
+    * Returned as a [[graft.engine.Materialized]] over the two pair-frame
+    * checkpoints: close it after materializing the one-row report. */
   def blockingQuality(
       df: DataFrame, idCol: String,
-      candidates: DataFrame, truth: DataFrame): DataFrame = {
+      candidates: DataFrame, truth: DataFrame): Materialized = {
     // each pair frame feeds TWO consumers (its own count + the caught
     // join), so without a barrier the whole candidate-generation pipeline
     // (a minhash banding chain, a shingle self-join) executes twice inside
     // the one combined plan (guide §1.2 don't-compute-twice). Materialize
     // each once — pair-frame sized — and overlap the two independent
     // materializations (guide §2.6).
-    val (cand, tr) = graft.engine.Overlap.par(
-      candidates.select("a_id", "b_id").localCheckpoint(),
-      truth.select("a_id", "b_id").localCheckpoint())
-    val n = df.filter(col(idCol).isNotNull)
-      .agg(count(lit(1)).as("n_entities"))
-    val nc = cand.agg(count(lit(1)).as("n_candidates"))
-    val nt = tr.agg(count(lit(1)).as("n_truth"))
-    val caught = cand.join(tr, Seq("a_id", "b_id"))
-      .agg(count(lit(1)).as("n_caught"))
-    n.crossJoin(broadcast(nc)).crossJoin(broadcast(nt))
-      .crossJoin(broadcast(caught))
-      .withColumn("total_pairs",
-        expr("CAST(n_entities * (n_entities - 1) DIV 2 AS BIGINT)"))
-      .select(col("n_entities"), col("total_pairs"),
-        col("n_candidates"), col("n_truth"), col("n_caught"),
-        when(col("n_truth") > 0,
-          col("n_caught").cast("double") / col("n_truth").cast("double"))
-          .as("pairs_completeness"),
-        when(col("total_pairs") > 0,
-          (col("total_pairs") - col("n_candidates")).cast("double") /
-            col("total_pairs").cast("double"))
-          .as("reduction_ratio"))
+    val (candM, trM) = graft.engine.Overlap.par(
+      Materialized.checkpoint(candidates.select("a_id", "b_id")),
+      Materialized.checkpoint(truth.select("a_id", "b_id")))
+    candM.flatMap(cand => trM.map { tr =>
+      val n = df.filter(col(idCol).isNotNull)
+        .agg(count(lit(1)).as("n_entities"))
+      val nc = cand.agg(count(lit(1)).as("n_candidates"))
+      val nt = tr.agg(count(lit(1)).as("n_truth"))
+      val caught = cand.join(tr, Seq("a_id", "b_id"))
+        .agg(count(lit(1)).as("n_caught"))
+      n.crossJoin(broadcast(nc)).crossJoin(broadcast(nt))
+        .crossJoin(broadcast(caught))
+        .withColumn("total_pairs",
+          expr("CAST(n_entities * (n_entities - 1) DIV 2 AS BIGINT)"))
+        .select(col("n_entities"), col("total_pairs"),
+          col("n_candidates"), col("n_truth"), col("n_caught"),
+          when(col("n_truth") > 0,
+            col("n_caught").cast("double") / col("n_truth").cast("double"))
+            .as("pairs_completeness"),
+          when(col("total_pairs") > 0,
+            (col("total_pairs") - col("n_candidates")).cast("double") /
+              col("total_pairs").cast("double"))
+            .as("reduction_ratio"))
+    })
   }
 }

@@ -392,50 +392,38 @@ object TextAnalysis {
     * pair join. Group sizes broadcast back. Shingles join as strings for
     * exact cross-engine parity; a petabyte corpus would key the join on
     * xxhash64(shingle) to halve shuffle bytes at negligible collision
-    * odds (the dedup_lines precedent). */
-  /** [[sourceOverlap]] that discards the storage handle — fine for
-    * one-shot jobs where the executor blocks die with the session.
-    * EAGER at construction (the barrier below is a localCheckpoint) and
-    * the checkpointed blocks are pinned OUTSIDE the CacheManager until
-    * the ContextCleaner GCs them; a driver loop constructing this
-    * repeatedly should use [[sourceOverlapManaged]] and free each pass
-    * (the [[Dedup.resolveClustersManaged]] precedent). */
+    * odds (the dedup_lines precedent).
+    *
+    * EAGER at construction (the barrier below is a localCheckpoint):
+    * returned as a [[graft.engine.Materialized]] over those blocks, which
+    * are pinned OUTSIDE the CacheManager until closed or GC'd — a driver
+    * loop constructing this repeatedly should close each pass after
+    * materializing it (the [[Dedup.resolveClusters]] precedent). */
   def sourceOverlap(
       df: DataFrame, groupCol: String, textCol: String,
-      shingleN: Int = 3): DataFrame =
-    sourceOverlapManaged(df, groupCol, textCol, shingleN)._1
-
-  /** [[sourceOverlap]] plus a cleanup handle that unpersists the
-    * internal localCheckpoint's blocks. Call it only after the result
-    * has been fully materialized (written / collected) — the truncated
-    * lineage cannot recompute afterwards. Idempotent, best-effort. */
-  def sourceOverlapManaged(
-      df: DataFrame, groupCol: String, textCol: String,
-      shingleN: Int = 3): (DataFrame, () => Unit) = {
+      shingleN: Int = 3): graft.engine.Materialized = {
     require(shingleN >= 1, s"shingleN must be >= 1, got $shingleN")
     // `sg` feeds BOTH self-join sides and the size aggregate — without a
     // materialization barrier the corpus shingle explode executes three
     // times in one job. The distinct (group, shingle) set is small next to
     // the corpus (bounded by |groups| x vocabulary), so localCheckpoint it
     // once and let the join + sizes read the blocks.
-    val sg = df.filter(col(textCol).isNotNull && col(groupCol).isNotNull)
-      .select(col(groupCol).as("g"),
-        explode(TextFns.shinglesFast(col(textCol), shingleN)).as("sh"))
-      .distinct()
-      .localCheckpoint()
-    val sgRdd = sg.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-    val sizes = sg.groupBy("g").agg(count(lit(1)).as("n"))
-    val co = sg.toDF("a", "sh").join(sg.toDF("b", "sh"), "sh")
-      .filter(col("a") < col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("n_common"))
-    val out = co.join(broadcast(sizes.toDF("a", "__na")), "a")
-      .join(broadcast(sizes.toDF("b", "__nb")), "b")
-      .select(col("a"), col("b"), col("n_common"),
-        round(col("n_common").cast("double") /
-          (col("__na") + col("__nb") - col("n_common")), 6).as("jaccard"))
-    (out, () => sgRdd.foreach(_.unpersist(blocking = false)))
+    graft.engine.Materialized.checkpoint(
+      df.filter(col(textCol).isNotNull && col(groupCol).isNotNull)
+        .select(col(groupCol).as("g"),
+          explode(TextFns.shinglesFast(col(textCol), shingleN)).as("sh"))
+        .distinct())
+      .map { sg =>
+        val sizes = sg.groupBy("g").agg(count(lit(1)).as("n"))
+        val co = sg.toDF("a", "sh").join(sg.toDF("b", "sh"), "sh")
+          .filter(col("a") < col("b"))
+          .groupBy("a", "b").agg(count(lit(1)).as("n_common"))
+        co.join(broadcast(sizes.toDF("a", "__na")), "a")
+          .join(broadcast(sizes.toDF("b", "__nb")), "b")
+          .select(col("a"), col("b"), col("n_common"),
+            round(col("n_common").cast("double") /
+              (col("__na") + col("__nb") - col("n_common")), 6).as("jaccard"))
+      }
   }
 
   /** Tokenizer fertility by group: the mean ratio of BPE-ish subword
@@ -1137,10 +1125,13 @@ object TextAnalysis {
       .filter(col("word") =!= "" &&
         !col("word").contains(S) && !col("word").contains(E))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    var seqs = words.select(col("word"), col("freq"),
+    // the checkpoint `seqs` currently reads; each re-checkpoint supersedes
+    // (and frees) it, as resolveMinLabel frees each pass's predecessor, so
+    // a run pins one vocab snapshot however many rounds it takes
+    var pinned = graft.engine.Materialized.checkpoint(words.select(col("word"), col("freq"),
       concat_ws("", transform(sequence(lit(1), length(col("word"))),
-        i => concat(lit(S), col("word").substr(i, lit(1)), lit(E)))).as("seq"))
-      .localCheckpoint()
+        i => concat(lit(S), col("word").substr(i, lit(1)), lit(E)))).as("seq")))
+    var seqs = pinned.df
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     // every multi-char symbol in the evolving vocabulary is the concat of
     // a recorded merge (initial symbols are single chars) — this set is
@@ -1213,8 +1204,14 @@ object TextAnalysis {
             replace(e, lit(S + l + E + S + r + E), lit(S + l + r + E))
           }.as("seq"))
         round += 1
-        seqs =
-          if (round % checkpointEvery == 0) next.localCheckpoint() else next
+        if (round % checkpointEvery == 0) {
+          // the checkpoint is eager: `next` is materialized before the
+          // snapshot it reads is released
+          val cp = graft.engine.Materialized.checkpoint(next)
+          pinned.close()
+          pinned = cp
+          seqs = cp.df
+        } else seqs = next
       }
     }
     (merges.result(), seqs)

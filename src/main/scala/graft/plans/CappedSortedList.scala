@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
   * `cap` rows, NULL for overflowed groups.
   *
   * Built for the winnowing pair stage
-  * ([[graft.operators.Dedup.substringDupPairsManaged]]): the df cap and
+  * ([[graft.operators.Dedup.substringDupPairs]]): the df cap and
   * the per-hash id list in ONE aggregation over ONE exchange. The
   * alternatives both lose — plain `collect_list` then filter materializes
   * the unbounded list first (a corpus-wide boilerplate fingerprint

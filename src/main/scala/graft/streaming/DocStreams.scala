@@ -209,13 +209,13 @@ object DocStreams {
       "corpusFps/corpusGrams must be static index tables")
     cappedIndexBatchSink(stream, corpusFps, maxFingerprintDf, checkpointDir) {
       (batch, capped, id) =>
-        // managed variant: the strip checkpoints its partner-pair frame per
-        // micro-batch; release after the write or the checkpoints
-        // accumulate for the query's lifetime
-        val (out, release) = Dedup.stripAgainstCappedIndexManaged(batch,
-          capped, corpusGrams, idCol, textCol, k, w, minShared)
-        try out.write.mode("overwrite").parquet(s"$tablePath/batch_id=$id")
-        finally release()
+        // the strip checkpoints its partner-pair frame per micro-batch;
+        // close it after the write or the checkpoints accumulate for the
+        // query's lifetime
+        scala.util.Using.resource(Dedup.stripAgainstCappedIndex(batch,
+            capped, corpusGrams, idCol, textCol, k, w, minShared)) {
+          _.df.write.mode("overwrite").parquet(s"$tablePath/batch_id=$id")
+        }
     }
   }
 
@@ -250,13 +250,13 @@ object DocStreams {
       s"minCharsAfter must be >= 0, got $minCharsAfter")
     cappedIndexBatchSink(stream, benchFps, maxFingerprintDf, checkpointDir) {
       (batch, capped, id) =>
-        // managed variant: release the strip's per-batch partner-pair
-        // checkpoint after the write (the stripArrivalsSink rationale)
-        val (out, release) = graft.operators.Curation
-          .decontaminateIndexedManaged(batch, capped, benchGrams, idCol,
-            textCol, k, w, minShared, minCharsAfter)
-        try out.write.mode("overwrite").parquet(s"$tablePath/batch_id=$id")
-        finally release()
+        // close the strip's per-batch partner-pair checkpoint after the
+        // write (the stripArrivalsSink rationale)
+        scala.util.Using.resource(graft.operators.Curation
+            .decontaminateIndexed(batch, capped, benchGrams, idCol,
+              textCol, k, w, minShared, minCharsAfter)) {
+          _.df.write.mode("overwrite").parquet(s"$tablePath/batch_id=$id")
+        }
     }
   }
 

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.engine.Materialized
+import graft.operators.{Curation, Dedup, TextAnalysis}
 
 /** Dedup family semantics on literal corpora with planted duplicates. */
 class DedupSpec extends SparkSpec {
@@ -117,7 +118,7 @@ class DedupSpec extends SparkSpec {
 
   test("resolveClusters: transitive chain A~B,B~C keeps exactly one survivor; components are independent") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
-    val labels = Dedup.resolveClusters(pairs)
+    val labels = Dedup.resolveClusters(pairs).df
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     val df = Seq(1L, 2L, 3L, 4L, 10L, 11L).toDF("doc_id")
@@ -140,9 +141,7 @@ class DedupSpec extends SparkSpec {
     val ext = Seq((1L, 2L), (2L, 3L)).toDF("a_id", "b_id").persist()
     ext.count() // materialize the caller's cache BEFORE the call
     val before = sc.getPersistentRDDs.keySet
-    val out = Dedup.resolveClusters(ext)
-    assert(out.count() == 3)
-    val added = sc.getPersistentRDDs.keySet -- before
+    val (_, added) = persistedBy(assert(Dedup.resolveClusters(ext).df.count() == 3))
     // only the returned labels checkpoint may remain registered
     assert(added.size <= 1, s"leaked intermediate blocks: $added")
     // the caller's cache must be untouched (a diff-window capture would have
@@ -150,9 +149,8 @@ class DedupSpec extends SparkSpec {
     assert(before.subsetOf(sc.getPersistentRDDs.keySet), "caller cache was freed")
     assert(ext.count() == 2)
     val chain = (0L until 9L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val before2 = sc.getPersistentRDDs.keySet
-    intercept[IllegalStateException](Dedup.resolveClusters(chain, maxIters = 2))
-    val added2 = sc.getPersistentRDDs.keySet -- before2
+    val (_, added2) = persistedBy(
+      intercept[IllegalStateException](Dedup.resolveClusters(chain, maxIters = 2)))
     assert(added2.isEmpty, s"failure path leaked: $added2")
     ext.unpersist()
   }
@@ -190,7 +188,7 @@ class DedupSpec extends SparkSpec {
       val chain = (0L until 6L).map(i => (i, i + 1)).toDF("a_id", "b_id")
       for (algo <- Seq("minlabel", "star")) {
         val labels = Dedup.resolveClusters(chain, algorithm = algo,
-          reliableCheckpoints = true)
+          reliableCheckpoints = true).df
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(labels == (0L to 6L).map(_ -> 0L).toMap, s"algo=$algo")
       }
@@ -206,7 +204,7 @@ class DedupSpec extends SparkSpec {
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
-  test("resolveClustersManaged: the cleanup handle reclaims the FINAL reliable checkpoint") {
+  test("resolveClusters: close() reclaims the FINAL reliable checkpoint") {
     val dir = java.nio.file.Files.createTempDirectory("graft-managed-cp")
     spark.sparkContext.setCheckpointDir(dir.toString)
     try {
@@ -217,19 +215,79 @@ class DedupSpec extends SparkSpec {
       }
       for (algo <- Seq("minlabel", "star")) {
         val chain = (0L until 6L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-        val (labels, cleanup) = Dedup.resolveClustersManaged(
+        val labels = Dedup.resolveClusters(
           chain, algorithm = algo, reliableCheckpoints = true)
-        // materialize BEFORE cleanup — afterwards the truncated lineage
+        // materialize BEFORE close — afterwards the truncated lineage
         // cannot recompute
-        val resolved = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val resolved = labels.df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(resolved == (0L to 6L).map(_ -> 0L).toMap, s"algo=$algo")
-        cleanup()
+        labels.close()
         assert(rddDirs == 0,
-          s"algo=$algo left $rddDirs checkpoint dirs after cleanup — a " +
+          s"algo=$algo left $rddDirs checkpoint dirs after close — a " +
             "long-lived service would accumulate one per resolve call")
-        cleanup() // idempotent
+        labels.close() // idempotent
       }
     } finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  test("every Materialized operator: close() releases exactly what the call added, never caller storage; twice is a no-op") {
+    val sc = spark.sparkContext
+    val span = "QWERTYUIOPASDFGHJKLZ"
+    val docs = Seq(
+      (1L, "abcd efgh ijkl." + span + ".mnop qrst", "web"),
+      (2L, "0123 4567-" + span + "_8901 2345", "book"),
+      (3L, "wxyz wxyz wxyz wxyz", "web"))
+      .toDF("doc_id", "text", "source")
+    // caller-owned storage the operators read, registered BEFORE any call:
+    // a cache and a truncated-lineage local checkpoint (unpersisting the
+    // latter would make the final count below fail unrecoverably)
+    val ((cached, pairs), callerIds) = persistedBy {
+      val cached = docs.persist()
+      cached.count()
+      val pairs = Dedup.substringDupPairs(cached, "doc_id", "text",
+        k = 4, w = 2, minShared = 2).localCheckpoint()
+      (cached, pairs)
+    }
+    assert(callerIds.size == 2, callerIds.toString)
+    val stored = cached.filter(col("doc_id") === 1L)
+    val fps = Dedup.capFingerprintIndex(
+      Dedup.winnowFingerprints(stored, "doc_id", "text", k = 4, w = 2), 20)
+    val grams = stored.select(col("doc_id").as("id"),
+      explode(graft.plans.WinnowMinima.minima(col("text"), 4, 1)).as("h"))
+    val arrivals = Seq((10L, "0123 4567-" + span + "_8901 2345")).toDF("doc_id", "text")
+    val ops = Seq[(String, () => Materialized)](
+      "resolveClusters" -> (() => Dedup.resolveClusters(pairs)),
+      "substringExtent" -> (() => Dedup.substringExtent(cached, "doc_id", "text",
+        k = 4, w = 2, minShared = 2)),
+      "substringSpans" -> (() => Dedup.substringSpans(cached, "doc_id", "text",
+        k = 4, w = 2, minShared = 2)),
+      "substringSpanLengths" -> (() => Dedup.substringSpanLengths(cached, "doc_id", "text",
+        k = 4, w = 2, minShared = 2)),
+      "stripCopiedSpans" -> (() => Dedup.stripCopiedSpans(cached, "doc_id", "text",
+        k = 4, w = 2, minShared = 2)),
+      "stripCopiedSpansFromPairs" -> (() => Dedup.stripCopiedSpansFromPairs(cached, pairs,
+        "doc_id", "text", k = 4)),
+      "stripAgainstCappedIndex" -> (() => Dedup.stripAgainstCappedIndex(arrivals, fps, grams,
+        "doc_id", "text", k = 4, w = 2, minShared = 2)),
+      "stripBenchmarkSpansIndexed" -> (() => Dedup.stripBenchmarkSpansIndexed(arrivals, fps,
+        grams, "doc_id", "text", k = 4, w = 2, minShared = 2)),
+      "decontaminateIndexed" -> (() => Curation.decontaminateIndexed(arrivals, fps, grams,
+        "doc_id", "text", k = 4, w = 2, minShared = 2)),
+      "sourceOverlap" -> (() => TextAnalysis.sourceOverlap(cached, "source", "text")),
+      "blockingQuality" -> (() => Dedup.blockingQuality(cached, "doc_id", pairs, pairs)))
+    for ((name, op) <- ops) {
+      val (m, added) = persistedBy { val m = op(); m.df.collect(); m }
+      assert(added.nonEmpty, s"$name registered no checkpoint")
+      m.close()
+      val live = sc.getPersistentRDDs.keySet
+      assert((live & added).isEmpty, s"$name: close() left ${live & added}")
+      assert(callerIds.subsetOf(live), s"$name: close() released caller storage")
+      m.close()
+      assert(callerIds.subsetOf(sc.getPersistentRDDs.keySet),
+        s"$name: a second close() released caller storage")
+    }
+    assert(pairs.count() == 1L && cached.count() == 3L)
+    cached.unpersist()
   }
 
   test("semanticDedup: identical-direction duplicates collapse to one survivor; distinct directions all survive") {
@@ -445,7 +503,7 @@ class DedupSpec extends SparkSpec {
     // lexicographic min is the canonical: "a..." < "b..." < "c..."
     val pairs = Seq(("b-7f3a", "a-19c2"), ("b-7f3a", "c-04d1"), ("z-9", "y-8"))
       .toDF("a_id", "b_id")
-    val labels = Dedup.resolveClusters(pairs)
+    val labels = Dedup.resolveClusters(pairs).df
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(labels == Map(
       "a-19c2" -> "a-19c2", "b-7f3a" -> "a-19c2", "c-04d1" -> "a-19c2",
@@ -459,11 +517,11 @@ class DedupSpec extends SparkSpec {
   test("resolveClusters: long chain converges; empty pair set is a no-op") {
     // path graph 0-1-2-...-9 (diameter 9, worst case for min-label passes)
     val chain = (0L until 9L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val labels = Dedup.resolveClusters(chain)
+    val labels = Dedup.resolveClusters(chain).df
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 10 && labels.values.forall(_ == 0L))
     val empty = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
-    assert(Dedup.resolveClusters(empty).count() == 0)
+    assert(Dedup.resolveClusters(empty).df.count() == 0)
     val df = Seq(1L, 2L).toDF("doc_id")
     assert(Dedup.keepClusterSurvivors(df, "doc_id", empty).count() == 2)
   }
@@ -481,7 +539,7 @@ class DedupSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     val random = (0 until 3).map(_ =>
       Seq.fill(45)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)).toDF("a_id", "b_id"))
-    (graphs ++ random).foreach(g => Dedup.resolveClusters(g).collect())
+    (graphs ++ random).foreach(g => Dedup.resolveClusters(g).df.collect())
     assert(Dedup.observeFallbacks.get - before == 0L)
   }
 
@@ -500,16 +558,16 @@ class DedupSpec extends SparkSpec {
       val ids = (es.map(_._1) ++ es.map(_._2)).distinct
       val expected = ids.map(i => i -> find(i.toInt).toLong).toMap
       val pairs = es.toDF("a_id", "b_id")
-      val star = Dedup.resolveClusters(pairs, algorithm = "star")
+      val star = Dedup.resolveClusters(pairs, algorithm = "star").df
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val minlbl = Dedup.resolveClusters(pairs)
+      val minlbl = Dedup.resolveClusters(pairs).df
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(star === expected, s"star vs union-find, trial $trial")
       assert(minlbl === expected, s"minlabel vs union-find, trial $trial")
     }
     // self-pairs still label themselves; string ids resolve natively
     val strPairs = Seq(("b", "a"), ("c", "b"), ("x", "x")).toDF("a_id", "b_id")
-    val got = Dedup.resolveClusters(strPairs, algorithm = "star")
+    val got = Dedup.resolveClusters(strPairs, algorithm = "star").df
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got === Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x"))
   }
@@ -517,11 +575,11 @@ class DedupSpec extends SparkSpec {
   test("resolveClusters(star): long chain converges in O(log n) rounds, not O(diameter)") {
     val n = 256
     val chain = (0L until (n - 1L)).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (labels, rounds, _) = Dedup.resolveStar(chain, "a_id", "b_id", maxIters = 50)
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ((got, rounds), added) = persistedBy {
+      val (labels, rounds) = Dedup.resolveStar(chain, "a_id", "b_id", maxIters = 50)
+      (labels.df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+    }
     // only the returned labels checkpoint may remain registered
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.size <= 1, s"star run leaked intermediate blocks: $added")
     assert(got.size == n && got.values.forall(_ == 0L))
     // diameter 255; log2(256) = 8. Allow slack for the contraction constant
@@ -632,7 +690,7 @@ class DedupSpec extends SparkSpec {
       (3L, "entirely unrelated content here"))
       .toDF("doc_id", "text")
     val rows = Dedup.substringExtent(docs, "doc_id", "text",
-      k = 8, w = 4, minShared = 2, maxFingerprintDf = 3).collect()
+      k = 8, w = 4, minShared = 2, maxFingerprintDf = 3).df.collect()
     assert(rows.length == 1)
     val r = rows.head
     assert((r.getLong(0), r.getLong(1)) == (1L, 2L))
@@ -651,7 +709,7 @@ class DedupSpec extends SparkSpec {
       (3L, "7777&" + span1 + span1 + "&8888")) // doubled copy, no gap
       .toDF("doc_id", "text")
     val rows = Dedup.substringSpans(docs, "doc_id", "text",
-      k = 4, w = 2, minShared = 2)
+      k = 4, w = 2, minShared = 2).df
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
@@ -770,15 +828,15 @@ class DedupSpec extends SparkSpec {
     assert(sorted(Dedup.substringExtentFromPairs(docs, pairs, "doc_id", "text",
         k = 4)) ==
       sorted(Dedup.substringExtent(docs, "doc_id", "text",
-        k = 4, w = 2, minShared = 2)))
+        k = 4, w = 2, minShared = 2).df))
     assert(sorted(Dedup.substringSpanLengthsFromPairs(docs, pairs, "doc_id",
         "text", k = 4)) ==
       sorted(Dedup.substringSpanLengths(docs, "doc_id", "text",
-        k = 4, w = 2, minShared = 2)))
+        k = 4, w = 2, minShared = 2).df))
     assert(sorted(Dedup.stripCopiedSpansFromPairs(docs, pairs, "doc_id", "text",
-        k = 4)) ==
+        k = 4).df) ==
       sorted(Dedup.stripCopiedSpans(docs, "doc_id", "text",
-        k = 4, w = 2, minShared = 2)))
+        k = 4, w = 2, minShared = 2).df))
     // the fused report (r21) is row-identical to the extent ⋈ span-rollup
     // composition it replaced in the substring_report key
     val fused = Dedup.substringReportFromPairs(docs, pairs, "doc_id", "text",
@@ -832,7 +890,7 @@ class DedupSpec extends SparkSpec {
       (2L, "0123 4567-" + span + "_8901 2345", 88L))
       .toDF("doc_id", "text", "b_id") // user column named like a pair column
     val out = Dedup.stripCopiedSpans(docs, "doc_id", "text",
-      k = 4, w = 2, minShared = 2)
+      k = 4, w = 2, minShared = 2).df
     assert(out.columns.contains("b_id"), out.columns.mkString(","))
     val kept = out.collect().map(r => r.getLong(0) -> r.getAs[Long]("b_id")).toMap
     assert(kept == Map(1L -> 77L, 2L -> 88L), kept.toString)
@@ -884,7 +942,7 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val precapped = Dedup.stripAgainstCappedIndex(arrivals,
       Dedup.capFingerprintIndex(fps, 20), grams,
-      "doc_id", "text", k = 4, w = 2, minShared = 2)
+      "doc_id", "text", k = 4, w = 2, minShared = 2).df
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(oneShot == precapped && oneShot.head._3 == span.length.toLong)
   }
@@ -901,7 +959,7 @@ class DedupSpec extends SparkSpec {
       (5L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
     val out = Dedup.stripCopiedSpans(docs, "doc_id", "text",
-      k = 4, w = 2, minShared = 2)
+      k = 4, w = 2, minShared = 2).df
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) null else r.getString(1), r.getLong(2))).toMap
     // earliest copy keeps the span, byte-identical
@@ -922,9 +980,9 @@ class DedupSpec extends SparkSpec {
       (2L, "0123 4567-" + span + "_8901 2345"))
       .toDF("doc_id", "text")
     val once = Dedup.stripCopiedSpans(docs, "doc_id", "text",
-      k = 4, w = 2, minShared = 2).select("doc_id", "text")
+      k = 4, w = 2, minShared = 2).df.select("doc_id", "text")
     val twice = Dedup.stripCopiedSpans(once, "doc_id", "text",
-      k = 4, w = 2, minShared = 2)
+      k = 4, w = 2, minShared = 2).df
     val rows = twice.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(rows.forall(_._3 == 0L), rows.mkString(","))
     val onceMap = once.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -938,7 +996,7 @@ class DedupSpec extends SparkSpec {
       (2L, "1111-2222-" + span + "_3333"))
       .toDF("doc_id", "text")
     val out = Dedup.stripCopiedSpans(docs, "doc_id", "text",
-      k = 4, w = 2, minShared = 2)
+      k = 4, w = 2, minShared = 2).df
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(out(1L) == ("aaaa.bbbb." + span + ".cccc", 0L))
     assert(out(2L) == ("1111-2222-" + "_3333", span.length.toLong))
@@ -965,7 +1023,7 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     // batch twin: the union corpus with ids ordering corpus < arrivals
     val ref = Dedup.stripCopiedSpans(corpus.union(arrivals), "doc_id", "text",
-      k = 4, w = 2, minShared = 2)
+      k = 4, w = 2, minShared = 2).df
       .filter(col("doc_id") >= 10L)
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(got == ref, s"got $got vs batch $ref")
@@ -995,13 +1053,13 @@ class DedupSpec extends SparkSpec {
     val entities = (1L to 4L).toDF("id")
     val cand = Seq((1L, 2L), (1L, 3L)).toDF("a_id", "b_id")
     val truth = Seq((1L, 2L), (2L, 3L)).toDF("a_id", "b_id")
-    val r = Dedup.blockingQuality(entities, "id", cand, truth).head
+    val r = Dedup.blockingQuality(entities, "id", cand, truth).df.head
     assert(r.getLong(0) == 4L && r.getLong(1) == 6L) // n, total = 4*3/2
     assert(r.getLong(2) == 2L && r.getLong(3) == 2L && r.getLong(4) == 1L)
     assert(r.getDouble(5) == 0.5, "1 of 2 true pairs caught")
     assert(r.getDouble(6) == (6.0 - 2.0) / 6.0, "4 of 6 pairs pruned")
     val empty = Dedup.blockingQuality(entities, "id", cand,
-      truth.filter(col("a_id") < 0)).head
+      truth.filter(col("a_id") < 0)).df.head
     assert(empty.isNullAt(5), "completeness undefined with no truth pairs")
   }
 }

@@ -85,9 +85,9 @@ class PipelineSpec extends SparkSpec {
     // empty input: no non-empty partitions to describe -> None, loudly typed
     val empty = Pipeline.runTable(
       name = "empty", download = template, template = template,
-      calcRules = Nil, blankToNullFields = Nil, enrich = None, qa = None,
-      cache = org.apache.spark.storage.StorageLevel.NONE)
+      calcRules = Nil, blankToNullFields = Nil, enrich = None, qa = None)
     assert(empty.report.inputRows == 0 && empty.report.layout.isEmpty)
+    empty.unpersist()
   }
 
   test("runTable: the QA input is evaluated once across counts and both sink reads (persisted split)") {
@@ -110,16 +110,6 @@ class PipelineSpec extends SparkSpec {
     r.keep.count()    // sink read 1
     r.rejects.count() // sink read 2
     assert(acc.value == 7) // one evaluation per source row, total — not 3x
-    r.unpersist()
-  }
-
-  test("runTable: cache = NONE opts out of the persist (no pinned entry to leak)") {
-    val r = Pipeline.runTable(
-      name = "uncached", download = download, template = template,
-      calcRules = Nil, blankToNullFields = Nil, enrich = None, qa = None,
-      cache = org.apache.spark.storage.StorageLevel.NONE)
-    assert(r.keep.count() == 7)
-    assert(!r.isCached) // nothing persisted, unpersist() is a no-op
     r.unpersist()
   }
 

@@ -7,6 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sqlContext = spark.sqlContext // for implicits
+
+  /** Run `body`; return its result and the ids of the persistent RDDs
+    * registered after it ran that were not registered before — keyed to
+    * ids, so storage held elsewhere in the shared session never counts. */
+  def persistedBy[A](body: => A): (A, Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val result = body
+    (result, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+  }
 }
 
 object SparkSpec {

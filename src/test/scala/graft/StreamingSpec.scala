@@ -1060,31 +1060,54 @@ class StreamingSpec extends SparkSpec {
   test("stripArrivalsSink releases its persisted capped index when the query terminates") {
     import sqlContext.implicits._
     implicit val sq = spark.sqlContext
-    val corpus = Seq((1L, "abcd efgh ijkl mnop qrst uvwx")).toDF("doc_id", "text")
+    val span = "QWERTYUIOPASDFGHJKLZ"
+    val corpus = Seq((1L, "abcd efgh ijkl." + span + ".mnop qrst")).toDF("doc_id", "text")
     val fps = graft.operators.Dedup.winnowFingerprints(
       corpus, "doc_id", "text", k = 4, w = 2)
     val grams = corpus.select(col("doc_id").as("id"),
       explode(graft.plans.WinnowMinima.minima(col("text"), 4, 1)).as("h"))
-    val table = java.nio.file.Files.createTempDirectory("strip-rel").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("strip-rel-ckpt").toString
-    // other suites share the session: assert no NEW cached RDDs survive,
-    // not that the registry is globally empty
-    val preExisting = spark.sparkContext.getPersistentRDDs.keySet
-    val mem = MemoryStream[(Long, String)]
-    val q = DocStreams.stripArrivalsSink(
-      mem.toDF().toDF("doc_id", "text"), fps, grams, "doc_id", "text",
-      table, ckpt, k = 4, w = 2, minShared = 2)
-    try {
-      mem.addData(Seq((10L, "zzzz unrelated arrival text")))
-      q.processAllAvailable()
-    } finally q.stop()
-    q.awaitTermination()
-    // the termination event rides the async listener bus — poll briefly
-    val deadline = System.nanoTime() + 10e9.toLong
-    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- preExisting
-    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-    assert(leaked.isEmpty,
-      s"capped index still cached after termination: ${leaked.mkString(", ")}")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    // both capped-index sinks strip through a per-batch partner-pair
+    // checkpoint; the corpus doubles as the benchmark index for decontam
+    val sinks = Seq[(String, org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.streaming.StreamingQuery)](
+      "stripArrivalsSink" -> (s => DocStreams.stripArrivalsSink(
+        s, fps, grams, "doc_id", "text", tmp("strip-rel") + "/t",
+        tmp("strip-rel-ckpt"), k = 4, w = 2, minShared = 2)),
+      "decontamArrivalsSink" -> (s => DocStreams.decontamArrivalsSink(
+        s, fps, grams, "doc_id", "text", tmp("decontam-rel") + "/t",
+        tmp("decontam-rel-ckpt"), k = 4, w = 2, minShared = 2)))
+    for ((name, start) <- sinks) {
+      // other suites share the session: assert on the RDDs THIS query
+      // registers, not on a globally empty registry
+      val (perBatch, leaked) = persistedBy {
+        val mem = MemoryStream[(Long, String)]
+        val q = start(mem.toDF().toDF("doc_id", "text"))
+        try {
+          // every arrival pairs with the corpus, so every micro-batch
+          // really strips through its partner-pair checkpoint
+          (10L to 12L).map { id =>
+            persistedBy {
+              mem.addData(Seq((id, s"0123 4567-$span-8901 $id")))
+              q.processAllAvailable()
+            }._2
+          }
+        } finally {
+          q.stop()
+          q.awaitTermination()
+          // the termination event rides the async listener bus: drain it
+          // so the listener has released the capped index
+          org.apache.spark.graftshim.ListenerShim.waitUntilEmpty(spark.sparkContext)
+        }
+      }
+      // the first batch materializes the persisted capped index and nothing
+      // else; later batches register nothing — no per-batch checkpoint
+      // outlives its micro-batch
+      assert(perBatch.head.size == 1, s"$name: first batch kept ${perBatch.head}")
+      assert(perBatch.tail.forall(_.isEmpty), s"$name: later batches kept ${perBatch.tail}")
+      assert(leaked.isEmpty,
+        s"$name: capped index still cached after termination: ${leaked.mkString(", ")}")
+    }
   }
 
   test("batch/streaming parity: near-dup candidates vs a stored band index agree with minhashCandidatesAgainst") {

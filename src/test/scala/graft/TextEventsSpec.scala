@@ -481,6 +481,19 @@ class TextEventsSpec extends SparkSpec {
     } finally fs.delete(root, true)
   }
 
+  test("bpeMerges: each re-checkpoint frees the one it supersedes — a long run pins no more RDDs than a short one") {
+    val df = Seq(
+      "the quick brown fox", "the lazy dog sat", "the quick dog ran",
+      "a brown fox jumped", "the dog barked").toDF("text")
+    // one merge per round and a checkpoint every round: without the release
+    // each round would pin one more vocab snapshot for the session
+    def pinned(n: Int) = persistedBy(TextAnalysis.bpeMerges(df, "text", n,
+      checkpointEvery = 1, mergesPerRound = 1).collect())._2
+    val short = pinned(1)
+    val long = pinned(12)
+    assert(long.size <= short.size, s"short run pinned $short, long run pinned $long")
+  }
+
   test("bpeMerges batched rounds are exactly the sequential merge sequence on interacting corpora") {
     // every adjacent pair shares symbols with the top pair, forcing the
     // batch down to size 1 each round — and the counts tie everywhere,
@@ -851,7 +864,7 @@ class TextEventsSpec extends SparkSpec {
       (3L, "book", "a b c x"),    // shares "a b c" with web
       (4L, "raw", "q r s t")      // disjoint from both
     ).toDF("doc_id", "source", "text")
-    val out = TextAnalysis.sourceOverlap(docs, "source", "text", shingleN = 3)
+    val out = TextAnalysis.sourceOverlap(docs, "source", "text", shingleN = 3).df
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     // web={abc,bcd} (distinct over both docs), book={abc,bcx}: inter 1,
     // union 3 -> 1/3; raw overlaps nothing and must not appear
@@ -862,33 +875,33 @@ class TextEventsSpec extends SparkSpec {
     // distinct (group, shingle), never document pairs)
     val many = docs.unionAll(
       (10L to 40L).map(i => (i, "web", "a b c d")).toDF("doc_id", "source", "text"))
-    val out2 = TextAnalysis.sourceOverlap(many, "source", "text", 3)
+    val out2 = TextAnalysis.sourceOverlap(many, "source", "text", 3).df
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     assert(out2 == out, s"$out2 vs $out")
     intercept[IllegalArgumentException](
       TextAnalysis.sourceOverlap(docs, "source", "text", shingleN = 0))
   }
 
-  test("sourceOverlapManaged: same result, and the handle unpersists the checkpoint blocks") {
+  test("sourceOverlap: same result, and close() unpersists the checkpoint blocks") {
     val docs = Seq(
       (1L, "web", "a b c d"),
       (3L, "book", "a b c x")
     ).toDF("doc_id", "source", "text")
     val sc = spark.sparkContext
-    val preIds = sc.getPersistentRDDs.keySet
-    val (out, release) = TextAnalysis.sourceOverlapManaged(docs, "source", "text", 3)
-    val rows = out.collect()
+    val ((out, rows), ours) = persistedBy {
+      val out = TextAnalysis.sourceOverlap(docs, "source", "text", 3)
+      (out, out.df.collect())
+    }
     assert(rows.length == 1 && rows.head.getDouble(3) == 0.333333)
     // the construction registered exactly this operator's checkpoint RDDs
-    val ours = sc.getPersistentRDDs.keySet -- preIds
     assert(ours.nonEmpty, "localCheckpoint must register a persistent RDD")
-    release()
-    release() // idempotent
+    out.close()
+    out.close() // idempotent
     // unpersist(blocking = false) still removes the entry from the
     // persistence registry synchronously; only block deletion is async.
     // Keyed to OUR ids so parallel suites caching elsewhere can't flake it.
     assert((sc.getPersistentRDDs.keySet & ours).isEmpty,
-      s"release() must drop the checkpointed RDD ids $ours from the registry")
+      s"close() must drop the checkpointed RDD ids $ours from the registry")
   }
 
   test("ttrCurve: pooled ratio per length bucket is the exact sum quotient; NULL text drops") {

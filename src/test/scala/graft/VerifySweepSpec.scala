@@ -56,11 +56,12 @@ class VerifySweepSpec extends SparkSpec {
     try {
       val selected =
         SparkEntry.queries.view.filterKeys(Set("dedup_substring")).toMap
-      val errors = Verify.dump(spark, sfDir, out, selected, par = 1)
+      val (errors, added) = persistedBy(Verify.dump(spark, sfDir, out, selected, par = 1))
       assert(errors.isEmpty, s"queries failed: $errors")
       // dump-created storage swept, caller-owned storage intact
-      assert(spark.sparkContext.getPersistentRDDs.keySet == pre,
-        s"sweep touched caller storage or leaked its own: " +
+      assert(added.isEmpty, s"dump leaked its own storage: $added")
+      assert(pre.subsetOf(spark.sparkContext.getPersistentRDDs.keySet),
+        s"sweep touched caller storage: " +
           s"pre=$pre post=${spark.sparkContext.getPersistentRDDs.keySet}")
       assert(cached.count() == 100L)
       assert(checkpointed.count() == 50L)
