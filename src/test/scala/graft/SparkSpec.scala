@@ -19,13 +19,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** [[graft.tools.LocalSession]]'s configuration on local[2], plus the
+    * confs only the specs need. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
+    val s = graft.tools.LocalSession.builder("2")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // Spark 4.1's checksum checkpoint manager shells out (hadoop readLink)
       // on every state-store commit; the subprocess wedges under the forked
       // test JVM in this container. Plain checkpoint files are fine here.
