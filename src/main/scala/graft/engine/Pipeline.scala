@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Per-table pipeline composition (SURVEY §3.3): the reference's ~15 eager
@@ -32,7 +32,9 @@ object Pipeline {
     * look (the run report): `skew` = max/avg partition rows; 1.0 is
     * perfectly balanced, 10 means the slowest task did 10x the average
     * work and the stage ran at its pace. Counts NON-EMPTY partitions, as
-    * [[graft.operators.Profile.partitionStats]] does. */
+    * [[graft.operators.Profile.partitionStats]] does. It describes the
+    * staged frame, not the write: [[Sinks.publish]] coalesces each table
+    * to its byte-sized file count, so the write may run fewer tasks. */
   final case class LayoutStats(
       nPartitions: Int, minRows: Long, maxRows: Long, avgRows: Double, skew: Double)
 
@@ -58,9 +60,10 @@ object Pipeline {
     * Each row's QA outcome is decided ONCE: the enriched rows plus
     * [[Qa.FlagCol]] (the first failing rule's reason, or NULL) form one
     * CLASSIFIED frame ([[Qa.classify]]), and keep/rejects are two filters
-    * over it ([[Qa.split]]). One action per table — a count grouped by
-    * (partition, flag) — yields the input count, the rejects by reason and
-    * the layout of the staged frame the sinks read.
+    * over it ([[Qa.split]]). One action per table — one job, a pass that
+    * counts each partition's flags in its own task, with no exchange —
+    * materializes the cache and yields the input count, the rejects by
+    * reason and the layout of the staged frame the sinks read.
     *
     * CACHE CONTRACT: the returned [[TableResult]] holds the classified
     * frame persisted at MEMORY_AND_DISK because the count and both sink
@@ -99,13 +102,21 @@ object Pipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // A2-style forced count — the engine's only action besides the sinks.
     // append/calc/blank/enrich/QA are all row-preserving (first-match and
-    // the distinct-key ref join never multiply), so one aggregate over the
+    // the distinct-key ref join never multiply), so one pass over the
     // classified frame materializes the cache and yields, per (partition,
-    // flag): the input count, the rejects by reason and the layout.
-    val counts = classified
-      .groupBy(spark_partition_id(), col(Qa.FlagCol)).count()
+    // flag): the input count, the rejects by reason and the layout. Each
+    // task counts its own partition's flags, so the pass is one job with
+    // no exchange. The encoders are spelled out: deriving them from type
+    // tags loads Scala reflection, about a second in a fresh JVM.
+    val counts = classified.select(col(Qa.FlagCol)).as(Encoders.STRING)
+      .mapPartitions { flags =>
+        val byFlag = scala.collection.mutable.HashMap.empty[String, Long]
+        flags.foreach(f => byFlag(f) = byFlag.getOrElse(f, 0L) + 1L)
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        byFlag.iterator.map { case (f, n) => (pid, f, n) }
+      }(Encoders.tuple(Encoders.scalaInt, Encoders.STRING, Encoders.scalaLong))
       .collect()
-    val perPartition = counts.groupMapReduce(_.getInt(0))(_.getLong(2))(_ + _).values
+    val perPartition = counts.groupMapReduce(_._1)(_._3)(_ + _).values
     val inputRows = perPartition.sum
     val layout =
       if (perPartition.isEmpty) None
@@ -115,8 +126,8 @@ object Pipeline {
         Some(LayoutStats(perPartition.size, perPartition.min, perPartition.max,
           r2(avg), r2(perPartition.max / avg)))
       }
-    val rejectCounts = counts.filterNot(_.isNullAt(1))
-      .groupMapReduce(_.getString(1))(_.getLong(2))(_ + _)
+    val rejectCounts = counts.filter(_._2 != null)
+      .groupMapReduce(_._2)(_._3)(_ + _)
     val report = RunReport(name, inputRows, inputRows - rejectCounts.values.sum,
       rejectCounts, layout)
     val split = Qa.split(classified)

@@ -1241,35 +1241,40 @@ object TextAnalysis {
   /** Shared induction loop: returns (final piece costs, checkpointed
     * type table). Model state is DRIVER-side by design — every collect
     * here is bounded by `maxCandidates + |alphabet|` rows (a model
-    * artifact, the kmeansCentroids discipline), never by the corpus. */
+    * artifact, the kmeansCentroids discipline), never by the corpus.
+    * The substring checkpoint is released once the candidates are
+    * collected; the caller closes the type table once it is dead. */
   private def unigramTrain(
       df: DataFrame, textCol: String, vocabSize: Int, iters: Int,
-      maxPieceLen: Int, maxCandidates: Int): (Map[String, Long], DataFrame) = {
+      maxPieceLen: Int, maxCandidates: Int): (Map[String, Long], graft.engine.Materialized) = {
     require(vocabSize >= 1, s"vocabSize must be >= 1, got $vocabSize")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(maxPieceLen >= 1, s"maxPieceLen must be >= 1, got $maxPieceLen")
     require(maxCandidates >= 1, s"maxCandidates must be >= 1, got $maxCandidates")
     // reused iters+2 times — checkpoint once, never re-derive
-    val types = unigramTypes(df, textCol).localCheckpoint()
+    val pinned = graft.engine.Materialized.checkpoint(unigramTypes(df, textCol))
+    val types = pinned.df
     // candidate seeding: every substring occurrence of length
     // 1..maxPieceLen, weighted by word frequency — bounded per word by
     // len·maxPieceLen, one partial-aggregated shuffle over the types
-    val subs = types
+    val subs = graft.engine.Materialized.checkpoint(types
       .withColumn("i", explode(sequence(lit(1), length(col("word")))))
       .withColumn("l", explode(sequence(lit(1), lit(maxPieceLen))))
       .filter(col("i") + col("l") - 1 <= length(col("word")))
       .select(expr("substring(word, i, l)").as("piece"), col("freq"))
-      .groupBy("piece").agg(sum(col("freq")).as("cnt"))
-      .localCheckpoint()
+      .groupBy("piece").agg(sum(col("freq")).as("cnt")))
     // every single character is ALWAYS in the vocabulary (coverage: no
     // word may become unsegmentable); multi-char candidates are the
     // top maxCandidates by (count desc, piece asc) via TakeOrdered
-    val chars = subs.filter(length(col("piece")) === 1)
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    val multi = subs.filter(length(col("piece")) > 1)
-      .orderBy(col("cnt").desc, col("piece"))
-      .limit(maxCandidates)
-      .collect().map(r => r.getString(0) -> r.getLong(1))
+    val (chars, multi) =
+      try (
+        subs.df.filter(length(col("piece")) === 1)
+          .collect().map(r => r.getString(0) -> r.getLong(1)),
+        subs.df.filter(length(col("piece")) > 1)
+          .orderBy(col("cnt").desc, col("piece"))
+          .limit(maxCandidates)
+          .collect().map(r => r.getString(0) -> r.getLong(1)))
+      finally subs.close()
     val cand = (chars ++ multi).toMap
     val total = cand.values.sum.toDouble
     var cost: Map[String, Long] =
@@ -1314,7 +1319,7 @@ object TextAnalysis {
         p -> microNat((usage.getOrElse(p, 0L) + 1) / (totU + kept.size))).toMap
       it += 1
     }
-    (cost, types)
+    (cost, pinned)
   }
 
   /** Unigram-LM (SentencePiece-style) vocabulary induction — the
@@ -1351,7 +1356,7 @@ object TextAnalysis {
       maxPieceLen: Int = 4, maxCandidates: Int = 200): DataFrame = {
     val (cost, types) = unigramTrain(df, textCol, vocabSize, iters,
       maxPieceLen, maxCandidates)
-    val usage = types
+    val usage = types.df
       .select(col("freq"),
         explode(graft.plans.UnigramSegment.segment(
           col("word"), cost.toSeq.sortBy(_._1), maxPieceLen)).as("piece"))
@@ -1385,7 +1390,7 @@ object TextAnalysis {
       maxCandidates: Int = 200): DataFrame = {
     val (cost, types) = unigramTrain(df, textCol, vocabSize, iters,
       maxPieceLen, maxCandidates)
-    val tok = types.select(col("word"),
+    val tok = types.df.select(col("word"),
       size(graft.plans.UnigramSegment.segment(
         col("word"), cost.toSeq.sortBy(_._1), maxPieceLen))
         .cast("long").as("__nsym"))
@@ -1407,8 +1412,9 @@ object TextAnalysis {
   def unigramModel(
       df: DataFrame, textCol: String, vocabSize: Int, iters: Int = 2,
       maxPieceLen: Int = 4, maxCandidates: Int = 200): DataFrame = {
-    val (cost, _) = unigramTrain(df, textCol, vocabSize, iters,
+    val (cost, types) = unigramTrain(df, textCol, vocabSize, iters,
       maxPieceLen, maxCandidates)
+    types.close()
     df.sparkSession.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](
         java.util.Arrays.asList(cost.toSeq.sorted.map { case (p, c) =>

@@ -201,6 +201,48 @@ class PipelineSpec extends SparkSpec {
     r.unpersist()
   }
 
+  test("runTable: the report is one job whose plan holds no Exchange") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]()
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan): Unit
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    def listened[A](body: => A): A = {
+      org.apache.spark.graftshim.ListenerShim.waitUntilEmpty(sc)
+      plans.clear(); jobs.set(0)
+      spark.listenerManager.register(qeListener)
+      sc.addSparkListener(jobListener)
+      try { val a = body; org.apache.spark.graftshim.ListenerShim.waitUntilEmpty(sc); a }
+      finally { spark.listenerManager.unregister(qeListener); sc.removeSparkListener(jobListener) }
+    }
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def exchanges(p: org.apache.spark.sql.execution.SparkPlan) =
+      helper.collect(p) { case e: org.apache.spark.sql.execution.exchange.Exchange => e }
+
+    // no QA and no enrichment: building the cache needs no job of its
+    // own, so every job counted is the report's
+    val plain = listened(Pipeline.runTable(
+      name = "plain", download = download, template = template,
+      calcRules = Nil, blankToNullFields = Nil, enrich = None, qa = None))
+    assert(jobs.get == 1, s"report ran ${jobs.get} jobs")
+    assert(plans.size == 1 && exchanges(plans.peek).isEmpty, plans.peek.toString)
+    assert(plain.report.inputRows == 7 && plain.report.layout.nonEmpty)
+    plain.unpersist()
+
+    // with both QA rules the cache's own plan shuffles, the report's does not
+    val r = listened(run())
+    assert(plans.size == 1 && exchanges(plans.peek).isEmpty, plans.peek.toString)
+    r.unpersist()
+  }
+
   test("runAndPublish: the source is evaluated once across the count and every published write") {
     val acc = spark.sparkContext.longAccumulator("source-evals-publish")
     val tick = udf { (s: String) => acc.add(1L); s }.asNondeterministic()

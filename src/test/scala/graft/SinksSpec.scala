@@ -87,6 +87,44 @@ class SinksSpec extends SparkSpec {
     assert(!new java.io.File(dir + ".tmp").exists && !new java.io.File(dir + ".old").exists)
   }
 
+  private def partFiles(dir: String) =
+    new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
+
+  test("publish: a cached frame is written as ⌈bytes ÷ split size⌉ files, not one per partition") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sized").toString + "/staged"
+    val df = (1 to 4000).map(i => (i.toLong, s"payload-$i")).toDF("k", "v")
+      .repartition(16).persist()
+    try {
+      df.count() // the stats are now the cache's measured size
+      Sinks.publish(Map("t" -> df), dir)
+      assert(partFiles(s"$dir/t") == 1) // far under one 128 MB split
+      val back = spark.read.parquet(s"$dir/t")
+      assert(back.count() == 4000 && back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
+
+      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      val target = (bytes / 3 + 1).toLong // ⌈bytes ÷ target⌉ = 3
+      val key = "spark.sql.files.maxPartitionBytes"
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, target)
+      try Sinks.publish(Map("t" -> df), dir)
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(partFiles(s"$dir/t") == ((bytes + target - 1) / target).toInt)
+      assert(spark.read.parquet(s"$dir/t").count() == 4000)
+    } finally df.unpersist()
+  }
+
+  test("publish: a frame of unknown size keeps its partitioning") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-unsized").toString + "/staged"
+    val rows = spark.sparkContext.parallelize(
+      (1 to 100).map(i => org.apache.spark.sql.Row(i.toLong)), 5)
+    val df = spark.createDataFrame(rows,
+      org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField(
+        "k", org.apache.spark.sql.types.LongType))))
+    Sinks.publish(Map("t" -> df), dir)
+    assert(partFiles(s"$dir/t") == 5)
+    assert(spark.read.parquet(s"$dir/t").count() == 100)
+  }
+
   test("jdbc sink: overwrite truncates and reloads, append adds, round-trip exact") {
     val url = "jdbc:derby:memory:graftsink;create=true"
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")

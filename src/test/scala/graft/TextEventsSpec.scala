@@ -1116,6 +1116,22 @@ class TextEventsSpec extends SparkSpec {
       TextAnalysis.unigramVocab(docs, "text", vocabSize = 4, iters = 0))
   }
 
+  test("unigram training releases its checkpoints: unigramModel pins nothing, unigramVocab only the type table") {
+    val docs = Seq("ab ab c", "ab").toDF("text")
+    val (model, modelPins) = persistedBy(TextAnalysis.unigramModel(docs, "text",
+      vocabSize = 4, iters = 1, maxPieceLen = 2, maxCandidates = 10))
+    assert(modelPins.isEmpty, s"unigramModel left $modelPins pinned")
+    assert(model.count() == 4)
+    val (vocab, vocabPins) = persistedBy(TextAnalysis.unigramVocab(docs, "text",
+      vocabSize = 4, iters = 1, maxPieceLen = 2, maxCandidates = 10))
+    // the one pin left is the checkpointed type table the lazy result reads
+    val read = vocab.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(vocabPins.size == 1 && vocabPins.subsetOf(read), s"pinned $vocabPins, read $read")
+    assert(vocab.count() == 4)
+  }
+
   test("unigramApply + write/readUnigramModel: stored vocab applies with the unk fallback; round-trip identical") {
     val train = Seq("ab ab c", "ab").toDF("text")
     val vocab = TextAnalysis.unigramModel(train, "text", vocabSize = 4,
