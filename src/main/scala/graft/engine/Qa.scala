@@ -101,8 +101,9 @@ object Qa {
 
   /** Apply an ordered list of QA rules sequentially (rule N+1 sees only
     * rule N's keep side), returning the final keep and the accumulated
-    * rejects. `rejectSchema` seeds the reject table (the reference
-    * instantiates it from a template gdb, :147-148).
+    * rejects. `rejectSeed` seeds the reject table: the base schema plus
+    * the reason column (the reference instantiates it from a template
+    * gdb, :147-148).
     */
   def runRules(
       df: DataFrame,

@@ -40,10 +40,6 @@ object Schemas {
     "PNTS_CODE" -> StringType, "PNTS_DESCR" -> StringType,
     "SRCE_GAZETTED" -> StringType)
 
-  /** Reject-table schema: base schema + reason column (:147-148,256). */
-  def rejectSchema(base: StructType): StructType =
-    StructType(base.fields :+ StructField(Qa.FlagCol, StringType, nullable = true))
-
   // ---- fixture tables (FIXTURES.md §A) ------------------------------------
 
   val fixtureSchemas: Map[String, StructType] = Map(

@@ -37,24 +37,12 @@ object TextFns {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** JVM-loop twin of [[shingles]] — same output (empty array below n
-    * tokens), ~10x faster than the interpreted transform/slice lambda on
-    * wide corpora. Kept as the reference implementation the native
-    * expression is spec-checked against; operators use [[shinglesFast]]. */
-  def shinglesUdf(n: Int) = udf { (text: String) =>
-    if (text == null) Array.empty[String]
-    else {
-      val t = text.split(" ", -1)
-      if (t.length < n) Array.empty[String]
-      else Array.tabulate(t.length - n + 1)(i => t.slice(i, i + n).mkString(" "))
-    }
-  }
-
   /** Native codegen'd shingling ([[graft.plans.WordShingles]]): the
-    * operator-facing form — byte-identical to [[shinglesUdf]] on NON-NULL
-    * text (spec-pinned), but zero-copy byte windows inside whole-stage
-    * codegen instead of a UDF's serde + String split + per-token
-    * allocation. NULL semantics DIFFER: the native expression is standard
+    * operator-facing form — byte-identical to the JVM-loop UDF it
+    * replaced (kept with the specs as `ReferenceTwins.shinglesUdf`) on
+    * NON-NULL text (spec-pinned), but zero-copy byte windows inside
+    * whole-stage codegen instead of a UDF's serde + String split +
+    * per-token allocation. NULL semantics DIFFER: the native expression is standard
     * unary null-in/null-out (NULL text → NULL array, pinned in
     * WordShinglesSpec) where the UDF returns an empty array. Current call
     * sites tolerate either (explode drops both), but a caller branching on

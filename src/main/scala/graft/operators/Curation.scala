@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /** Dataset-curation operators for training-data pipelines: deterministic
   * split assignment and sequence-packing indices. Both are pure map-side /
@@ -29,8 +31,12 @@ object Curation {
     substring(md5(keyed), 1, 4)
   }
 
-  /** Driver-side rate → 4-hex threshold (see [[stratifiedSample]] for the
-    * g000 sentinel and rounding-gate rationale). */
+  /** Rate → 4-hex threshold, as a plan constant. An all-pass rate must
+    * beat every 4-hex-digit draw, but 65536 formats as the 5-char
+    * "10000", which sorts BELOW "ffff" as a string — so the sentinel is
+    * "g000" (g > f in every hex position), gated on the ROUNDED value, not
+    * r >= 1.0: rates in [0.9999924, 1.0) also round to 65536 and would
+    * otherwise silently keep ~6% instead of ~100%. */
   private def thresholdHex(r: Double): String = {
     val v = math.round(r * 65536).toInt
     if (v >= 65536) "g000" else f"$v%04x"
@@ -41,6 +47,107 @@ object Curation {
   private def thresholdCol(rate: Column): Column = {
     val v = round(rate * 65536).cast("long")
     when(v >= 65536, lit("g000")).otherwise(format_string("%04x", v))
+  }
+
+  /** The one salted-draw membership filter: a row stays when its
+    * [[hashDraw]] beats its stratum's threshold. Strata outside `rates`
+    * take `default`; with no default they take the NULL threshold, and
+    * `h < NULL` is never true, so they drop. NULL ids always drop (a
+    * NULL draw passes nothing). The rates are plan CONSTANTS: membership
+    * is a map-side when-chain — no join, no aggregate in the plan. */
+  private def drawFilter(
+      df: DataFrame, idCol: String, stratumCol: String, salt: String,
+      rates: Map[String, Double], default: Option[Double]): DataFrame =
+    df.filter(hashDraw(idCol, salt) < byStratum(stratumCol,
+      rates.map { case (s, r) => s -> lit(thresholdHex(r)) },
+      default.fold(lit(null).cast("string"))(r => lit(thresholdHex(r)))))
+
+  /** A per-stratum plan constant: `values(s)` on rows of stratum `s`,
+    * `default` on every other row (NULL strata included). */
+  private def byStratum(
+      stratumCol: String, values: Map[String, Column], default: Column): Column =
+    values.foldLeft(default) { case (rest, (s, v)) =>
+      when(col(stratumCol) === s, v).otherwise(rest)
+    }
+
+  /** The carve order of [[mixApply]]/[[mixApplyBudget]]: per stratum, by
+    * the full SALTED md5 of the id, ties by id — deterministic under
+    * relayout, row order and cluster size. */
+  private def drawOrder(idCol: String, stratumCol: String, salt: String): WindowSpec =
+    Window.partitionBy(col(stratumCol))
+      .orderBy(md5(concat(col(idCol).cast("string"), lit("|" + salt))), col(idCol))
+
+  /** HALF_UP at `places` decimals — the rounding the in-plan `round()`
+    * applies, so the DuckDB oracle's mirrored arithmetic lands on
+    * identical values. */
+  private def roundHalfUp(x: Double, places: Int): Double =
+    java.math.BigDecimal.valueOf(x).setScale(places, java.math.RoundingMode.HALF_UP)
+      .doubleValue()
+
+  /** A mixture recipe resolved against the data ([[resolveMix]]): each
+    * recipe stratum's selectable mass `avail` and the maximal scale
+    * `S = min_i(avail_i / w_i)` — the binding stratum keeps everything
+    * and every other keeps `S·w_i`, the largest mixture with those
+    * proportions the data supports without upsampling. */
+  private final class Mixture(weights: Map[String, Double], val avail: Map[String, Long]) {
+    // ONE IEEE division per stratum, compared exactly against the minimum:
+    // `binding` is bit-identical cross-engine, and ties all bind
+    private val perW = weights.map { case (s, w) => s -> avail(s) / w }
+    private val scale = perW.values.min
+    def binding(s: String): Boolean = perW(s) == scale
+    /** The expected kept mass at the maximal scale, `S·w`. */
+    def planned(s: String): Double = scale * weights(s)
+    /** The keep rate `planned / avail`, rounded to 6 decimals before any
+      * bucketing. */
+    def rate(s: String): Double = roundHalfUp(planned(s) / avail(s), 6)
+    /** The mass a carve keeps: the binding stratum's EXACT mass (`(n/w)·w`
+      * can round one ulp above n), `S·w` elsewhere. */
+    def budget(s: String): Double = if (binding(s)) avail(s).toDouble else planned(s)
+  }
+
+  /** The one home of the mixture-recipe decision, shared by every mixing
+    * verb: validate the weights (a non-empty whitelist, positive and
+    * finite, ratios only), then measure each recipe stratum's mass over
+    * `selectable` — rows, or `sum(sizeCol)` — in ONE eager ≤ |recipe|-row
+    * aggregate, so the verb's arithmetic is plain Scala over plan
+    * constants. Eager because the coverage guard must fire even when
+    * EVERY recipe stratum is absent (a mistyped table or column): an
+    * in-plan raise has no row to ride on an empty aggregate.
+    *
+    * A recipe stratum with no selectable rows, or no positive mass (all
+    * sizes NULL or zero), fails fast naming `verb` and the strata: the
+    * only mixture honoring a zero-mass component is empty, and silently
+    * renormalizing over the present strata would hand the caller
+    * plausible-looking but wrong proportions. A NEGATIVE size fails too,
+    * riding the same aggregate as a per-stratum minimum: it is no mass,
+    * and it would make [[mixApplyBudget]]'s cumulative cut non-monotone
+    * (a gap-ridden non-prefix set silently overshooting the budget). */
+  private def resolveMix(
+      verb: String, selectable: DataFrame, stratumCol: String,
+      weights: Map[String, Double], sizeCol: Option[String]): Mixture = {
+    require(weights.nonEmpty, s"$verb requires at least one stratum weight")
+    require(weights.values.forall(w => w > 0 && !w.isInfinite && !w.isNaN),
+      s"weights must be positive and finite: $weights")
+    val (mass, least) = sizeCol.fold((count(lit(1)), lit(0L)))(c =>
+      (sum(col(c)), min(col(c))))
+    val rows = selectable.groupBy(col(stratumCol))
+      .agg(mass.cast("long"), least.cast("long")).collect()
+    val negative = rows.filter(r => !r.isNullAt(2) && r.getLong(2) < 0L)
+      .map(r => String.valueOf(r.get(0)))
+    require(negative.isEmpty,
+      s"$verb: negative '${sizeCol.getOrElse("")}' values in strat" +
+        s"${if (negative.length == 1) "um" else "a"} " +
+        s"${negative.sorted.mkString(", ")} — a negative size is no mass " +
+        "and makes a cumulative budget cut non-monotone; fix the sizes first")
+    val avail = rows.filter(r => !r.isNullAt(1) && r.getLong(1) > 0L)
+      .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
+    val missing = weights.keys.filterNot(avail.contains)
+    require(missing.isEmpty,
+      s"$verb: recipe strata with no rows (or no measurable mass) in the " +
+        s"data: ${missing.toSeq.sorted.mkString(", ")} — the only mixture " +
+        "honoring a zero-mass component is empty; drop it from the recipe " +
+        "or fix the upstream filter")
+    new Mixture(weights, avail)
   }
 
   /** Deterministic train/val/test (or any) split assignment by CONTENT
@@ -95,18 +202,7 @@ object Curation {
       rates: Map[String, Double], defaultRate: Double = 0.0): DataFrame = {
     require((rates.values ++ Seq(defaultRate)).forall(r => r >= 0 && r <= 1),
       s"rates must be in [0,1]: $rates default=$defaultRate")
-    // an all-pass rate must beat every 4-hex-digit draw, but 65536 formats
-    // as the 5-char "10000", which sorts BELOW "ffff" as a string — the
-    // thresholdHex helper uses "g000" (g > f in every hex position) as the
-    // sentinel, and gates on the ROUNDED value, not r >= 1.0: rates in
-    // [0.9999924, 1.0) also round to 65536 and would otherwise silently
-    // keep ~6% instead of ~100%.
-    val h = hashDraw(idCol, salt = "")
-    val rate = rates.foldLeft(lit(thresholdHex(defaultRate))) {
-      case (rest, (stratum, r)) =>
-        when(col(stratumCol) === stratum, lit(thresholdHex(r))).otherwise(rest)
-    }
-    df.filter(h < rate)
+    drawFilter(df, idCol, stratumCol, salt = "", rates, Some(defaultRate))
   }
 
   /** Temperature-balanced downsampling across strata (the standard
@@ -156,151 +252,64 @@ object Curation {
     * matches an explicit mixture recipe (`weights`, e.g. 50% web / 30%
     * code / 20% academic) — the "data mixture" step of a training run,
     * where [[temperatureSample]]'s smoothing is replaced by exact target
-    * shares. The achievable scale is maximal: `S = min_i(n_i / w_i)` sets
-    * the binding stratum to keep everything and every other stratum's
-    * keep rate to `S·w_i / n_i`, so expected kept counts are exactly
-    * `S·w_i` — the largest mixture with those proportions the data can
-    * support without upsampling.
+    * shares. Each stratum keeps its [[resolveMix]] rate `S·w_i / n_i` at
+    * the maximal scale `S = min_i(n_i / w_i)`, so expected kept counts
+    * are exactly `S·w_i` and the binding stratum keeps everything.
     *
     * Strata NOT named in `weights` are dropped (a mixture recipe is a
-    * whitelist); weights need not sum to 1 (only ratios matter). A recipe
-    * stratum with NO rows in the data fails fast: the only mixture
-    * consistent with a zero-row component is empty, and silently
-    * renormalizing over the present strata would hand the caller
-    * plausible-looking but wrong proportions.
+    * whitelist), and so are NULL strata; weights need not sum to 1 (only
+    * ratios matter). A recipe stratum with NO rows in the data fails
+    * fast. NULL ids count toward availability but never pass the draw.
     *
     * Membership is the md5 draw SALTED with "mix", so this operator
     * composes with [[assignSplits]]/[[stratifiedSample]] (split first,
     * then mix the train split) — an unsalted draw downstream of another
     * threshold filter would nest thresholds instead of compounding rates
-    * (see [[hashDraw]]). Rates round to 6 decimals before bucketing and
-    * the per-stratum thresholds ride one tiny broadcast aggregate. */
+    * (see [[hashDraw]]). ONE pass over the corpus: the counts aggregate
+    * is collected once, and the rates ride the plan as constants. */
   def mixStrata(
       df: DataFrame, idCol: String, stratumCol: String,
       weights: Map[String, Double]): DataFrame = {
-    require(weights.nonEmpty, "mixStrata requires at least one stratum weight")
-    require(weights.values.forall(w => w > 0 && !w.isInfinite && !w.isNaN),
-      s"weights must be positive and finite: $weights")
-    // ONE pass over the corpus: the per-stratum counts (≤ |weights| rows)
-    // are collected once and the scale/rate/threshold arithmetic runs
-    // driver-side — the rates are then plan CONSTANTS, so membership is a
-    // map-side when-chain like [[stratifiedSample]]'s, with no join and no
-    // second execution of the counts aggregate inside the filter plan (the
-    // previous broadcast-join shape re-ran the uncached aggregate — a
-    // second full scan at scale).
-    val countByStratum = df.filter(col(stratumCol).isin(weights.keys.toSeq: _*))
-      .groupBy(col(stratumCol)).agg(count(lit(1)).as("__n"))
-      .collect().map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
-    val absent = weights.keys.filterNot(countByStratum.contains)
-    require(absent.isEmpty,
-      s"mixStrata: recipe strata with no rows in the data: ${absent.mkString(", ")} — " +
-        "the only mixture honoring a zero-row component is empty; drop it " +
-        "from the recipe or fix the upstream filter")
-    val scale = weights.map { case (s, wt) => countByStratum(s) / wt }.min
-    // same HALF_UP-at-6-decimals rounding the in-plan round() applied, so
-    // the DuckDB oracle's mirrored arithmetic lands on identical thresholds
-    def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
-        .doubleValue()
-    val h = hashDraw(idCol, salt = "mix")
-    val thr = weights.foldLeft(lit(null).cast("string")) {
-      case (rest, (stratum, wt)) =>
-        val rate = round6(scale * wt / countByStratum(stratum))
-        when(col(stratumCol) === stratum, lit(thresholdHex(rate))).otherwise(rest)
-    }
-    // non-recipe and NULL strata fall through to the NULL threshold, and
-    // h < NULL is never true — same drop semantics as the old inner join
-    df.filter(h < thr)
+    val mix = resolveMix("mixStrata",
+      df.filter(col(stratumCol).isin(weights.keys.toSeq: _*)),
+      stratumCol, weights, sizeCol = None)
+    drawFilter(df, idCol, stratumCol, salt = "mix",
+      weights.map { case (s, _) => s -> mix.rate(s) }, default = None)
   }
 
   /** The PLANNING read for [[mixStrata]]: given the same mixture recipe,
     * report — without sampling anything — what the maximal mixture
     * achieves on this corpus and which stratum binds it. One row per
-    * recipe stratum: `available` (rows, or `sum(sizeCol)` for
+    * recipe stratum, sorted: `available` (rows, or `sum(sizeCol)` for
     * token-/char-weighted planning), the echoed `weight`, `planned`
-    * (`S·w`, the expected kept mass at the maximal scale
-    * `S = min_i(available_i / w_i)`), `rate` (`planned / available`,
-    * rounded to the same 6 decimals [[mixStrata]] buckets with), and
-    * `binding` (1 on the stratum whose availability sets S — the one a
-    * user must GROW to scale the whole mixture; ties all flag). The
-    * read a 100 TB mixture job takes before paying for it: "your recipe
-    * yields 1.9 B of the 10 B available tokens, bound by `code`" is the
-    * difference between re-negotiating the recipe and discovering the
-    * shortfall after the run.
+    * (`S·w`, the expected kept mass, rounded to 4 decimals), `rate` (the
+    * 6-decimal rate [[mixStrata]] buckets with) and `binding` (1 on the
+    * stratum whose availability sets S — the one a user must GROW to
+    * scale the whole mixture; ties all flag). The read a 100 TB mixture
+    * job takes before paying for it: "your recipe yields 1.9 B of the
+    * 10 B available tokens, bound by `code`" is the difference between
+    * re-negotiating the recipe and discovering the shortfall after the
+    * run.
     *
-    * Same contracts as [[mixStrata]]: weights are a whitelist, positive
-    * and finite, ratios-only; a recipe stratum with no rows (or
-    * all-NULL sizes) fails fast rather than planning a zero-row
-    * mixture — including when EVERY stratum is absent (a mistyped table
-    * or column), which is why the ≤ |recipe|-row aggregate collects
-    * eagerly like [[mixStrata]]'s counts: an in-plan guard has no row
-    * to ride on an empty aggregate and would return a silently EMPTY
-    * plan instead. Numeric contract: `scale` and `binding` come from
-    * ONE IEEE division per stratum (`available / weight`) compared
-    * exactly against the minimum — bit-identical cross-engine;
-    * `planned` rounds to 4 decimals, `rate` to 6 (the same HALF_UP the
-    * in-plan round applies, so the DuckDB mirror lands identically).
-    *
-    * Scale shape: one partial-aggregated groupBy collapsing the corpus
-    * to ≤ |recipe| driver rows; the plan arithmetic is driver-side over
-    * that bounded map — the corpus is scanned once, nothing else
-    * shuffles. */
+    * Same contracts as [[mixStrata]] ([[resolveMix]]): a recipe stratum
+    * with no rows, all-NULL sizes or a negative size fails fast rather
+    * than planning a wrong mixture. Scale shape: the one eager
+    * ≤ |recipe|-row aggregate; the returned plan is a local relation. */
   def mixPlan(
       df: DataFrame, stratumCol: String,
       weights: Map[String, Double],
       sizeCol: Option[String] = None): DataFrame = {
-    require(weights.nonEmpty, "mixPlan requires at least one stratum weight")
-    require(weights.values.forall(w => w > 0 && !w.isInfinite && !w.isNaN),
-      s"weights must be positive and finite: $weights")
-    val mass = sizeCol.map(c => sum(col(c))).getOrElse(count(lit(1)))
-    // EAGER, the mixStrata precedent: the aggregate is ≤ |recipe| rows
-    // and the coverage guard must fire even when EVERY recipe stratum is
-    // absent — an in-plan raise has no row to ride on an empty aggregate,
-    // and a silently EMPTY plan for a mistyped table/column is exactly
-    // the failure this read exists to make loud
-    val avail = df.filter(col(stratumCol).isin(weights.keys.toSeq: _*))
-      .groupBy(col(stratumCol).as("stratum"))
-      .agg(mass.cast("long").as("available"))
-      .collect()
-      .flatMap(r => if (r.isNullAt(1)) None
-        else Some(String.valueOf(r.get(0)) -> r.getLong(1)))
-      .toMap
-    // a stratum whose sizes are all NULL collected a NULL mass — no
-    // measurable size, same failure as absent
-    val missing = weights.keys.filterNot(avail.contains)
-    require(missing.isEmpty,
-      s"mixPlan: recipe strata with no rows (or no measurable size) in " +
-        s"the data: ${missing.toSeq.sorted.mkString(", ")} — the only " +
-        "mixture honoring a zero-mass component is empty; drop it from " +
-        "the recipe or fix the upstream filter")
-    val perW = weights.map { case (s, w) => s -> avail(s).toDouble / w }
-    val scale = perW.values.min
-    def round6(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP)
-        .doubleValue()
-    def round4(x: Double): Double =
-      java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP)
-        .doubleValue()
+    val mix = resolveMix("mixPlan",
+      df.filter(col(stratumCol).isin(weights.keys.toSeq: _*)),
+      stratumCol, weights, sizeCol)
     val rows = weights.keys.toSeq.sorted.map { s =>
-      val w = weights(s)
-      org.apache.spark.sql.Row(s, avail(s), w,
-        round4(scale * w), round6(scale * w / avail(s)),
-        if (perW(s) == scale) 1 else 0)
+      Row(s, mix.avail(s), weights(s), roundHalfUp(mix.planned(s), 4),
+        mix.rate(s), if (mix.binding(s)) 1 else 0)
     }.toArray
-    graft.operators.Similarity.localFrame(df.sparkSession, rows,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("stratum",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("available",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("weight",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("planned",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("rate",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("binding",
-          org.apache.spark.sql.types.IntegerType))))
+    Similarity.localFrame(df.sparkSession, rows, StructType(Seq(
+      StructField("stratum", StringType), StructField("available", LongType),
+      StructField("weight", DoubleType), StructField("planned", DoubleType),
+      StructField("rate", DoubleType), StructField("binding", IntegerType))))
   }
 
   /** Materialize [[mixPlan]]'s maximal mixture with EXACT per-stratum
@@ -308,84 +317,55 @@ object Curation {
     * [[mixStrata]] samples by hash-threshold (counts are expected values,
     * right for the 100 TB pipeline where ±√n jitter is irrelevant and
     * membership must be a pure map-side filter), this emits exactly
-    * `take_i` rows per stratum — the contract an eval-set or
-    * fixed-budget carve needs, where "50/30/20" must mean the delivered
-    * file counts, not their expectation. `take_i = available_i` on the
-    * BINDING stratum (kept whole — exact IEEE equality with the scale
-    * minimum, [[mixPlan]]'s `binding` arithmetic) and
-    * `min(available_i, floor(S·w_i))` elsewhere (the min guards the
-    * one-ulp case where `(n/w)·w` rounds above n).
+    * `take_i = min(available_i, floor(budget_i))` rows per stratum — the
+    * binding stratum whole, `floor(S·w_i)` elsewhere ([[Mixture]]) — the
+    * contract an eval-set or fixed-budget carve needs, where "50/30/20"
+    * must mean the delivered file counts, not their expectation.
     *
     * Selection per stratum is the [[sampleFixed]] machinery: the take_i
-    * rows with the smallest SALTED md5 draw (salt "mixapply", so the
-    * carve composes with splits/samples upstream — the [[hashDraw]]
-    * nesting rationale), ties by id — deterministic under relayout,
-    * row order, and cluster size, and mostly stable as the corpus
-    * grows (a member leaves only when displaced or when the plan
-    * itself moves). Strata outside the recipe drop (whitelist); NULL
-    * ids are EXCLUDED from both the availability counts and the carve
-    * (no stable draw — the [[sampleFixed]] NULL stance), so the binding
-    * stratum's "kept whole" is exact over selectable rows. A recipe
-    * stratum with no rows fails fast ([[mixStrata]]'s contract).
+    * rows first in the SALTED draw order (salt "mixapply", so the carve
+    * composes with splits/samples upstream — the [[hashDraw]] nesting
+    * rationale), ties by id — deterministic under relayout, and mostly
+    * stable as the corpus grows. Strata outside the recipe drop
+    * (whitelist); NULL ids are EXCLUDED from both the availability
+    * counts and the carve (no stable draw — the [[sampleFixed]] NULL
+    * stance), so the binding stratum's "kept whole" is exact over
+    * selectable rows. A recipe stratum with no rows fails fast.
     *
-    * Scale shape: ONE eager ≤|recipe|-row counts aggregate (the
-    * [[mixStrata]] precedent — the takes become plan CONSTANTS), then
-    * one row_number window per stratum whose `rank <= lit(max take)`
-    * conjunct Spark rewrites to WindowGroupLimit — map tasks forward at
-    * most max-take rows per stratum to the shuffle, never the corpus
-    * (the [[Profile.sampleKPerGroup]] plan shape, PlanSpec-pinned); the
-    * exact per-stratum cut is the companion when-chain conjunct. No
-    * global sort, no TakeOrdered-per-stratum re-scan. Takes are
-    * DRIVER-MERGEABLE sizes by construction (a carve, not a split) —
-    * the window partition holding a stratum sees available_i rows
-    * regardless, same as any per-stratum operator. */
+    * Scale shape: the one eager ≤|recipe|-row counts aggregate (the takes
+    * become plan CONSTANTS), then one row_number window per stratum whose
+    * `rank <= lit(max take)` conjunct Spark rewrites to WindowGroupLimit —
+    * map tasks forward at most max-take rows per stratum to the shuffle,
+    * never the corpus (the [[Profile.sampleKPerGroup]] plan shape,
+    * PlanSpec-pinned); the exact per-stratum cut is the companion
+    * when-chain conjunct. Takes are carve-sized by construction (a
+    * carve, not a split). */
   def mixApply(
       df: DataFrame, idCol: String, stratumCol: String,
       weights: Map[String, Double], salt: String = "mixapply"): DataFrame = {
-    require(weights.nonEmpty, "mixApply requires at least one stratum weight")
-    require(weights.values.forall(w => w > 0 && !w.isInfinite && !w.isNaN),
-      s"weights must be positive and finite: $weights")
     val selectable = df.filter(
       col(stratumCol).isin(weights.keys.toSeq: _*) && col(idCol).isNotNull)
-    val countByStratum = selectable
-      .groupBy(col(stratumCol)).agg(count(lit(1)).as("__n"))
-      .collect().map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
-    val absent = weights.keys.filterNot(countByStratum.contains)
-    require(absent.isEmpty,
-      s"mixApply: recipe strata with no selectable rows in the data: " +
-        s"${absent.toSeq.sorted.mkString(", ")} — the only mixture honoring " +
-        "a zero-row component is empty; drop it from the recipe or fix " +
-        "the upstream filter")
-    val perW = weights.map { case (s, w) => s -> countByStratum(s) / w }
-    val scale = perW.values.min
-    val take = weights.map { case (s, w) =>
-      s -> (if (perW(s) == scale) countByStratum(s)
-            else math.min(countByStratum(s), math.floor(scale * w).toLong))
-    }
-    val draw = md5(concat(col(idCol).cast("string"), lit("|" + salt)))
-    val rn = row_number().over(Window.partitionBy(col(stratumCol))
-      .orderBy(draw, col(idCol)))
-    val lim = take.foldLeft(lit(0L)) { case (rest, (s, n)) =>
-      when(col(stratumCol) === s, lit(n)).otherwise(rest)
+    val mix = resolveMix("mixApply", selectable, stratumCol, weights, sizeCol = None)
+    val take = weights.map { case (s, _) =>
+      s -> math.min(mix.avail(s), math.floor(mix.budget(s)).toLong)
     }
     // the literal conjunct is what InferWindowGroupLimit keys on (a
     // when-chain bound is not extractable); the when-chain then applies
     // the exact per-stratum cut on the ≤ max-take survivors
-    selectable.withColumn("__rn", rn)
-      .filter(col("__rn") <= lit(take.values.max) && col("__rn") <= lim)
+    selectable.withColumn("__rn", row_number().over(drawOrder(idCol, stratumCol, salt)))
+      .filter(col("__rn") <= lit(take.values.max) && col("__rn") <=
+        byStratum(stratumCol, take.map { case (s, n) => s -> lit(n) }, lit(0L)))
       .drop("__rn")
   }
 
   /** [[mixStrata]] against a STORED [[mixPlan]] — the
     * learn-once/apply-many verb for the mixing family: plan the mixture
     * once on a corpus snapshot (persist the plan table), then apply its
-    * RATES as a pure map-side threshold filter to any batch — including
-    * a STREAMING one: the plan collapses to plan constants at
+    * RATES as the same map-side "mix"-salted [[drawFilter]] to any batch
+    * — including a STREAMING one: the plan collapses to plan constants at
     * composition time, so the filter is stateless and
-    * `readStream.transform(...)` composes directly, no sink machinery.
-    * On the same corpus the output is IDENTICAL to
-    * [[mixStrata]] with the plan's recipe (both round rates to 6
-    * decimals before bucketing and draw with the "mix" salt — the
+    * `readStream.transform(...)` composes directly. On the same corpus
+    * the output is IDENTICAL to [[mixStrata]] with the plan's recipe (the
     * registered differential pins the equality); on a LATER batch it
     * applies the frozen rates, which is exactly what a reproducible
     * mixture wants (re-planning per batch would let the recipe drift
@@ -414,34 +394,30 @@ object Curation {
     require(rates.nonEmpty, "mixStrataFromPlan: the plan has no strata")
     require(rates.values.forall(r => r >= 0 && r <= 1 && !r.isNaN),
       s"plan rates must be in [0, 1]: $rates")
-    val h = hashDraw(idCol, salt = "mix")
-    val thr = rates.foldLeft(lit(null).cast("string")) {
-      case (rest, (stratum, r)) =>
-        when(col(stratumCol) === stratum, lit(thresholdHex(r))).otherwise(rest)
-    }
-    df.filter(h < thr)
+    drawFilter(df, idCol, stratumCol, salt = "mix", rates, default = None)
   }
 
   /** [[mixApply]] by MASS instead of rows — the token-budget carve: a
     * mixture recipe at 100 TB is a TOKEN budget ("50% web / 30% code /
     * 20% academic of a 1 B-token run"), and delivering it by row count
     * silently skews toward short-document strata. Per stratum the
-    * maximal plan is [[mixPlan]]'s with `sizeCol` mass
-    * (`S = min_i(mass_i / w_i)`, budget_i = S·w_i, the binding stratum's
-    * budget is its EXACT mass so it keeps everything), and the carve is
-    * the greedy PREFIX of the salted-md5 draw order whose cumulative
-    * size stays within the budget — deterministic under relayout,
-    * undershooting by less than one document per stratum (documents
-    * don't split; [[graft.operators.TextAnalysis.chunkDocs]] upstream if
-    * sub-document granularity matters).
+    * maximal plan is [[mixPlan]]'s with `sizeCol` mass (budget_i = S·w_i,
+    * the binding stratum's budget its EXACT mass so it keeps
+    * everything), and the carve is the greedy PREFIX of the salted-md5
+    * draw order whose cumulative size stays within the budget —
+    * deterministic under relayout, undershooting by less than one
+    * document per stratum (documents don't split;
+    * [[graft.operators.TextAnalysis.chunkDocs]] upstream if sub-document
+    * granularity matters).
     *
     * Exclusions, all loud in the scaladoc because each skews a budget:
     * NULL ids (no stable draw — the [[mixApply]] contract), NULL sizes
     * (no measurable mass — a NULL would poison every later cumulative
     * sum in its stratum), off-recipe strata (whitelist). A recipe
-    * stratum with no selectable mass fails fast ([[mixStrata]]).
+    * stratum with no selectable mass, or a negative size, fails fast
+    * ([[resolveMix]]).
     *
-    * Scale shape: one eager ≤|recipe|-row mass aggregate (budgets
+    * Scale shape: the one eager ≤|recipe|-row mass aggregate (budgets
     * become plan constants), then ONE shuffle on the stratum key with a
     * per-stratum ordered cumulative-sum window. Unlike [[mixApply]]'s
     * rank cut there is no WindowGroupLimit rewrite — a budget cut needs
@@ -452,54 +428,15 @@ object Curation {
   def mixApplyBudget(
       df: DataFrame, idCol: String, stratumCol: String, sizeCol: String,
       weights: Map[String, Double], salt: String = "mixapply"): DataFrame = {
-    require(weights.nonEmpty, "mixApplyBudget requires at least one stratum weight")
-    require(weights.values.forall(w => w > 0 && !w.isInfinite && !w.isNaN),
-      s"weights must be positive and finite: $weights")
     val selectable = df.filter(
       col(stratumCol).isin(weights.keys.toSeq: _*) &&
         col(idCol).isNotNull && col(sizeCol).isNotNull)
-    // min rides the same eager aggregate: a NEGATIVE size makes the
-    // cumulative sum non-monotone, so the "greedy prefix" filter would
-    // select a gap-ridden non-prefix set and silently overshoot the
-    // budget — fail loudly instead (zero sizes are fine: a free
-    // document never breaks monotonicity)
-    val stats = selectable
-      .groupBy(col(stratumCol))
-      .agg(sum(col(sizeCol)).cast("long").as("__m"),
-        min(col(sizeCol)).cast("long").as("__min"))
-      .collect()
-    val negative = stats.filter(_.getLong(2) < 0L)
-      .map(r => String.valueOf(r.get(0)))
-    require(negative.isEmpty,
-      s"mixApplyBudget: negative '$sizeCol' values in strat" +
-        s"${if (negative.length == 1) "um" else "a"} " +
-        s"${negative.sorted.mkString(", ")} — a negative size makes the " +
-        "cumulative budget cut non-monotone; fix the sizes first")
-    val massByStratum =
-      stats.map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
-    val absent = weights.keys.filterNot(massByStratum.contains)
-    require(absent.isEmpty,
-      s"mixApplyBudget: recipe strata with no selectable mass in the data: " +
-        s"${absent.toSeq.sorted.mkString(", ")} — the only mixture honoring " +
-        "a zero-mass component is empty; drop it from the recipe or fix " +
-        "the upstream filter")
-    val perW = weights.map { case (s, w) => s -> massByStratum(s) / w }
-    val scale = perW.values.min
-    // the binding stratum's budget is its EXACT integer mass (the
-    // one-ulp (m/w)·w guard, mixApply's floor rationale in mass form)
-    val budget: Map[String, Double] = weights.map { case (s, w) =>
-      s -> (if (perW(s) == scale) massByStratum(s).toDouble else scale * w)
-    }
-    val draw = md5(concat(col(idCol).cast("string"), lit("|" + salt)))
+    val mix = resolveMix("mixApplyBudget", selectable, stratumCol, weights, Some(sizeCol))
     val cum = sum(col(sizeCol).cast("long")).over(
-      Window.partitionBy(col(stratumCol)).orderBy(draw, col(idCol))
-        .rowsBetween(Long.MinValue, 0))
-    val lim = budget.foldLeft(lit(null).cast("double")) {
-      case (rest, (s, b)) =>
-        when(col(stratumCol) === s, lit(b)).otherwise(rest)
-    }
+      drawOrder(idCol, stratumCol, salt).rowsBetween(Long.MinValue, 0))
     selectable.withColumn("__cum", cum)
-      .filter(col("__cum") <= lim)
+      .filter(col("__cum") <= byStratum(stratumCol,
+        weights.map { case (s, _) => s -> lit(mix.budget(s)) }, lit(null).cast("double")))
       .drop("__cum")
   }
 

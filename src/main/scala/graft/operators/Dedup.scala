@@ -71,7 +71,8 @@ object Dedup {
     * references the array column more than once (or is collapsed into one
     * that does) re-invokes the UDF per reference — call sites that fan the
     * array out into k columns must add an optimizer fence
-    * (`.asNondeterministic()`, see [[minhashSignatures]]).
+    * (`.asNondeterministic()`: CollapseProject inlines a deterministic
+    * expression once per reference).
     * Returns null when the doc has no shingles -> explode emits nothing ->
     * the doc matches no one, same as the oracle's empty-list list_min. */
   private def bandsUdf(numHashes: Int, bands: Int, shingleN: Int, family: HashFamily) = {
@@ -102,28 +103,6 @@ object Dedup {
         }
       }
     }
-  }
-
-  /** Per-doc MinHash signature columns `mh_0..mh_{k-1}` over word n-gram
-    * shingles (bands of width 1 from [[bandsUdf]]). Map-side only.
-    * The UDF is marked nondeterministic as an optimizer fence: the k
-    * `element_at` projections would otherwise be collapsed onto the UDF
-    * call, re-evaluating the whole signature computation k times per row
-    * (CollapseProject inlines deterministic expressions per reference). */
-  def minhashSignatures(
-      df: DataFrame,
-      textCol: String,
-      numHashes: Int,
-      shingleN: Int = 3,
-      family: HashFamily = Fnv64Family): DataFrame = {
-    val arr = bandsUdf(numHashes, numHashes, shingleN, family)
-      .asNondeterministic()(col(textCol))
-    // fan before the signature UDF (graft.engine.Fan scaladoc — exact
-    // hash output, identity at production scan sizes)
-    val withArr = graft.engine.Fan.out(df).withColumn("__mhs", arr)
-    (0 until numHashes).foldLeft(withArr) { (d, i) =>
-      d.withColumn(s"mh_$i", element_at(col("__mhs"), i + 1))
-    }.drop("__mhs")
   }
 
   /** Exploded (doc_id, band_idx, band_val) band rows — the STORED form of
@@ -203,7 +182,7 @@ object Dedup {
     * and pay in candidate-join fanout, and the curve says where that
     * stops being worth it on real data. The signature is computed ONCE
     * (the numHashes minima array, projected so the per-config regrouping
-    * never re-evaluates it — the kgramHashes HOF lesson) and every
+    * never re-evaluates it — the k-gram HOF lesson) and every
     * configuration's bands derive from it map-side by consecutive
     * regrouping, exactly [[bandsUdf]]'s slice-and-join arithmetic; ONE
     * tagged (cfg, band_idx, band_val) self-join answers all
@@ -1253,41 +1232,13 @@ object Dedup {
     * what makes the streaming twin ([[graft.streaming.DocStreams]])
     * legal in append mode: no window over the stream.
     *
-    * [[kgramHashes]]/[[winnowFromGrams]] below are the interpreted HOF
-    * REFERENCE implementation the expression is spec-pinned against —
-    * kept because an independently-derived second path is the test, but
-    * never on the production path (~10 s/MB interpreted: a per-position
-    * md5 eval allocating a 32-char hex string, plus an O(n·w) window
-    * pass copying a fresh w-slice per window). If you do use them, the
-    * gram array MUST be a projected column between the two transforms: a
-    * higher-order lambda re-evaluates its whole argument subtree per
-    * element, so inlining the gram transform inside `slice` recomputes
-    * every md5 once PER WINDOW — O(n²) hashing per document (measured: a
-    * sub-minute sf0.1 job ran past 10 minutes). */
-  def kgramHashes(textCol: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), (length(textCol) - k).cast("int")),
-      i => md5(textCol.substr(i + 1, lit(k))))
-
-  /** Distinct winnowing minima over a MATERIALIZED gram-hash array column
-    * (complete windows only; a doc with fewer than `w` grams keeps its
-    * single truncated window rather than vanishing). See [[kgramHashes]]
-    * for why the input must be an attribute, not the gram expression. */
-  def winnowFromGrams(gramsCol: Column, w: Int): Column =
-    array_distinct(transform(
-      sequence(lit(0), greatest(size(gramsCol) - w, lit(0))),
-      s => array_min(slice(gramsCol, s + 1, lit(w)))))
-
-  /** The winnowing selection exploded to (id, h) rows over a corpus.
-    *
-    * Fingerprinting runs through the native codegen'd
-    * [[graft.plans.WinnowMinima]] expression — one raw-byte md5 per k-gram
-    * plus a monotonic-deque O(n) sliding minimum — not the interpreted
-    * [[kgramHashes]]/[[winnowFromGrams]] HOF chain (kept as the reference
-    * implementation WinnowMinimaSpec pins the expression against; the HOF
-    * path measured ~10 s per MB of text, the dominant CPU cost of the
-    * whole exact-substring family). Output is byte-identical, so every
-    * consumer's oracle SQL is unchanged. */
+    * The selection exploded to (id, h) rows over a corpus. The native
+    * expression replaced an interpreted HOF chain (a per-position md5
+    * plus an O(n·w) window pass, ~10 s per MB of text, the dominant CPU
+    * cost of the whole exact-substring family); that chain is kept with
+    * the specs as the reference twin WinnowMinimaSpec pins the expression
+    * against. Output is byte-identical, so every consumer's oracle SQL is
+    * unchanged. */
   def winnowFingerprints(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 16, w: Int = 8): DataFrame = {
@@ -2116,16 +2067,19 @@ object Dedup {
     // the benchmark fingerprint dump feeds the df cap twice (the count
     // aggregate and the semi-join back) — materialize the tiny
     // benchmark-sized frame once instead of running the winnow kernel
-    // twice over the benchmark
-    val fps = capFingerprintIndex(
-      winnowFingerprints(benchmark, idCol, textCol, k, w).localCheckpoint(),
-      maxFingerprintDf)
-    val grams = graft.engine.Fan.out(benchmark
-        .filter(col(textCol).isNotNull && length(col(textCol)) >= k))
-      .select(col(idCol).as("id"),
-        explode(graft.plans.WinnowMinima.minima(col(textCol), k, 1)).as("h"))
-    stripBenchmarkSpansIndexed(corpus, fps, grams, idCol, textCol,
-      k, w, minShared).df
+    // twice over the benchmark. Only the eager partner-pair checkpoint
+    // reads it, so it is released as soon as that checkpoint exists
+    val benchFps = Materialized.checkpoint(
+      winnowFingerprints(benchmark, idCol, textCol, k, w))
+    try {
+      val grams = graft.engine.Fan.out(benchmark
+          .filter(col(textCol).isNotNull && length(col(textCol)) >= k))
+        .select(col(idCol).as("id"),
+          explode(graft.plans.WinnowMinima.minima(col(textCol), k, 1)).as("h"))
+      stripBenchmarkSpansIndexed(corpus,
+        capFingerprintIndex(benchFps.df, maxFingerprintDf), grams,
+        idCol, textCol, k, w, minShared).df
+    } finally benchFps.close()
   }
 
   /** [[stripBenchmarkSpans]] against an ALREADY-MATERIALIZED benchmark
@@ -2197,32 +2151,35 @@ object Dedup {
     // cross-benchmark id collisions cannot alias
     def tagged(b: String, id: Column) =
       concat(lit(b + "\u0001"), id.cast("string"))
-    val fps = benchmarks.map { case (b, df) =>
-      // per-benchmark fingerprint dump materialized once: the df cap
-      // consumes it twice (count aggregate + semi-join back), and the
-      // frame is benchmark-sized (tiny) — the stripBenchmarkSpans
-      // rationale, per benchmark
-      capFingerprintIndex(
-        winnowFingerprints(df, idCol, textCol, k, w).localCheckpoint(),
-        maxFingerprintDf)
-        .select(tagged(b, col("id")).as("corpus_id"), col("h"))
-    }.reduce(_ unionByName _)
+    // per-benchmark fingerprint dump materialized once: the df cap
+    // consumes it twice (count aggregate + semi-join back), and the frame
+    // is benchmark-sized (tiny) — the stripBenchmarkSpans rationale, per
+    // benchmark, released once the partner checkpoint below exists
+    val benchFps = benchmarks.map { case (_, df) =>
+      Materialized.checkpoint(winnowFingerprints(df, idCol, textCol, k, w))
+    }
+    val partners = try {
+      val fps = benchmarks.zip(benchFps).map { case ((b, _), m) =>
+        capFingerprintIndex(m.df, maxFingerprintDf)
+          .select(tagged(b, col("id")).as("corpus_id"), col("h"))
+      }.reduce(_ unionByName _)
+      // partner pairs materialized once (tiny frame, two consumers below:
+      // the per-bench chain and the gram-side semi-cut) — the
+      // stripAgainstIndexCore rationale
+      winnowFingerprints(corpus, idCol, textCol, k, w)
+        .toDF("new_id", "h")
+        .join(fps, Seq("h"))
+        .groupBy("new_id", "corpus_id").agg(count(lit(1)).as("__ns"))
+        .filter(col("__ns") >= minShared)
+        .select("new_id", "corpus_id")
+        .localCheckpoint()
+    } finally benchFps.foreach(_.close())
     val grams = benchmarks.map { case (b, df) =>
       graft.engine.Fan.out(
           df.filter(col(textCol).isNotNull && length(col(textCol)) >= k))
         .select(tagged(b, col(idCol)).as("corpus_id"),
           explode(graft.plans.WinnowMinima.minima(col(textCol), k, 1)).as("h"))
     }.reduce(_ unionByName _)
-    // partner pairs materialized once (tiny frame, two consumers below:
-    // the per-bench chain and the gram-side semi-cut) — the
-    // stripAgainstIndexCore rationale
-    val partners = winnowFingerprints(corpus, idCol, textCol, k, w)
-      .toDF("new_id", "h")
-      .join(fps, Seq("h"))
-      .groupBy("new_id", "corpus_id").agg(count(lit(1)).as("__ns"))
-      .filter(col("__ns") >= minShared)
-      .select("new_id", "corpus_id")
-      .localCheckpoint()
     // semi-cut FIRST (guide §2.3): the w=1 gram kernel runs over matched
     // corpus docs only — it feeds a left-semi probe whose left side only
     // carries partner new_ids, so non-partner grams can never match

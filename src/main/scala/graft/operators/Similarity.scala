@@ -632,7 +632,7 @@ object Similarity {
     * NULL vectors stay NULL.
     *
     * Scale shape: the scale is a PROJECTED column between the two array
-    * transforms (the [[graft.operators.Dedup.kgramHashes]] lesson: a
+    * transforms (the interpreted k-gram hashing lesson: a
     * higher-order lambda re-evaluates its whole argument subtree per
     * element, so an inlined scale would recompute the array max dim²
     * times per vector); the whole round-trip stays one map-side pass. */
@@ -1488,11 +1488,6 @@ object Similarity {
   // 16× at m=16, both with ksub ≤ 256), which is the memory lever that
   // lets a 100 TB embedding corpus fit an ANN tier.
 
-  /** Squared L2 between two double-array columns. */
-  private def sqDist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0),
-      (acc, d) => acc + d)
-
   /** PQ codebooks: per subspace `sub ∈ [0, m)`, `ksub` codewords trained
     * by L2 Lloyd iterations over the corpus's subvector slices — ALL
     * subspaces train in the SAME scan (one map-side argmin pass + one
@@ -1563,30 +1558,6 @@ object Similarity {
             org.apache.spark.sql.types.DoubleType, containsNull = true)))))
   }
 
-  /** The m×ksub×dsub codebook as one nested-array literal — bounded
-    * model constants shipped with the plan, so encode/score are pure
-    * map-side expressions (no join, no shuffle, no state). */
-  private def cbLiteral(cb: Array[Array[Array[Double]]]): Column =
-    array(cb.map(sub => array(sub.map(cw =>
-      array(cw.map(lit): _*)): _*)): _*)
-
-  /** Map-side argmin over the codeword array: fold (bestCode, bestDist)
-    * over codeword indices; strict `<` keeps the earliest (= smallest
-    * code) on exact ties. HOF REFERENCE path — the production kernel is
-    * [[graft.plans.PqKernels.encode]] (bit-identical, codegen'd);
-    * SimilaritySpec pins the equality. */
-  private[graft] def pqArgmin(sv: Column, codewords: Column): Column =
-    aggregate(
-      sequence(lit(0), size(codewords) - 1),
-      struct(lit(-1).cast("int").as("c"),
-        lit(Double.MaxValue).as("d")),
-      (acc, ci) => {
-        val d = sqDist(sv, element_at(codewords, ci + 1))
-        when(d < acc.getField("d"),
-          struct(ci.cast("int").as("c"), d.as("d"))).otherwise(acc)
-      },
-      acc => acc.getField("c"))
-
   /** Encode vectors against a STORED codebook: per row the m-int code
     * array (nearest codeword per subspace) — the compressed corpus
     * representation. Pure map-side (codebook rides as a literal); the
@@ -1604,44 +1575,7 @@ object Similarity {
           cb.length, cb.head.length).as("codes"))
   }
 
-  /** [[pqEncode]] through the interpreted HOF argmin — the independently
-    * derived reference path the parity spec compares the native kernel
-    * against (the [[graft.plans.WinnowMinima]] discipline: the slow twin
-    * IS the test; never delete it). */
-  private[graft] def pqEncodeHof(
-      df: DataFrame, idCol: String, vecCol: String, codebooks: DataFrame,
-      assumeUnit: Boolean = false): DataFrame = {
-    val (cb, dsub) = collectCodebooks(codebooks)
-    val m = cb.length
-    val cbLit = cbLiteral(cb)
-    df.select(col(idCol),
-      (if (assumeUnit) col(vecCol)
-       else VectorFns.unitizeNative(col(vecCol))).as("__v"))
-      .select(col(idCol),
-        transform(sequence(lit(0), lit(m - 1)), s =>
-          pqArgmin(slice(col("__v"), s * lit(dsub) + 1, lit(dsub)),
-            element_at(cbLit, s + 1))).as("codes"))
-  }
-
-  /** The interpreted HOF ADC score — reference twin of
-    * [[graft.plans.PqKernels.adc]] ∘ [[graft.plans.PqKernels.lut]]
-    * (same arithmetic factored per-pair instead of per-query; identical
-    * accumulation order, so parity is exact equality). */
-  private[graft] def adcScoreHof(
-      qv: Column, codes: Column, cb: Array[Array[Array[Double]]],
-      dsub: Int): Column = {
-    val cbLit = cbLiteral(cb)
-    aggregate(sequence(lit(0), lit(cb.length - 1)), lit(0.0),
-      (acc, s) => acc + aggregate(
-        zip_with(
-          slice(qv, s * lit(dsub) + 1, lit(dsub)),
-          element_at(element_at(cbLit, s + 1),
-            element_at(codes, s + 1) + 1),
-          (x, y) => x * y),
-        lit(0.0), (a, d) => a + d))
-  }
-
-  private def collectCodebooks(
+  private[graft] def collectCodebooks(
       codebooks: DataFrame): (Array[Array[Array[Double]]], Int) = {
     require(Seq("sub", "code", "cv").forall(codebooks.columns.contains),
       s"codebooks must carry (sub, code, cv) — the pqCodebooks schema; " +

@@ -463,28 +463,13 @@ object TextAnalysis {
   def withCharEntropy(df: DataFrame, textCol: String, as: String = "char_entropy"): DataFrame = {
     val n = length(col(textCol))
     // entropy through the native codegen'd [[graft.plans.CharEntropy]]
-    // expression — the interpreted HOF chain (kept below as the
-    // spec-pinned reference implementation) re-evaluates the whole char
+    // expression — the interpreted HOF chain (kept with the specs as
+    // ReferenceTwins.charEntropyRef) re-evaluates the whole char
     // array once per distinct character and measured 79 s at sf0.1;
     // rounding and the empty/NULL guard stay HERE, token-identical to
     // the oracle
     df.withColumn(as,
       when(n > 0, round(graft.plans.CharEntropy.entropy(col(textCol)), 6)))
-  }
-
-  /** The interpreted HOF reference implementation of [[withCharEntropy]]
-    * — NEVER on the production path (O(|alphabet| · n) interpreted
-    * lambda evals per doc, each rebuilding the n-element char array;
-    * the [[graft.operators.Dedup.kgramHashes]] rationale). Kept because
-    * an independently-derived second path IS the test: the parity spec
-    * pins the native expression against this column bit-for-bit. */
-  private[graft] def charEntropyRef(textCol: String): org.apache.spark.sql.Column = {
-    val n = length(col(textCol))
-    val chars = transform(sequence(lit(1), n), i => col(textCol).substr(i, lit(1)))
-    val counts = transform(array_sort(array_distinct(chars)),
-      c => size(filter(chars, x => x === c)).cast("double"))
-    val sumNlogN = aggregate(counts, lit(0.0), (acc, c) => acc + c * log(c))
-    when(n > 0, round(log(n.cast("double")) - sumNlogN / n, 6))
   }
 
   /** Gopher/C4-style rule-based quality audit — the standard heuristic
@@ -971,8 +956,9 @@ object TextAnalysis {
     * actually occur are touched, so apply cost is FLAT in |merges| —
     * where the r16 replace-expression chain was ~2,000 checkpointed
     * projection stages at a production 64k vocabulary, this is one
-    * projection at any vocabulary size (the chain survives as
-    * [[bpeApplyChain]], the spec-pinned reference twin). The payoff is
+    * projection at any vocabulary size (the chain survives in the specs
+    * as `ReferenceTwins.bpeApplyChain`, the pinned reference twin). The
+    * payoff is
     * ONE equi-join of the batch's (doc, word) pairs against the
     * |batch vocab|-row symbol-count table (AQE broadcasts it when
     * small) and one partial-aggregated per-doc rollup — zero passes
@@ -1008,50 +994,6 @@ object TextAnalysis {
         col("left_sym"), col("right_sym"))
       .orderBy("rank").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-
-  /** [[bpeApply]] through the per-merge `replace` expression chain — the
-    * r16 implementation, retained as the independently derived reference
-    * twin the parity spec pins [[graft.plans.BpeTokenCount]] against
-    * (including OOV and merge-output collisions). One projection per
-    * merge, localCheckpoint every `checkpointEvery` to bound expression
-    * depth: correct, but O(|merges|) stages — do not use for production
-    * vocabularies. */
-  private[graft] def bpeApplyChain(
-      batch: DataFrame, idCol: String, textCol: String, merges: DataFrame,
-      checkpointEvery: Int = 32): DataFrame = {
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be >= 1, got $checkpointEvery")
-    val S = SymS
-    val E = SymE
-    val ms = collectMerges(merges)
-    val words = batch.filter(col(textCol).isNotNull)
-      .select(explode(split(col(textCol), " ")).as("word"))
-      .filter(col("word") =!= "" &&
-        !col("word").contains(S) && !col("word").contains(E))
-      .distinct()
-    var seqs = words.select(col("word"),
-      concat_ws("", transform(sequence(lit(1), length(col("word"))),
-        i => concat(lit(S), col("word").substr(i, lit(1)), lit(E)))).as("seq"))
-    val groups = ms.grouped(checkpointEvery).toSeq
-    groups.zipWithIndex.foreach { case (g, gi) =>
-      val next = seqs.select(col("word"),
-        g.foldLeft(col("seq")) { case (e, (l, r)) =>
-          replace(e, lit(S + l + E + S + r + E), lit(S + l + r + E))
-        }.as("seq"))
-      seqs = if (gi < groups.length - 1) next.localCheckpoint() else next
-    }
-    val tok = seqs.select(col("word"),
-      size(split(col("seq").substr(lit(2), length(col("seq")) - 2), E + S))
-        .cast("long").as("__nsym"))
-    batch.filter(col(textCol).isNotNull)
-      .select(col(idCol), explode(split(col(textCol), " ")).as("word"))
-      .filter(col("word") =!= "" &&
-        !col("word").contains(S) && !col("word").contains(E))
-      .join(tok, Seq("word"))
-      .groupBy(idCol)
-      .agg(count(lit(1)).cast("long").as("n_words"),
-        sum(col("__nsym")).as("n_tokens"))
-  }
 
   private[graft] val SymS = "\u0001"
   private[graft] val SymE = "\u0002"

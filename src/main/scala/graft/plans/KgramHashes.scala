@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * — the ordered, non-distinct gram array whose `posexplode` carries gram
   * POSITIONS downstream (span-extent measurement needs positions;
   * [[WinnowMinima]] deliberately collapses them). Byte-identical to the
-  * interpreted HOF reference [[graft.operators.Dedup.kgramHashes]]
-  * (`transform(sequence…, md5(substr…))`), which KgramHashesSpec pins it
+  * interpreted HOF reference `ReferenceTwins.kgramHashes`
+  * (`transform(sequence…, md5(substr…))`), which WinnowMinimaSpec pins it
   * against; same raw-byte single-pass hashing as [[WinnowMinima]], no
   * 32-char hex round-trips inside the loop, stays in whole-stage codegen.
   *

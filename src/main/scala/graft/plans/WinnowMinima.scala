@@ -14,9 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * one expression replacing the interpreted HOF chain
   * `array_distinct(transform(sequence…, array_min(slice(grams…))))` over a
   * projected `transform(sequence…, md5(substr…))` gram array
-  * ([[graft.operators.Dedup.kgramHashes]] /
-  * [[graft.operators.Dedup.winnowFromGrams]], kept as the reference
-  * implementation WinnowMinimaSpec pins this expression against).
+  * (kept with the specs as `ReferenceTwins.kgramHashes` /
+  * `winnowFromGrams`, the reference WinnowMinimaSpec pins this
+  * expression against).
   *
   * Why native: higher-order lambdas never enter whole-stage codegen, so
   * the HOF path pays an interpreted eval per CHARACTER POSITION, each

@@ -9,9 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native word n-gram shingling over a string column — the innermost
   * expression of every shingle-based dedup path (n-gram Jaccard,
   * containment, MinHash signatures, contamination). Replaces the JVM-loop
-  * UDF (`TextFns.shinglesUdf`, itself a 10× win over interpreted
-  * transform/slice lambdas) with a codegen'd expression: no UDF serde, no
-  * String decode, no per-token allocation.
+  * UDF (`ReferenceTwins.shinglesUdf` in the specs, itself a 10× win
+  * over interpreted transform/slice lambdas) with a codegen'd
+  * expression: no UDF serde, no String decode, no per-token allocation.
   *
   * The core trick: a shingle is `n` consecutive space-split tokens joined
   * by single spaces — which is EXACTLY the original byte span from the

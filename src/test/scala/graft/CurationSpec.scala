@@ -183,6 +183,33 @@ class CurationSpec extends SparkSpec {
     assert(clash.getMessage.contains("kept"), clash.getMessage)
   }
 
+  test("decontaminate releases the benchmark fingerprints: only the partner-pair checkpoint stays pinned") {
+    def rnd(seed: Int, n: Int): String = {
+      val r = new scala.util.Random(seed)
+      Iterator.continually(r.nextPrintableChar()).filter(_.isLetterOrDigit)
+        .take(n).mkString
+    }
+    val span = rnd(1, 80)
+    val corpus = Seq((1L, rnd(11, 32) + span + rnd(12, 32)), (2L, rnd(2, 120)))
+      .toDF("doc_id", "text")
+    val benchmark = Seq((100L, rnd(21, 32) + span + rnd(22, 32)))
+      .toDF("doc_id", "text")
+    val (one, added) = persistedBy(Curation.decontaminate(corpus, benchmark,
+      "doc_id", "text", minShared = 1, minCharsAfter = 60))
+    assert(added.size == 1, s"persisted RDDs left by decontaminate: $added")
+    val (multi, addedMulti) = persistedBy(Curation.decontaminateMulti(corpus,
+      Seq("a" -> benchmark, "b" -> benchmark), "doc_id", "text",
+      minShared = 1, minCharsAfter = 60))
+    assert(addedMulti.size == 1, s"persisted RDDs left by decontaminateMulti: $addedMulti")
+    // the returned frames read only the partner checkpoint: they still collect
+    val stripped = rnd(11, 32) + rnd(12, 32)
+    for (out <- Seq(one, multi)) {
+      val text = out.select("doc_id", "text").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(text == Map(1L -> stripped, 2L -> rnd(2, 120)))
+    }
+  }
+
   test("decontaminateMulti: union strip with per-benchmark attribution; shared spans count toward both; cross-benchmark id collisions don't alias") {
     def rnd(seed: Int, n: Int): String = {
       val r = new scala.util.Random(seed)
@@ -484,6 +511,48 @@ class CurationSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(keptCounts == Map("en" -> 2L, "de" -> 2L), keptCounts.toString)
     assert(kept.filter(col("doc_id").isNull).count() == 0L)
+  }
+
+  test("mixing verbs share one recipe: mixApplyBudget over unit sizes is mixApply; mixPlan's binding and rates are what mixApply and mixStrata apply") {
+    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    val weights = Map("en" -> 0.5, "de" -> 0.3, "es" -> 0.2)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    val applied = Curation.mixApply(docs, "doc_id", "lang", weights)
+    // unit sizes turn the mass budget into the row take, row for row
+    assert(ids(Curation.mixApplyBudget(docs.withColumn("one", lit(1L)),
+      "doc_id", "lang", "one", weights)) == ids(applied))
+    val plan = Curation.mixPlan(docs, "lang", weights).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(4), r.getInt(5))))
+      .toMap
+    val keptCounts = applied.groupBy("lang").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // mixApply keeps whole exactly the strata the plan flags binding,
+    // and a binding stratum's rate is 1
+    plan.foreach { case (l, (avail, rate, binding)) =>
+      assert((keptCounts(l) == avail) == (binding == 1), s"$l: ${plan(l)} kept ${keptCounts(l)}")
+      if (binding == 1) assert(rate == 1.0, s"$l binds at rate $rate")
+    }
+    assert(plan.values.count(_._3 == 1) == 1)
+    // mixStrata's membership is the "mix"-salted draw under the plan's rates
+    val thr = plan.foldLeft(lit(null).cast("string")) { case (rest, (l, (_, r, _))) =>
+      val v = math.round(r * 65536).toInt
+      when(col("lang") === l, lit(if (v >= 65536) "g000" else f"$v%04x")).otherwise(rest)
+    }
+    val byRates = docs.filter(
+      substring(md5(concat(col("doc_id").cast("string"), lit("|mix"))), 1, 4) < thr)
+    assert(ids(Curation.mixStrata(docs, "doc_id", "lang", weights)) == ids(byRates))
+    // every verb names itself when a recipe stratum carries no mass
+    Seq[(String, () => Any)](
+      "mixStrata" -> (() => Curation.mixStrata(docs, "doc_id", "lang", Map("xx" -> 1.0))),
+      "mixPlan" -> (() => Curation.mixPlan(docs, "lang", Map("xx" -> 1.0))),
+      "mixApply" -> (() => Curation.mixApply(docs, "doc_id", "lang", Map("xx" -> 1.0))),
+      "mixApplyBudget" -> (() => Curation.mixApplyBudget(docs.withColumn("z", lit(0L)),
+        "doc_id", "lang", "z", Map("en" -> 1.0)))
+    ).foreach { case (verb, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"$verb: recipe strata with no rows"), e.getMessage)
+    }
   }
 
   test("mixStrata composes with assignSplits: the salted draw keeps recipe ratios inside a split") {

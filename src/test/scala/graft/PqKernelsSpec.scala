@@ -20,7 +20,7 @@ class PqKernelsSpec extends SparkSpec {
   test("native encode == HOF encode, exactly, over the fixture corpus") {
     val native = Similarity.pqEncode(emb, "vec_id", "embedding", cb)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val hof = Similarity.pqEncodeHof(emb, "vec_id", "embedding", cb)
+    val hof = ReferenceTwins.pqEncodeHof(emb, "vec_id", "embedding", cb)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(native.nonEmpty && native == hof)
   }
@@ -46,7 +46,7 @@ class PqKernelsSpec extends SparkSpec {
       .withColumn("q_lut", PqKernels.lutCol(col("q_v"), cbF, m, ksub))
     val diff = enc.crossJoin(broadcast(q))
       .withColumn("native", PqKernels.adcCol(col("codes"), col("q_lut"), ksub))
-      .withColumn("hof", Similarity.adcScoreHof(col("q_v"), col("codes"), cbArr, dsub))
+      .withColumn("hof", ReferenceTwins.adcScoreHof(col("q_v"), col("codes"), cbArr, dsub))
       .filter(col("native") =!= col("hof")) // exact, not tolerance
       .count()
     assert(diff == 0)
@@ -143,7 +143,7 @@ class PqKernelsSpec extends SparkSpec {
             org.apache.spark.sql.types.DoubleType)))))
     val nat = Similarity.pqEncode(df, "vec_id", "embedding", dup)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val hof = Similarity.pqEncodeHof(df, "vec_id", "embedding", dup)
+    val hof = ReferenceTwins.pqEncodeHof(df, "vec_id", "embedding", dup)
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(nat == hof)
     assert(nat.values.forall(_ == Seq(0)), s"tie must break to code 0: $nat")

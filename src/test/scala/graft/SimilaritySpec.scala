@@ -651,7 +651,7 @@ class SimilaritySpec extends SparkSpec {
         .select(col("n_id"), col("cell"),
           zip_with(col("n_v"), col("cv"), (x, y) => x - y).as("r_v"))
       val expect = res.select("n_id", "cell")
-        .join(Similarity.pqEncodeHof(res, "n_id", "r_v", codebooks,
+        .join(ReferenceTwins.pqEncodeHof(res, "n_id", "r_v", codebooks,
           assumeUnit = true), Seq("n_id"))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).toSet

@@ -354,7 +354,7 @@ class TextEventsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
     assert(chained == Seq((1L, 1L)), chained.toString)
     intercept[IllegalArgumentException](
-      TextAnalysis.bpeApplyChain(batch, "doc_id", "text", merges, 0))
+      ReferenceTwins.bpeApplyChain(batch, "doc_id", "text", merges, 0))
   }
 
   test("bpeApply kernel == replace-chain reference, incl. OOV, repeats, and a merge-output collision") {
@@ -391,7 +391,7 @@ class TextEventsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val kernel = TextAnalysis.bpeApply(batch, "doc_id", "text", merges)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val chain = TextAnalysis.bpeApplyChain(batch, "doc_id", "text", merges,
+    val chain = ReferenceTwins.bpeApplyChain(batch, "doc_id", "text", merges,
         checkpointEvery = 2)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(kernel == chain, s"kernel $kernel != chain $chain")
@@ -564,7 +564,7 @@ class TextEventsSpec extends SparkSpec {
       "x")
       .toDF("text")
     val both = TextAnalysis.withCharEntropy(texts, "text")
-      .withColumn("ref", TextAnalysis.charEntropyRef("text"))
+      .withColumn("ref", ReferenceTwins.charEntropyRef("text"))
       .collect()
     both.foreach { r =>
       assert(java.lang.Double.compare(

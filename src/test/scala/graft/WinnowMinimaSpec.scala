@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
 import graft.plans.WinnowMinima
 
 /** Native WinnowMinima expression vs the interpreted HOF reference chain
@@ -16,7 +15,7 @@ class WinnowMinimaSpec extends SparkSpec {
     * expression: gram array PROJECTED between the two transforms. */
   private def refMinima(k: Int, w: Int) = {
     val df = col("t")
-    Dedup.winnowFromGrams(Dedup.kgramHashes(df, k), w)
+    ReferenceTwins.winnowFromGrams(ReferenceTwins.kgramHashes(df, k), w)
   }
 
   private val edges = Seq(
@@ -75,7 +74,7 @@ class WinnowMinimaSpec extends SparkSpec {
   test("w=1 is the distinct gram set in first-occurrence order (the substringExtent gram table)") {
     val df = Seq("abab", "aaaa", "abcdab").map(Tuple1(_)).toDF("t")
     val got = df.select(WinnowMinima.minima(col("t"), 2, 1)).as[Seq[String]].collect()
-    val ref = df.select(array_distinct(Dedup.kgramHashes(col("t"), 2))).as[Seq[String]].collect()
+    val ref = df.select(array_distinct(ReferenceTwins.kgramHashes(col("t"), 2))).as[Seq[String]].collect()
     assert(got.toSeq == ref.toSeq)
   }
 
@@ -84,7 +83,7 @@ class WinnowMinimaSpec extends SparkSpec {
       val df = edges.filter(_.length >= k).map(Tuple1(_)).toDF("t")
       val got = df.select(graft.plans.KgramHashes.grams(col("t"), k))
         .as[Seq[String]].collect()
-      val ref = df.select(Dedup.kgramHashes(col("t"), k)).as[Seq[String]].collect()
+      val ref = df.select(ReferenceTwins.kgramHashes(col("t"), k)).as[Seq[String]].collect()
       assert(got.toSeq == ref.toSeq, s"k=$k")
     }
     // short/NULL edges: empty array below k, NULL through

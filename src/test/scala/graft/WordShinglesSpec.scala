@@ -25,7 +25,7 @@ class WordShinglesSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3, 5)) {
       val df = edges.map(Tuple1(_)).toDF("t")
       val got = df.select(TextFns.shinglesFast(col("t"), n)).as[Seq[String]].collect()
-      val ref = df.select(TextFns.shinglesUdf(n)(col("t"))).as[Seq[String]].collect()
+      val ref = df.select(ReferenceTwins.shinglesUdf(n)(col("t"))).as[Seq[String]].collect()
       assert(got.toSeq == ref.toSeq, s"n=$n")
     }
   }
@@ -47,7 +47,7 @@ class WordShinglesSpec extends SparkSpec {
       TextFns.shinglesFast(col("text"), 3))).as("h"))
       .agg(sum(conv(substring(col("h"), 1, 8), 16, 10).cast("long"))).as[Long].head()
     val b = docs.select(md5(concat_ws("",
-      TextFns.shinglesUdf(3)(col("text")))).as("h"))
+      ReferenceTwins.shinglesUdf(3)(col("text")))).as("h"))
       .agg(sum(conv(substring(col("h"), 1, 8), 16, 10).cast("long"))).as[Long].head()
     assert(a == b)
   }
