@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Materialized, Tables}
 import graft.operators.{Classify, Curation, Dedup, Events, Fuzzy, MultiModal, Privacy, Similarity, Temporal, TextAnalysis}
 
 /** Training-data-pipeline extension queries (SURVEY §7.6): dedup family,
@@ -79,6 +79,12 @@ object ExtQueries {
       dst
     }
   }
+
+  /** Run `body` and then release `arms`: `body` must leave its result
+    * driver-local (collected and re-wrapped), since a released arm's
+    * lineage is gone. */
+  private def releasing[A](arms: Materialized*)(body: => A): A =
+    try body finally arms.foreach(_.close())
 
   // ------------------------------------------------------------------ dedup
 
@@ -1247,21 +1253,21 @@ object ExtQueries {
           .otherwise(0).as("explained_ok"))
 
   /** The STORED-index path through ann_ivf's exact harness: build the IVF
-    * index, publish it to disk (write-then-swap), reload, and answer the
-    * same queries from the stored tables — the build-once / query-many
-    * production shape. Same floor as ann_ivf because the stored index is
-    * bit-identical to the in-memory one (deterministic hash-seeded
-    * k-means + exact double round-trip through parquet; SimilaritySpec
-    * pins result equality). EAGER + self-cleaning: the 1-row recall
-    * aggregate is collected and re-wrapped so the temp index directory
-    * can be deleted before returning (a lazy plan would dangle on it). */
+    * index (the stored artifact's raw codec), publish it to disk
+    * (write-then-swap), reload, and answer the same queries from the
+    * stored tables — the build-once / query-many production shape. Same
+    * floor as ann_ivf because the stored index is bit-identical to the
+    * in-memory one (deterministic hash-seeded k-means + exact double
+    * round-trip through parquet; SimilaritySpec pins result equality).
+    * EAGER: the 1-row recall aggregate is collected and re-wrapped so no
+    * lazy plan dangles on the index directory. */
   val annIvfStoredQ: Q = (s, d) => {
     val e = t(s, d, "embeddings")
     val q = e.filter(col("vec_id") < 5)
     // read-only consumer of the shared plain-IVF fixture (r19 build-once)
     val idx = IndexFixtures.shared(d, "ivf-full-16x1")(p =>
-      Similarity.writeIvfIndex(e, "vec_id", "embedding", p,
-        nLists = 16, lloydIters = 1))
+      Similarity.writeIvfPqIndex(e, "vec_id", "embedding", p,
+        nLists = 16, lloydIters = 1, codec = "raw"))
     val check = annRecallCheck(
       Similarity.annIvfStored(s, idx, q, "vec_id", "embedding",
         k = 10, nProbe = 4).select("q_id", "n_id"),
@@ -1296,25 +1302,34 @@ object ExtQueries {
     * trained and the corpus encoded ONCE, published to disk
     * (write-then-swap), reloaded, and the same queries answered from the
     * persisted codes with only the shortlisted ids' full vectors read
-    * back for the re-rank. Same floor as pq_topk: the stored codes are
-    * bit-identical to the in-memory encode (deterministic seeds, exact
-    * int/double round-trip; SimilaritySpec pins equality). EAGER +
-    * self-cleaning like ann_ivf_stored. */
+    * back for the re-rank. The artifact is the stored index's flat-PQ
+    * configuration (one cell, [[flatPq]]), searched with its one cell
+    * probed. Same floor as pq_topk: the stored codes are bit-identical
+    * to the in-memory encode (deterministic seeds, exact int/double
+    * round-trip; SimilaritySpec pins equality). EAGER like
+    * ann_ivf_stored. */
   val pqStoredQ: Q = (s, d) => {
     val e = t(s, d, "embeddings")
     val q = e.filter(col("vec_id") < 5)
-    // read-only consumer of the shared PQ fixture (r19 build-once)
-    val idx = IndexFixtures.shared(d, "pq-full-16x64x3")(p =>
-      Similarity.writePqIndex(e, "vec_id", "embedding", p,
-        m = 16, ksub = 64, iters = 3))
+    val idx = flatPq(s, d) // read-only (r19 build-once)
     val check = annRecallCheck(
-      Similarity.pqTopKStored(s, idx, e, "vec_id", "embedding",
-        q, "vec_id", "embedding", k = 10, shortlist = 80)
+      Similarity.ivfPqStoredTopK(s, idx, e, "vec_id", "embedding",
+        q, "vec_id", "embedding", k = 10, shortlist = 80, nProbe = 1)
         .select("q_id", "n_id"),
       Similarity.bruteForceTopK(e, "vec_id", "embedding", q, "vec_id",
         "embedding", k = 10).select("q_id", "n_id"),
       k = 10, hitsFloor = 40)
     Similarity.localFrame(s, check.collect(), check.schema)
+  }
+
+  /** The shared flat-PQ fixture — the stored index with one cell
+    * (`nLists = 1, lloydIters = 0`), read-only home of `pq_stored` and
+    * `pq_shortlist_sweep`. */
+  private def flatPq(s: SparkSession, d: String): String = {
+    val e = t(s, d, "embeddings")
+    IndexFixtures.shared(d, "pq-full-16x64x3")(p =>
+      Similarity.writeIvfPqIndex(e, "vec_id", "embedding", p,
+        nLists = 1, lloydIters = 0, m = 16, ksub = 64, pqIters = 3))
   }
 
   /** The COMPOSED stored-index path — the one family member a real user
@@ -1443,61 +1458,63 @@ object ExtQueries {
         nLists = 16, lloydIters = 3, m = 16, ksub = 64, pqIters = 3,
         residual = false, opq = true))
     val probes = Seq(1, 2, 4, 8, 16)
-    def sweep(idx: String) = Similarity.ivfPqStoredProbeSweep(s, idx, e,
-      "vec_id", "embedding", q, "vec_id", "embedding", k = 10,
-      shortlist = 80, probes = probes)
-      .select("n_probe", "q_id", "n_id").localCheckpoint()
+    def sweep(idx: String) = Materialized.checkpoint(
+      Similarity.ivfPqStoredProbeSweep(s, idx, e, "vec_id", "embedding",
+        q, "vec_id", "embedding", k = 10, shortlist = 80, probes = probes)
+        .select("n_probe", "q_id", "n_id"))
     // the four arms (exact truth, the two sweep scans, the independent
     // stored-topk run) are independent job chains of small stages —
     // previously ~83 driver-sequential jobs; overlap them (guide §2.6)
     val (exact, sp, so, storedMaxO) = graft.engine.Overlap.par4(
-      Similarity.bruteForceTopK(e, "vec_id", "embedding",
-        q, "vec_id", "embedding", k = 10)
-        .select("q_id", "n_id").localCheckpoint(),
+      Materialized.checkpoint(Similarity.bruteForceTopK(e, "vec_id",
+        "embedding", q, "vec_id", "embedding", k = 10)
+        .select("q_id", "n_id")),
       sweep(plainIdx),
       sweep(opqIdx),
-      Similarity.ivfPqStoredTopK(s, opqIdx, e, "vec_id",
+      Materialized.checkpoint(Similarity.ivfPqStoredTopK(s, opqIdx, e, "vec_id",
         "embedding", q, "vec_id", "embedding", k = 10, shortlist = 80,
-        nProbe = probes.max).select("q_id", "n_id").localCheckpoint())
-    // ONE collect answers BOTH arms' probe curves (the tagged union of
-    // the two per-arm joins — identical counts, half the action count)
-    val hitRows = sp.withColumn("__arm", lit("p"))
-      .unionByName(so.withColumn("__arm", lit("o")))
-      .join(exact, Seq("q_id", "n_id"))
-      .groupBy("__arm", "n_probe").count().collect()
-    def armHits(a: String) = hitRows.collect {
-      case r if r.getString(0) == a => r.getInt(1) -> r.getLong(2)
-    }.toMap
-    val hp = armHits("p")
-    val ho = armHits("o")
-    val maxSweepO = so.filter(col("n_probe") === probes.max)
-      .select("q_id", "n_id")
-    // symmetric-difference emptiness in ONE action (A\B ∪ B\A = ∅ iff
-    // both are — the two serial exceptAll jobs computed exactly this)
-    val idOk = maxSweepO.exceptAll(storedMaxO)
-      .unionAll(storedMaxO.exceptAll(maxSweepO)).isEmpty
-    val nq = q.count()
-    def ok(b: Boolean) = if (b) 1 else 0
-    val fullGe = ok(ho.getOrElse(probes.max, 0L) >=
-      hp.getOrElse(probes.max, 0L))
-    val floorMet = ok(ho.getOrElse(probes.max, 0L) >= 30L &&
-      hp.getOrElse(probes.max, 0L) >= 30L)
-    Similarity.localFrame(s, probes.sorted.map(p =>
-      org.apache.spark.sql.Row(p, nq, 10, fullGe, floorMet,
-        ok(idOk))).toArray,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("n_probe",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("n_queries",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("full_opq_ge_plain",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("full_floor_met",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("max_equals_stored",
-          org.apache.spark.sql.types.IntegerType))))
+        nProbe = probes.max).select("q_id", "n_id")))
+    releasing(exact, sp, so, storedMaxO) {
+      // ONE collect answers BOTH arms' probe curves (the tagged union of
+      // the two per-arm joins — identical counts, half the action count)
+      val hitRows = sp.df.withColumn("__arm", lit("p"))
+        .unionByName(so.df.withColumn("__arm", lit("o")))
+        .join(exact.df, Seq("q_id", "n_id"))
+        .groupBy("__arm", "n_probe").count().collect()
+      def armHits(a: String) = hitRows.collect {
+        case r if r.getString(0) == a => r.getInt(1) -> r.getLong(2)
+      }.toMap
+      val hp = armHits("p")
+      val ho = armHits("o")
+      val maxSweepO = so.df.filter(col("n_probe") === probes.max)
+        .select("q_id", "n_id")
+      // symmetric-difference emptiness in ONE action (A\B ∪ B\A = ∅ iff
+      // both are — the two serial exceptAll jobs computed exactly this)
+      val idOk = maxSweepO.exceptAll(storedMaxO.df)
+        .unionAll(storedMaxO.df.exceptAll(maxSweepO)).isEmpty
+      val nq = q.count()
+      def ok(b: Boolean) = if (b) 1 else 0
+      val fullGe = ok(ho.getOrElse(probes.max, 0L) >=
+        hp.getOrElse(probes.max, 0L))
+      val floorMet = ok(ho.getOrElse(probes.max, 0L) >= 30L &&
+        hp.getOrElse(probes.max, 0L) >= 30L)
+      Similarity.localFrame(s, probes.sorted.map(p =>
+        org.apache.spark.sql.Row(p, nq, 10, fullGe, floorMet,
+          ok(idOk))).toArray,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("n_probe",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("n_queries",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("k",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("full_opq_ge_plain",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("full_floor_met",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("max_equals_stored",
+            org.apache.spark.sql.types.IntegerType))))
+    }
   }
 
   val ivfPqStoredQ: Q = (s, d) => {
@@ -1542,17 +1559,20 @@ object ExtQueries {
       // append + grown-index search chain (guide §2.6); both arms are
       // checkpointed so the recall aggregate below reads them once
       val (exact, ann) = graft.engine.Overlap.par(
-        Similarity.bruteForceTopK(e, "vec_id", "embedding", q, "vec_id",
-          "embedding", k = 10).select("q_id", "n_id").localCheckpoint(),
+        Materialized.checkpoint(Similarity.bruteForceTopK(e, "vec_id",
+          "embedding", q, "vec_id", "embedding", k = 10)
+          .select("q_id", "n_id")),
         {
           Similarity.appendIvfPqIndex(s, idx,
             e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding")
-          Similarity.ivfPqStoredTopK(s, idx, e, "vec_id", "embedding",
-            q, "vec_id", "embedding", k = 10, shortlist = 80, nProbe = 8)
-            .select("q_id", "n_id").localCheckpoint()
+          Materialized.checkpoint(Similarity.ivfPqStoredTopK(s, idx, e,
+            "vec_id", "embedding", q, "vec_id", "embedding", k = 10,
+            shortlist = 80, nProbe = 8).select("q_id", "n_id"))
         })
-      val check = annRecallCheck(ann, exact, k = 10, hitsFloor = 30)
-      Similarity.localFrame(s, check.collect(), check.schema)
+      releasing(exact, ann) {
+        val check = annRecallCheck(ann.df, exact.df, k = 10, hitsFloor = 30)
+        Similarity.localFrame(s, check.collect(), check.schema)
+      }
     } finally {
       val p = new org.apache.hadoop.fs.Path(idx)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -1711,16 +1731,17 @@ object ExtQueries {
       // them (guide §2.6)
       val (h0, post, nQueries) = graft.engine.Overlap.par3(
         Similarity.ivfPqIndexHealth(s, idx).head(),
-        Similarity.ivfPqStoredTopK(s, idx, e, "vec_id",
+        Materialized.checkpoint(Similarity.ivfPqStoredTopK(s, idx, e, "vec_id",
           "embedding", q, "vec_id", "embedding", k = 10, shortlist = 80,
-          nProbe = 16).select("q_id", "n_id").localCheckpoint(),
+          nProbe = 16).select("q_id", "n_id")),
         q.count())
       // result rows and deleted-id hits from ONE aggregation job (del's
       // ids are unique, so the left join cannot fan out a result row —
       // the two serial counts read exactly these numbers)
-      val cRow = post.join(del.withColumnRenamed("vec_id", "n_id")
-          .withColumn("__d", lit(1)), Seq("n_id"), "left")
-        .agg(count(lit(1)).as("rr"), count(col("__d")).as("dit")).head()
+      val cRow = releasing(post)(post.df.join(
+          del.withColumnRenamed("vec_id", "n_id")
+            .withColumn("__d", lit(1)), Seq("n_id"), "left")
+        .agg(count(lit(1)).as("rr"), count(col("__d")).as("dit")).head())
       val resultRows = cRow.getLong(0)
       val deletedInTopk = cRow.getLong(1)
       Similarity.localFrame(s, Array(org.apache.spark.sql.Row(
@@ -1758,30 +1779,30 @@ object ExtQueries {
     // read-only consumer of the shared heavy fixture (r19 build-once) —
     // the sweep only ever reads the published tables
     val idx = fullHeavyIvfPq(s, d)
-    locally {
-      val probes = Seq(1, 2, 4, 8)
-      // three independent job chains (exact truth, the sweep scan, the
-      // independent stored-topk run) — overlap them (guide §2.6); the
-      // stored arm is checkpointed so the symmetric-difference check
-      // below executes the search once, not once per exceptAll side
-      val (exact, sweep, storedMax) = graft.engine.Overlap.par3(
-        Similarity.bruteForceTopK(
-          e, "vec_id", "embedding", q, "vec_id", "embedding", k = 10)
-          .select("q_id", "n_id").localCheckpoint(),
-        Similarity.ivfPqStoredProbeSweep(s, idx, e, "vec_id",
-          "embedding", q, "vec_id", "embedding", k = 10, shortlist = 80,
-          probes = probes)
-          .select("n_probe", "q_id", "n_id").localCheckpoint(),
-        Similarity.ivfPqStoredTopK(s, idx, e, "vec_id",
-          "embedding", q, "vec_id", "embedding", k = 10, shortlist = 80,
-          nProbe = probes.max).select("q_id", "n_id").localCheckpoint())
-      val maxSweep = sweep.filter(col("n_probe") === probes.max)
+    val probes = Seq(1, 2, 4, 8)
+    // three independent job chains (exact truth, the sweep scan, the
+    // independent stored-topk run) — overlap them (guide §2.6); the
+    // stored arm is checkpointed so the symmetric-difference check
+    // below executes the search once, not once per exceptAll side
+    val (exact, sweep, storedMax) = graft.engine.Overlap.par3(
+      Materialized.checkpoint(Similarity.bruteForceTopK(
+        e, "vec_id", "embedding", q, "vec_id", "embedding", k = 10)
+        .select("q_id", "n_id")),
+      Materialized.checkpoint(Similarity.ivfPqStoredProbeSweep(s, idx, e,
+        "vec_id", "embedding", q, "vec_id", "embedding", k = 10,
+        shortlist = 80, probes = probes)
+        .select("n_probe", "q_id", "n_id")),
+      Materialized.checkpoint(Similarity.ivfPqStoredTopK(s, idx, e, "vec_id",
+        "embedding", q, "vec_id", "embedding", k = 10, shortlist = 80,
+        nProbe = probes.max).select("q_id", "n_id")))
+    releasing(exact, sweep, storedMax) {
+      val maxSweep = sweep.df.filter(col("n_probe") === probes.max)
         .select("q_id", "n_id")
       // symmetric-difference emptiness in ONE action (A\B ∪ B\A = ∅ iff
       // both are — the two serial exceptAll jobs computed exactly this)
-      val idOk = maxSweep.exceptAll(storedMax)
-        .unionAll(storedMax.exceptAll(maxSweep)).isEmpty
-      val hits = sweep.join(exact, Seq("q_id", "n_id"))
+      val idOk = maxSweep.exceptAll(storedMax.df)
+        .unionAll(storedMax.df.exceptAll(maxSweep)).isEmpty
+      val hits = sweep.df.join(exact.df, Seq("q_id", "n_id"))
         .groupBy("n_probe").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
       val nq = q.count()
@@ -1829,50 +1850,52 @@ object ExtQueries {
     // them (guide §2.6); each checkpointed so the downstream checks
     // execute each arm once
     val (exact, sweep, storedMax) = graft.engine.Overlap.par3(
-      Similarity.bruteForceTopK(e.filter(w), "vec_id",
+      Materialized.checkpoint(Similarity.bruteForceTopK(e.filter(w), "vec_id",
           "embedding", q, "vec_id", "embedding", k = 10)
-        .select("q_id", "n_id").localCheckpoint(),
-      Similarity.ivfPqStoredProbeSweepFiltered(s, idx, e,
-          "vec_id", "embedding", q, "vec_id", "embedding", k = 10,
+        .select("q_id", "n_id")),
+      Materialized.checkpoint(Similarity.ivfPqStoredProbeSweepFiltered(s,
+          idx, e, "vec_id", "embedding", q, "vec_id", "embedding", k = 10,
           shortlist = 80, probes = probes, where = w)
-        .select("n_probe", "q_id", "n_id").localCheckpoint(),
-      Similarity.ivfPqStoredTopKFiltered(s, idx, e,
+        .select("n_probe", "q_id", "n_id")),
+      Materialized.checkpoint(Similarity.ivfPqStoredTopKFiltered(s, idx, e,
         "vec_id", "embedding", q, "vec_id", "embedding", k = 10,
         shortlist = 80, where = w, nProbe = probes.max)
-        .select("q_id", "n_id").localCheckpoint())
-    val maxSweep = sweep.filter(col("n_probe") === probes.max)
-      .select("q_id", "n_id")
-    // symmetric-difference emptiness in ONE action (A\B ∪ B\A = ∅ iff
-    // both are — the two serial exceptAll jobs computed exactly this)
-    val idOk = maxSweep.exceptAll(storedMax)
-      .unionAll(storedMax.exceptAll(maxSweep)).isEmpty
-    // the three residual reads are tiny independent jobs over the
-    // checkpointed arms — overlap those too
-    val (hitRows, inel, nq) = graft.engine.Overlap.par3(
-      sweep.join(exact, Seq("q_id", "n_id"))
-        .groupBy("n_probe").count().collect(),
-      sweep.join(e.filter(!w).select(col("vec_id").as("n_id")),
-        Seq("n_id"), "left_semi").count(),
-      q.count())
-    val hits = hitRows.map(r => r.getInt(0) -> r.getLong(1)).toMap
-    def ok(b: Boolean) = if (b) 1 else 0
-    val floorMet = ok(hits.getOrElse(probes.max, 0L) >= 28L)
-    Similarity.localFrame(s, probes.map(p =>
-      org.apache.spark.sql.Row(p, nq, 10, floorMet, ok(idOk), inel))
-      .toArray,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("n_probe",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("n_queries",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("final_floor_met",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("max_equals_filtered",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("ineligible_hits",
-          org.apache.spark.sql.types.LongType))))
+        .select("q_id", "n_id")))
+    releasing(exact, sweep, storedMax) {
+      val maxSweep = sweep.df.filter(col("n_probe") === probes.max)
+        .select("q_id", "n_id")
+      // symmetric-difference emptiness in ONE action (A\B ∪ B\A = ∅ iff
+      // both are — the two serial exceptAll jobs computed exactly this)
+      val idOk = maxSweep.exceptAll(storedMax.df)
+        .unionAll(storedMax.df.exceptAll(maxSweep)).isEmpty
+      // the three residual reads are tiny independent jobs over the
+      // checkpointed arms — overlap those too
+      val (hitRows, inel, nq) = graft.engine.Overlap.par3(
+        sweep.df.join(exact.df, Seq("q_id", "n_id"))
+          .groupBy("n_probe").count().collect(),
+        sweep.df.join(e.filter(!w).select(col("vec_id").as("n_id")),
+          Seq("n_id"), "left_semi").count(),
+        q.count())
+      val hits = hitRows.map(r => r.getInt(0) -> r.getLong(1)).toMap
+      def ok(b: Boolean) = if (b) 1 else 0
+      val floorMet = ok(hits.getOrElse(probes.max, 0L) >= 28L)
+      Similarity.localFrame(s, probes.map(p =>
+        org.apache.spark.sql.Row(p, nq, 10, floorMet, ok(idOk), inel))
+        .toArray,
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("n_probe",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("n_queries",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("k",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("final_floor_met",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("max_equals_filtered",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("ineligible_hits",
+            org.apache.spark.sql.types.LongType))))
+    }
   }
 
   /** PQ shortlist tuning curve — the re-rank sibling of ann_probe_sweep:
@@ -1893,18 +1916,16 @@ object ExtQueries {
   val pqShortlistSweepQ: Q = (s, d) => {
     val e = t(s, d, "embeddings")
     val q = e.filter(col("vec_id") < 5)
-    val exact = Similarity.bruteForceTopK(
+    val exact = Materialized.checkpoint(Similarity.bruteForceTopK(
       e, "vec_id", "embedding", q, "vec_id", "embedding", k = 10)
-      .select("q_id", "n_id").localCheckpoint()
-    // read-only consumer of pq_stored's shared fixture (r19 build-once)
-    val idx = IndexFixtures.shared(d, "pq-full-16x64x3")(p =>
-      Similarity.writePqIndex(e, "vec_id", "embedding", p,
-        m = 16, ksub = 64, iters = 3))
-    locally {
+      .select("q_id", "n_id"))
+    val idx = flatPq(s, d) // read-only (r19 build-once)
+    releasing(exact) {
       val hitRows = Similarity.pqStoredShortlistSweep(s, idx,
           e, "vec_id", "embedding", q, "vec_id", "embedding",
           k = 10, shortlists = Seq(10, 20, 40, 80))
-        .join(exact.withColumn("__e", lit(1L)), Seq("q_id", "n_id"), "left")
+        .join(exact.df.withColumn("__e", lit(1L)), Seq("q_id", "n_id"),
+          "left")
         .groupBy("shortlist")
         .agg(sum(coalesce(col("__e"), lit(0L))).as("__hits"))
       val ord = org.apache.spark.sql.expressions.Window.orderBy("shortlist")
@@ -1947,42 +1968,47 @@ object ExtQueries {
     // chains — overlap them (guide §2.6); each arm's own plan (including
     // the kmeans collects) is exactly the serial one
     val (exact, assignedWithCentroids) = graft.engine.Overlap.par(
-      Similarity.bruteForceTopK(
+      Materialized.checkpoint(Similarity.bruteForceTopK(
         e, "vec_id", "embedding", q, "vec_id", "embedding", k = 10)
-        .select("q_id", "n_id").localCheckpoint(),
+        .select("q_id", "n_id")),
       {
         val c = e.select(col("vec_id").as("n_id"),
           graft.functions.VectorFns.unitizeNative(col("embedding")).as("n_v"))
         val cents = Similarity.kmeansCentroids(c, "n_id", "n_v",
           k = 16, iters = 1, assumeUnit = true)
-        (cents, Similarity.assignCell(c, "n_id", "n_v", cents)
-          .localCheckpoint())
+        (cents, Materialized.checkpoint(
+          Similarity.assignCell(c, "n_id", "n_v", cents)))
       })
     val (centroids, assigned) = assignedWithCentroids
-    // r18: the whole curve from ONE probe pass (annIvfProbeSweep — per-
-    // budget output identical to annIvfWithIndex per cut, spec-pinned);
-    // previously each budget re-ran its own probe join over the corpus
-    val hitRows = Similarity.annIvfProbeSweep(centroids, assigned,
-        q, "vec_id", "embedding", k = 10, probes = (1 to 4))
-      .join(exact.withColumn("__e", lit(1L)), Seq("q_id", "n_id"), "left")
-      .groupBy("n_probe")
-      .agg(sum(coalesce(col("__e"), lit(0L))).as("__hits"))
-    val ord = org.apache.spark.sql.expressions.Window.orderBy("n_probe")
-    val all = org.apache.spark.sql.expressions.Window
-      .orderBy("n_probe").rowsBetween(Long.MinValue, Long.MaxValue)
-    val nq = q.agg(count(lit(1)).as("n_queries"))
-    hitRows // 4 rows: the windows below touch nothing larger
-      .withColumn("__prev", lag(col("__hits"), 1).over(ord))
-      .withColumn("monotone_ok",
-        when(col("__prev").isNull || col("__hits") >= col("__prev"), 1)
-          .otherwise(0))
-      .withColumn("final_floor_met",
-        when(max(when(col("n_probe") === 4, col("__hits"))).over(all) >= 15, 1)
-          .otherwise(0))
-      .crossJoin(broadcast(nq))
-      .select(col("n_probe"), col("n_queries"), lit(10).as("k"),
-        col("monotone_ok"), col("final_floor_met"))
-      .orderBy("n_probe")
+    releasing(exact, assigned) {
+      // r18: the whole curve from ONE probe pass (annIvfProbeSweep — per-
+      // budget output identical to annIvfWithIndex per cut, spec-pinned);
+      // previously each budget re-ran its own probe join over the corpus
+      val hitRows = Similarity.annIvfProbeSweep(centroids, assigned.df,
+          q, "vec_id", "embedding", k = 10, probes = (1 to 4))
+        .join(exact.df.withColumn("__e", lit(1L)), Seq("q_id", "n_id"),
+          "left")
+        .groupBy("n_probe")
+        .agg(sum(coalesce(col("__e"), lit(0L))).as("__hits"))
+      val ord = org.apache.spark.sql.expressions.Window.orderBy("n_probe")
+      val all = org.apache.spark.sql.expressions.Window
+        .orderBy("n_probe").rowsBetween(Long.MinValue, Long.MaxValue)
+      val nq = q.agg(count(lit(1)).as("n_queries"))
+      val out = hitRows // 4 rows: the windows below touch nothing larger
+        .withColumn("__prev", lag(col("__hits"), 1).over(ord))
+        .withColumn("monotone_ok",
+          when(col("__prev").isNull || col("__hits") >= col("__prev"), 1)
+            .otherwise(0))
+        .withColumn("final_floor_met",
+          when(max(when(col("n_probe") === 4, col("__hits"))).over(all)
+            >= 15, 1).otherwise(0))
+        .crossJoin(broadcast(nq))
+        .select(col("n_probe"), col("n_queries"), lit(10).as("k"),
+          col("monotone_ok"), col("final_floor_met"))
+        .orderBy("n_probe")
+      // collected before the release: the arms' lineage is truncated
+      Similarity.localFrame(s, out.collect(), out.schema)
+    }
   }
 
   // ---------------------------------------------------------- text analysis

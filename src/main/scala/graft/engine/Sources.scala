@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Source connectors with schema validation (SURVEY §2.1 S2/S6, §3.2).
@@ -336,9 +336,9 @@ object Sources {
         spark.read.parquet(listed.head).limit(0)
       else spark.read.parquet(fresh: _*)
     val commit = () => {
-      import spark.implicits._
       if (fresh.nonEmpty) {
-        fresh.toDF("path").write.mode("append").parquet(manifestPath)
+        spark.createDataset(fresh)(Encoders.STRING).toDF("path")
+          .write.mode("append").parquet(manifestPath)
         // the append adds one small file per batch; unchecked, a manifest
         // ingesting for a year holds hundreds of tiny parquet files and
         // every run's listing-plus-read slows with it. Past the threshold,

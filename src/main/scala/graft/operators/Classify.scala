@@ -116,7 +116,7 @@ object Classify {
     * `model.parquet` ([[nbTrain]]'s table) plus `meta.parquet` carrying
     * the `hexChars` the features were hashed with, staged together and
     * swapped in with ONE atomic root rename (the
-    * [[Similarity.writePqIndex]] discipline). hexChars rides IN the
+    * [[Similarity.writeIvfPqIndex]] discipline). hexChars rides IN the
     * artifact because a scorer using a different width silently hashes
     * every token to a feature the model never saw — each document then
     * gets the all-OOV score under every label and the argmax degrades

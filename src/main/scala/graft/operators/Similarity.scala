@@ -1374,110 +1374,26 @@ object Similarity {
 
   // ------------------------------------------------------ stored IVF index
 
-  /** Build an IVF index over `corpus` and persist it under `path` as two
-    * parquet tables — `centroids` (cell, cv) and `assigned`
-    * (n_id, n_v, cell) — the build-once / query-many contract repeated
-    * similarity workloads need: at 100 TB the k-means build + corpus
-    * assignment pass dominates query cost, and [[annIvf]]'s rebuild-per-job
-    * shape pays it on every invocation. Both tables stage together and
-    * publish with ONE atomic root swap
-    * ([[graft.engine.Sinks.publishRoot]]): cells are only meaningful
-    * relative to their centroids, and the r16 per-table swaps left a
-    * window where a reader racing a republish paired new centroids with
-    * old assignments — silently degraded probes, no error anywhere. A
-    * crashed rebuild leaves the previous index live.
-    *
-    * Determinism: [[kmeansCentroids]] seeds from `xxhash64(id)`, so the
-    * same corpus always persists the same index — a rebuild is a no-op
-    * diff, and the stored index answers queries identically to an
-    * in-memory [[annIvf]] over the same corpus (SimilaritySpec pins the
-    * round-trip). EAGER: the clustering and both writes run here. */
-  def writeIvfIndex(
-      corpus: DataFrame, corpusId: String, corpusVec: String,
-      path: String, nLists: Int = 16, lloydIters: Int = 1): Unit = {
-    val c = corpus.select(col(corpusId).as("n_id"),
-      VectorFns.unitizeNative(col(corpusVec)).as("n_v"))
-    val centroids = kmeansCentroids(c, "n_id", "n_v", nLists, lloydIters,
-      assumeUnit = true)
-    val assigned = assignCell(c, "n_id", "n_v", centroids)
-    val spark = corpus.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.engine.Sinks.publishRoot(fs, path) { tmp =>
-      // centroids are a LOCAL model table (nLists rows) — one file, not
-      // min(rows, cores) one-row files (guide §6); the two writes are
-      // independent staging jobs — overlap them (guide §2.6)
-      graft.engine.Overlap.par(
-        centroids.coalesce(1).write.mode("overwrite")
-          .parquet(s"$tmp/centroids.parquet"),
-        assigned.write.mode("overwrite").parquet(s"$tmp/assigned.parquet"))
-      ()
-    }
-  }
-
-  /** Load a stored IVF index written by [[writeIvfIndex]] (recovering any
-    * half-finished ROOT swap first) as (centroids, assigned) — always a
-    * consistent pair, by the single-root publish contract. */
-  def readIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : (DataFrame, DataFrame) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.engine.Sinks.recoverSwap(fs, root)
-    // legacy compatibility: an index written by the pre-r17 PER-TABLE
-    // swap code whose swap crashed between renames strands a table at
-    // <name>.parquet.old with the live path absent — root recovery is a
-    // no-op there (the root exists); recover each table too (no-op on
-    // root-swapped artifacts)
-    Seq("centroids", "assigned").foreach { name =>
-      graft.engine.Sinks.recoverSwap(fs,
-        new org.apache.hadoop.fs.Path(s"$path/$name.parquet"))
-    }
-    (spark.read.parquet(s"$path/centroids.parquet"),
-      spark.read.parquet(s"$path/assigned.parquet"))
-  }
-
   /** [[annIvf]] answered from a STORED index: load, probe, rerank — the
     * query-side-only plan ([[annIvfWithIndex]]) with zero corpus passes
     * and zero clustering. This is the production shape for repeated
-    * similarity queries: the index amortizes across every caller. */
+    * similarity queries: the index amortizes across every caller. The
+    * artifact is [[writeIvfPqIndex]]'s with `codec = "raw"` — its index
+    * rows carry the unit vectors themselves, so scoring inside probed
+    * cells is exact and the answer equals the in-memory [[annIvf]] over
+    * the same corpus (SimilaritySpec pins the round-trip); it grows
+    * through the same epoch-guarded [[appendIvfPqIndex]] /
+    * [[ingestIvfPqBatch]] / [[deleteFromIvfPqIndex]] lifecycle as the
+    * PQ codec. */
   def annIvfStored(
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, queryId: String, queryVec: String,
       k: Int, nProbe: Int = 4): DataFrame = {
-    val (centroids, assigned) = readIvfIndex(spark, path)
-    annIvfWithIndex(broadcast(centroids), assigned,
+    val (model, served) = openStoredIndex(spark, path)
+    require(model.codebooks.isEmpty, s"annIvfStored: the index at $path " +
+      "stores PQ codes, not vectors — search it with ivfPqStoredTopK")
+    annIvfWithIndex(broadcast(model.centroids), served,
       queries, queryId, queryVec, k, nProbe)
-  }
-
-  /** Incrementally index new vectors into a stored IVF index: assign them
-    * against the STORED centroids (one map pass over the new batch only —
-    * the corpus is never re-read, the clustering never re-run) and append
-    * to the `assigned` table. The cell structure ages as the corpus
-    * drifts; rebuild with [[writeIvfIndex]] when recall audits (e.g. the
-    * `ann_ivf` recall differential re-run over the grown corpus) say so —
-    * same contract as the minhash band index.
-    *
-    * Append is parquet append-mode: atomic per file but NOT idempotent —
-    * a replayed batch double-indexes its vectors (duplicate (n_id, cell)
-    * rows surface as duplicate candidates, which the per-query rank
-    * dedupes only if ids differ in `cos` tie-break — callers needing
-    * exactly-once should dedupe ids upstream or rebuild). A concurrent
-    * [[writeIvfIndex]] rebuild that swaps the root mid-append strands
-    * the batch in the superseded root — serialize appends against
-    * rebuilds upstream (single-writer discipline; [[appendIvfPqIndex]]
-    * turns its worse variant of this race — stale codes landing in the
-    * new root — into a loud failure with a publish epoch; this plain
-    * IVF artifact predates the meta record, so the discipline stays
-    * contractual here). */
-  def appendIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
-    val (centroids, _) = readIvfIndex(spark, path)
-    val c = newVectors.select(col(idCol).as("n_id"),
-      VectorFns.unitizeNative(col(vecCol)).as("n_v"))
-    assignCell(c, "n_id", "n_v", broadcast(centroids))
-      .write.mode("append").parquet(s"$path/assigned.parquet")
   }
 
   // ------------------------------------------------------------ product
@@ -1634,112 +1550,22 @@ object Similarity {
       .select("q_id", "n_id", "rank", "cos_adc")
   }
 
-  /** Persist a PQ index: `codebooks.parquet` (the m×ksub codeword table)
-    * and `codes.parquet` ((n_id, codes) — the compressed corpus, m small
-    * ints per vector). Encode once, query many: the corpus's full
-    * vectors stay wherever they live and are touched again only by
-    * [[pqTopKStored]]'s re-rank over shortlisted ids.
-    *
-    * The TWO tables publish as ONE atomic unit: both are staged under
-    * `<path>.tmp` and the index ROOT is swapped with a single rename
-    * ([[graft.engine.Sinks.swapInto]]). Codes are meaningful only
-    * relative to their codebook — per-table swaps (the r16 shape) left a
-    * window where a reader racing a republish could pair new codebooks
-    * with old codes and silently decode every vector wrong; a root swap
-    * makes the pairing indivisible. */
-  def writePqIndex(
-      corpus: DataFrame, corpusId: String, corpusVec: String, path: String,
-      m: Int = 8, ksub: Int = 16, iters: Int = 2): Unit = {
-    val codebooks = pqCodebooks(corpus, corpusId, corpusVec, m, ksub, iters)
-    val codes = pqEncode(corpus, corpusId, corpusVec, codebooks)
-      .select(col(corpusId).as("n_id"), col("codes"))
-    val spark = corpus.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.engine.Sinks.publishRoot(fs, path) { tmp =>
-      // codebooks are a LOCAL model table (m×ksub rows) — one file, not
-      // min(rows, cores) one-row files (guide §6); the two writes are
-      // independent staging jobs — overlap them (guide §2.6)
-      graft.engine.Overlap.par(
-        codebooks.coalesce(1).write.mode("overwrite")
-          .parquet(s"$tmp/codebooks.parquet"),
-        codes.write.mode("overwrite").parquet(s"$tmp/codes.parquet"))
-      ()
-    }
-  }
-
-  /** Load a stored PQ index written by [[writePqIndex]] (recovering any
-    * half-finished ROOT swap first) as (codebooks, codes) — always a
-    * consistent pair, by the single-root publish contract. */
-  def readPqIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : (DataFrame, DataFrame) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.engine.Sinks.recoverSwap(fs, root)
-    // legacy compatibility with pre-r17 per-table-swap artifacts — see
-    // readIvfIndex; no-op on root-swapped indexes
-    Seq("codebooks", "codes").foreach { name =>
-      graft.engine.Sinks.recoverSwap(fs,
-        new org.apache.hadoop.fs.Path(s"$path/$name.parquet"))
-    }
-    (spark.read.parquet(s"$path/codebooks.parquet"),
-      spark.read.parquet(s"$path/codes.parquet"))
-  }
-
-  /** [[pqTopKRerank]] answered from a STORED index: zero training, zero
-    * re-encoding — the ADC shortlist runs over the persisted codes, and
-    * only the shortlisted ids' full vectors are read back from
-    * `corpusForRerank` for the exact re-rank. The production
-    * amortization shape for repeated queries over a compressed corpus. */
-  def pqTopKStored(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      corpusForRerank: DataFrame, corpusId: String, corpusVec: String,
-      queries: DataFrame, queryId: String, queryVec: String,
-      k: Int, shortlist: Int): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val (codebooks, codes) = readPqIndex(spark, path)
-    val (cb, _) = collectCodebooks(codebooks)
-    val cbF = graft.plans.PqKernels.flatCodebook(cb)
-    val q = queries.select(col(queryId).as("q_id"),
-      VectorFns.unitizeNative(col(queryVec)).as("q_v"))
-      .withColumn("q_lut", graft.plans.PqKernels.lutCol(col("q_v"), cbF,
-        cb.length, cb.head.length))
-    val scored = codes.crossJoin(broadcast(q))
-      .withColumn("cos_adc", graft.plans.PqKernels.adcCol(
-        col("codes"), col("q_lut"), cb.head.length))
-    val ws = Window.partitionBy("q_id")
-      .orderBy(round(col("cos_adc"), 6).desc, col("n_id"))
-    val cand = scored.withColumn("rank", row_number().over(ws))
-      .filter(col("rank") <= shortlist)
-      .select("q_id", "n_id")
-    val c = corpusForRerank.select(col(corpusId).as("n_id"),
-      VectorFns.unitizeNative(col(corpusVec)).as("n_v"))
-    val rescored = rerankChecked(cand, c, q.select("q_id", "q_v"),
-      "pqTopKStored")
-    val w = Window.partitionBy("q_id")
-      .orderBy(round(col("cos"), 6).desc, col("n_id"))
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "n_id", "rank", "cos")
-  }
-
   /** The whole shortlist tuning curve from ONE compressed scan — the
-    * multi-cut form of [[pqTopKStored]]: rank the stored codes' ADC
-    * scores once at the DEEPEST requested shortlist, exact-re-rank that
-    * one candidate set, and derive every shallower cut's top-k from rank
-    * filters over the same pass. Correctness is an algebraic identity,
-    * not an approximation: the cut-`sl` candidate set is exactly the ADC
-    * ranks ≤ sl, and within a fixed exact-cosine ordering the re-rank
-    * position of a row among candidates with `adc_rank ≤ sl` IS the
-    * running count of such candidates at or before it — so each row's
-    * per-cut rank comes from one conditional running sum per cut inside
-    * a single window pass, and the emitted (shortlist, q_id, n_id, rank,
-    * cos) rows equal [[pqTopKStored]] run per cut (SimilaritySpec pins
-    * the equality). Replaces |cuts| full corpus scans + windows +
-    * re-rank joins with exactly one of each — the pq_shortlist_sweep
-    * diagnostic cost 4 stored-search plans for one scored frame's worth
-    * of information. */
+    * multi-cut form of [[ivfPqStoredTopK]] over EVERY cell (a flat PQ
+    * artifact, `nLists = 1`, has exactly one): rank the stored codes'
+    * ADC scores once at the DEEPEST requested shortlist, exact-re-rank
+    * that one candidate set, and derive every shallower cut's top-k from
+    * rank filters over the same pass. Correctness is an algebraic
+    * identity, not an approximation: the cut-`sl` candidate set is
+    * exactly the ADC ranks ≤ sl, and within a fixed exact-cosine
+    * ordering the re-rank position of a row among candidates with
+    * `adc_rank ≤ sl` IS the running count of such candidates at or
+    * before it — so each row's per-cut rank comes from one conditional
+    * running sum per cut inside a single window pass, and the emitted
+    * (shortlist, q_id, n_id, rank, cos) rows equal [[ivfPqStoredTopK]]
+    * run per cut with every cell probed (SimilaritySpec pins the
+    * equality). Replaces |cuts| full scans + windows + re-rank joins
+    * with exactly one of each. */
   def pqStoredShortlistSweep(
       spark: org.apache.spark.sql.SparkSession, path: String,
       corpusForRerank: DataFrame, corpusId: String, corpusVec: String,
@@ -1749,27 +1575,17 @@ object Similarity {
     require(shortlists.nonEmpty, "shortlists must be non-empty")
     val sls = shortlists.distinct.sorted
     require(sls.head >= k, s"every shortlist must be >= k $k, got ${sls.head}")
-    val maxSl = sls.last
-    val (codebooks, codes) = readPqIndex(spark, path)
-    val (cb, _) = collectCodebooks(codebooks)
-    val cbF = graft.plans.PqKernels.flatCodebook(cb)
-    val q = queries.select(col(queryId).as("q_id"),
-      VectorFns.unitizeNative(col(queryVec)).as("q_v"))
-      .withColumn("q_lut", graft.plans.PqKernels.lutCol(col("q_v"), cbF,
-        cb.length, cb.head.length))
-    val scored = codes.crossJoin(broadcast(q))
-      .withColumn("cos_adc", graft.plans.PqKernels.adcCol(
-        col("codes"), col("q_lut"), cb.head.length))
+    // every cell: the kernel keeps min(p, cells) probes
+    val (q, scored) = storedAdcScan(spark, path, queries, queryId, queryVec,
+      nProbe = Int.MaxValue, where = None, caller = "pqStoredShortlistSweep")
     val ws = Window.partitionBy("q_id")
       .orderBy(round(col("cos_adc"), 6).desc, col("n_id"))
     val cand = scored.withColumn("adc_rank", row_number().over(ws))
-      .filter(col("adc_rank") <= maxSl)
+      .filter(col("adc_rank") <= sls.last)
       .select("q_id", "n_id", "adc_rank")
-    val c = corpusForRerank.select(col(corpusId).as("n_id"),
-      VectorFns.unitizeNative(col(corpusVec)).as("n_v"))
-    val rescored = rerankChecked(cand, c, q.select("q_id", "q_v"),
-      "pqStoredShortlistSweep")
-    // one running-frame window in pqTopKStored's exact ordering; each
+    val rescored = rerankChecked(cand, corpusForRerank, corpusId, corpusVec,
+      q, "pqStoredShortlistSweep")
+    // one running-frame window in ivfPqStoredTopK's exact ordering; each
     // cut's rank is the running count of its own candidates
     val w = Window.partitionBy("q_id")
       .orderBy(round(col("cos"), 6).desc, col("n_id"))
@@ -1801,7 +1617,7 @@ object Similarity {
     * approximation; a residual variant would drop into the same plan).
     *
     * Scale shape: clustering and encoding are one-time (and both
-    * persistable — [[writeIvfIndex]] / [[writePqIndex]] discipline); per
+    * persistable — [[writeIvfPqIndex]]); per
     * query the cell probe is a broadcast against nLists rows, the
     * candidate scan is an equi-join on `cell` over ~nProbe/nLists of the
     * compressed corpus, the shortlist is one WindowGroupLimit, and only
@@ -1858,14 +1674,27 @@ object Similarity {
       .select("q_id", "n_id", "rank", "cos")
   }
 
-  /** Persist the COMPOSED IVF+PQ index — coarse centroids, PQ codebooks,
-    * and the per-vector (cell, codes) table — as ONE atomic unit under a
-    * single swap root (the [[writePqIndex]] publish discipline: cells and
-    * codes are meaningful only relative to their centroids/codebooks, so
-    * the pairing must be indivisible). This is the index the production
-    * repeated-query path [[ivfPqStoredTopK]] answers from with ZERO
-    * training or encoding at query time; [[ivfPqTopK]] (which re-trains
-    * both levers per call) remains the one-shot/exploratory form.
+  /** Persist the engine's ONE stored vector index — coarse centroids, PQ
+    * codebooks, and the per-vector (cell, codes) table — as ONE atomic
+    * unit under a single swap root ([[graft.engine.Sinks.publishRoot]]:
+    * cells and codes are meaningful only relative to their
+    * centroids/codebooks, so the pairing must be indivisible, and a
+    * crashed rebuild leaves the previous index live). This is the index
+    * the production repeated-query path [[ivfPqStoredTopK]] answers from
+    * with ZERO training or encoding at query time; [[ivfPqTopK]] (which
+    * re-trains both levers per call) remains the one-shot/exploratory
+    * form. Determinism: k-means and codebooks seed from `xxhash64(id)`,
+    * so the same corpus always persists the same index.
+    *
+    * The other stored shapes are configurations of this artifact:
+    *  - FLAT PQ is `nLists = 1, lloydIters = 0` — one cell holding every
+    *    row, so the codebooks train on exactly [[pqTopKRerank]]'s input
+    *    and [[ivfPqStoredTopK]] at `nProbe = 1` answers as it does;
+    *  - PLAIN IVF is `codec = "raw"`: the index rows store the unit
+    *    vector (n_id, cell, n_v) instead of codes, no codebooks are
+    *    trained, and [[annIvfStored]] scores the probed cells exactly
+    *    (`residual`/`opq` shape PQ codes and are rejected here; `m`,
+    *    `ksub`, `pqIters` are recorded but unused).
     *
     * `residual = true` trains the codebooks on CELL RESIDUALS
     * (v − centroid(cell)) — Jégou et al.'s IVFADC encoding (TPAMI 2011
@@ -1909,8 +1738,13 @@ object Similarity {
       corpus: DataFrame, corpusId: String, corpusVec: String, path: String,
       nLists: Int = 16, lloydIters: Int = 1, m: Int = 8, ksub: Int = 16,
       pqIters: Int = 2, residual: Boolean = false,
-      payload: Seq[String] = Nil, opq: Boolean = false): Unit = {
+      payload: Seq[String] = Nil, opq: Boolean = false,
+      codec: String = "pq"): Unit = {
     val spark = corpus.sparkSession
+    require(codec == "pq" || codec == "raw",
+      s"writeIvfPqIndex: codec must be 'pq' or 'raw', got '$codec'")
+    require(codec == "pq" || !(residual || opq), "writeIvfPqIndex: " +
+      "residual and opq shape PQ codes — the raw codec stores the vectors")
     requirePayloadCols(corpus, corpusId, corpusVec, payload,
       "writeIvfPqIndex")
     val cRaw = corpus.select(col(corpusId).as("n_id") +:
@@ -1942,8 +1776,8 @@ object Similarity {
     val centroids = kmeansCentroids(c, "n_id", "n_v", nLists, lloydIters,
       assumeUnit = true)
     val train = ivfPqTrainRows(c, centroids, residual)
-    val codebooks = pqCodebooks(train, "n_id", "t_v", m, ksub, pqIters,
-      assumeUnit = true)
+    val codebooks = if (codec == "raw") None else Some(pqCodebooks(train,
+      "n_id", "t_v", m, ksub, pqIters, assumeUnit = true))
     val index = ivfPqIndexRows(train, codebooks)
     // meta carries the FULL training config (so [[compactIvfPqIndex]] can
     // rebuild with the exact parameters the artifact was built with, and
@@ -1956,7 +1790,7 @@ object Similarity {
     val epoch = nextIvfPqEpoch(spark, path)
     val meta = localFrame(spark,
       Array(org.apache.spark.sql.Row(residual, nLists, lloydIters, m, ksub,
-        pqIters, epoch, payload, opq)),
+        pqIters, epoch, payload, opq, codec)),
       org.apache.spark.sql.types.StructType(
         Seq(org.apache.spark.sql.types.StructField("residual",
           org.apache.spark.sql.types.BooleanType)) ++
@@ -1969,7 +1803,9 @@ object Similarity {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.StringType, containsNull = false)) :+
         org.apache.spark.sql.types.StructField("opq",
-          org.apache.spark.sql.types.BooleanType)))
+          org.apache.spark.sql.types.BooleanType) :+
+        org.apache.spark.sql.types.StructField("codec",
+          org.apache.spark.sql.types.StringType)))
     val rotTable = rot.map { case (r, dim) =>
       localFrame(spark,
         Array.tabulate(dim)(i => org.apache.spark.sql.Row(
@@ -1996,8 +1832,8 @@ object Similarity {
       graft.engine.Overlap.par4(
         centroids.coalesce(1).write.mode("overwrite")
           .parquet(s"$tmp/centroids.parquet"),
-        codebooks.coalesce(1).write.mode("overwrite")
-          .parquet(s"$tmp/codebooks.parquet"),
+        codebooks.foreach(_.coalesce(1).write.mode("overwrite")
+          .parquet(s"$tmp/codebooks.parquet")),
         {
           meta.coalesce(1).write.mode("overwrite")
             .parquet(s"$tmp/meta.parquet")
@@ -2028,15 +1864,17 @@ object Similarity {
   }
 
   /** The publish record of the index at `path`, recovered and VALIDATED:
-    * a pre-r18 artifact (meta = the residual flag only, no config/epoch)
-    * fails with a clear "rebuild required" instead of an obscure
-    * missing-field error from whichever getAs touches it first. Every
-    * meta consumer — the serving paths ([[ivfPqStoredTopK]],
-    * [[ivfPqStoredProbeSweep]] via [[openStoredIvfPq]]), append, ingest,
-    * compact, health, and the streaming sink — reads through here, so
-    * a degraded artifact is rejected uniformly (yes, read-only search
-    * too: serving against an unvalidated record risks the exact
-    * torn-pairing silent corruption the record exists to rule out). */
+    * an artifact with no `meta.parquet` (the pre-publish-record plain-IVF
+    * `centroids`+`assigned` or flat-PQ `codebooks`+`codes` layouts), a
+    * pre-r18 record (the residual flag only, no config/epoch), or a codec
+    * this engine does not know all fail with a clear "rebuild required"
+    * instead of an obscure missing-path or missing-field error from
+    * whichever read touches it first. Every meta consumer — the serving
+    * paths via [[openStoredIndex]], append, ingest, delete, compact,
+    * health, and the streaming sinks — reads through here, so a degraded
+    * artifact is rejected uniformly (yes, read-only search too: serving
+    * against an unvalidated record risks the exact torn-pairing silent
+    * corruption the record exists to rule out). */
   private[graft] def readIvfPqMeta(
       spark: org.apache.spark.sql.SparkSession, path: String)
       : org.apache.spark.sql.Row = {
@@ -2044,21 +1882,38 @@ object Similarity {
     // swapInto's two renames — restore the stranded root before reading
     // (the Sinks.recoverSwap caller contract)
     val root = new org.apache.hadoop.fs.Path(path)
-    graft.engine.Sinks.recoverSwap(
-      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.engine.Sinks.recoverSwap(fs, root)
+    def rebuild(why: String) = new IllegalStateException(s"index at $path " +
+      s"$why; rebuild required — rebuild it with writeIvfPqIndex (search, " +
+      "append, ingest, delete, compact, and health all require the full " +
+      "publish record)")
+    if (!fs.exists(new org.apache.hadoop.fs.Path(root, "meta.parquet")))
+      throw rebuild("has no meta.parquet — an artifact written before the " +
+        "publish record (the old plain-IVF or flat-PQ layout?)")
     val df = spark.read.parquet(s"$path/meta.parquet")
     val required = Seq("residual", "n_lists", "lloyd_iters", "m", "ksub",
       "pq_iters", "epoch")
     val missing = required.filterNot(df.columns.contains)
     if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"index at $path has a pre-epoch meta.parquet (missing " +
-          s"${missing.mkString(", ")}) — an artifact written before the " +
-          "publish-record/epoch discipline; rebuild it with " +
-          "writeIvfPqIndex (search, append, ingest, compact, and health " +
-          "all require the full publish record)")
-    df.head()
+      throw rebuild(s"has a pre-epoch meta.parquet (missing " +
+        s"${missing.mkString(", ")}) — an artifact written before the " +
+        "publish-record/epoch discipline")
+    val meta = df.head()
+    val codec = ivfPqCodec(meta)
+    if (codec != "pq" && codec != "raw")
+      throw rebuild(s"records codec '$codec' — this engine serves 'pq' " +
+        "and 'raw' only")
+    meta
   }
+
+  /** The codec recorded in an index publish record: `pq` (cell + PQ
+    * codes per row) or `raw` (cell + unit vector per row) — `pq` for
+    * artifacts written before the codec field existed, which were all
+    * IVF-PQ (same back-compat reading as [[ivfPqPayloadCols]]). */
+  private[graft] def ivfPqCodec(meta: org.apache.spark.sql.Row): String =
+    if (!meta.schema.fieldNames.contains("codec")) "pq"
+    else meta.getAs[String]("codec")
 
   /** The payload columns recorded in an index publish record — empty for
     * artifacts written before payload support (r19): payload absence is
@@ -2094,6 +1949,45 @@ object Similarity {
       s"index at $path has a torn rotation.parquet (${rows.length} rows) " +
         "— the OPQ artifact is unusable; rebuild with writeIvfPqIndex")
     (rows.flatMap(_.getSeq[Double](1)), dim)
+  }
+
+  /** A stored index's validated publish record and its bounded model
+    * tables — what every grow path encodes against and every serving
+    * path probes with. `codebooks` is empty for the raw codec. */
+  private[graft] final case class IndexModel(
+      meta: org.apache.spark.sql.Row,
+      rotation: Option[(Array[Double], Int)],
+      centroids: DataFrame, codebooks: Option[DataFrame]) {
+    def epoch: Long = meta.getAs[Long]("epoch")
+    def residual: Boolean = meta.getAs[Boolean]("residual")
+    def payload: Seq[String] = ivfPqPayloadCols(meta)
+    /** The per-row stored representation: PQ codes, or the raw unit
+      * vector. */
+    def codeCol: String = if (codebooks.isEmpty) "n_v" else "codes"
+    /** The model tables as bounded LOCAL relations — a long-lived sink
+      * then re-reads nothing but the 1-row meta per micro-batch. */
+    def localized: IndexModel = {
+      def loc(df: DataFrame) =
+        localFrame(df.sparkSession, df.collect(), df.schema)
+      copy(centroids = loc(centroids), codebooks = codebooks.map(loc))
+    }
+  }
+
+  /** Load the model of the index at `path`. Capture order matters: the
+    * EPOCH (with the whole validated record) is read BEFORE the model
+    * tables. A swap completing between the two then pairs the NEW model
+    * with the OLD epoch and the first commit fails loudly on the guard —
+    * the safe direction; the reverse order would pair the OLD model with
+    * the NEW epoch, and every commit would pass the guard while landing
+    * stale-model rows (r18 review finding). */
+  private[graft] def loadIndexModel(
+      spark: org.apache.spark.sql.SparkSession, path: String): IndexModel = {
+    val meta = readIvfPqMeta(spark, path)
+    IndexModel(meta,
+      if (ivfPqOpqFlag(meta)) Some(loadIvfPqRotation(spark, path)) else None,
+      spark.read.parquet(s"$path/centroids.parquet"),
+      if (ivfPqCodec(meta) == "raw") None
+      else Some(spark.read.parquet(s"$path/codebooks.parquet")))
   }
 
   /** Rotate a unit-vector column by a flat row-major rotation constant,
@@ -2202,84 +2096,88 @@ object Similarity {
       col("n_v").as("t_v") +: extras: _*)
   }
 
-  /** Encode the (n_id, cell, t_v) stage against stored codebooks as ONE
-    * projection — the codebook rides as a plan constant, so this is a
-    * single map pass with no self-join and no re-execution of the
-    * upstream lineage (a self-join of the stage with [[pqEncode]] would
-    * plan the assign window twice and shuffle to re-pair). */
-  private[graft] def ivfPqIndexRows(train: DataFrame, codebooks: DataFrame): DataFrame = {
-    val (cb, _) = collectCodebooks(codebooks)
-    val cbF = graft.plans.PqKernels.flatCodebook(cb)
+  /** Encode the (n_id, cell, t_v) stage as ONE projection — the codec's
+    * one branch point: PQ codes against `codebooks` (the codebook rides
+    * as a plan constant, so this is a single map pass with no self-join
+    * and no re-execution of the upstream lineage — a self-join of the
+    * stage with [[pqEncode]] would plan the assign twice and shuffle to
+    * re-pair), or, with no codebooks, the raw codec's unit vector itself
+    * as `n_v`. */
+  private[graft] def ivfPqIndexRows(
+      train: DataFrame, codebooks: Option[DataFrame]): DataFrame = {
     val extras =
       train.columns.filterNot(Set("n_id", "cell", "t_v").contains).map(col)
-    train.select(col("n_id") +: col("cell") +:
-      graft.plans.PqKernels.encodeCol(col("t_v"), cbF,
-        cb.length, cb.head.length).as("codes") +: extras: _*)
+    val stored = codebooks match {
+      case None => col("t_v").as("n_v")
+      case Some(cbs) =>
+        val (cb, _) = collectCodebooks(cbs)
+        graft.plans.PqKernels.encodeCol(col("t_v"),
+          graft.plans.PqKernels.flatCodebook(cb), cb.length, cb.head.length)
+          .as("codes")
+    }
+    train.select(col("n_id") +: col("cell") +: stored +: extras: _*)
+  }
+
+  /** The one encode step of every grow path ([[appendIvfPqIndex]],
+    * [[ingestIvfPqBatch]], the streaming sinks): project (n_id, unit
+    * n_v, recorded payload), rotate an OPQ artifact's arrivals against
+    * the STORED matrix, assign against the stored centroids and encode
+    * per the codec — the writer's own [[ivfPqTrainRows]] /
+    * [[ivfPqIndexRows]] stages, so grown rows are bit-identical to what
+    * a rebuild would produce. */
+  private[graft] def encodeArrivals(
+      model: IndexModel, batch: DataFrame, idCol: String, vecCol: String,
+      caller: String): DataFrame = {
+    requirePayloadCols(batch, idCol, vecCol, model.payload, caller)
+    val c0 = batch.select(col(idCol).as("n_id") +:
+      VectorFns.unitizeNative(col(vecCol)).as("n_v") +:
+      model.payload.map(col): _*)
+    val c = model.rotation match {
+      case Some((r, dim)) =>
+        c0.withColumn("n_v", rotatedUnit(col("n_v"), r, dim, caller))
+      case None => c0
+    }
+    ivfPqIndexRows(ivfPqTrainRows(c, model.centroids, model.residual),
+      model.codebooks)
   }
 
   /** Incrementally index new vectors into a stored [[writeIvfPqIndex]]
-    * index: assign against the STORED centroids and encode against the
-    * STORED codebooks (honoring the artifact's residual flag) in one
-    * map pass over the new batch only — the corpus is never re-read,
-    * no clustering or codebook training re-runs — and append the
-    * (n_id, cell, codes) rows to the `index` table. The composed-index
-    * twin of [[appendIvfIndex]], with the same contracts: append-mode
-    * parquet is atomic per file but NOT idempotent (a replayed batch
-    * double-indexes — dedupe ids upstream or rebuild), and both the
-    * cell structure and the codebooks age as the corpus drifts; rebuild
-    * with [[writeIvfPqIndex]] when the recall differential over the
-    * grown corpus says so.
+    * index (either codec): assign against the STORED centroids and
+    * encode against the STORED codebooks (honoring the artifact's
+    * residual flag) in one map pass over the new batch only — the corpus
+    * is never re-read, no clustering or codebook training re-runs — and
+    * append the rows to the `index` table. Append is NOT idempotent (a
+    * replayed batch double-indexes — dedupe ids upstream, use
+    * [[ingestIvfPqBatch]], or rebuild), and both the cell structure and
+    * the codebooks age as the corpus drifts; rebuild with
+    * [[writeIvfPqIndex]] when the recall differential over the grown
+    * corpus says so.
     *
     * Concurrency caveat: append reads the model tables, encodes, then
     * commits — a [[writeIvfPqIndex]] rebuild that swaps the root in
     * that window either strands the batch in the superseded root
-    * (silently absent from the new index) or, worse, lands codes
-    * encoded against the OLD codebooks in the NEW index. The publish
-    * EPOCH guards the second, silent shape: the epoch is captured with
-    * the model, re-checked BEFORE the encode job (fail fast), and —
-    * since r19 — the encode job lands in a dot-prefixed STAGING sibling
-    * (invisible to every reader of `index.parquet`), the epoch is
-    * re-verified AFTER the job completes, and only then do the staged
-    * part files rename into the live table — so a rebuild that swaps
-    * the root at ANY point during the encode/write makes the commit
-    * THROW with nothing visible landed (the pre-r19 guard checked only
-    * before the write job, leaving the entire job duration unguarded).
-    * A swap racing the final renames themselves moves the staging dir
-    * into the superseded `.old` root, so the renames fail loudly too.
-    * A rebuild re-encodes the full corpus, so a failed append is
-    * repaired by re-running the batch after the rebuild; a rebuild
-    * that STARTS after a successful commit supersedes it by design
-    * (rebuilds read the corpus, not the index). */
+    * (silently absent from the new index) or, worse, lands rows
+    * encoded against the OLD model in the NEW index. The publish
+    * EPOCH guards both: the epoch is captured with the model
+    * ([[loadIndexModel]]), re-checked BEFORE the encode job (fail fast),
+    * the encode job lands in a dot-prefixed STAGING sibling (invisible
+    * to every reader of `index.parquet`), the epoch is re-verified AFTER
+    * the job completes, and only then do the staged part files rename
+    * into the live table — so a rebuild that swaps the root at ANY point
+    * during the encode/write makes the commit THROW with nothing visible
+    * landed. A swap racing the final renames themselves moves the
+    * staging dir into the superseded `.old` root, so the renames fail
+    * loudly too. A rebuild re-encodes the full corpus, so a failed
+    * append is repaired by re-running the batch after the rebuild; a
+    * rebuild that STARTS after a successful commit supersedes it by
+    * design (rebuilds read the corpus, not the index). */
   def appendIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
-    // epoch FIRST, then the model tables: a swap between the two pairs
-    // the new model with the old epoch and the commit fails loudly (the
-    // safe direction); the reverse pairing would pass the guard with a
-    // stale model
-    val meta = readIvfPqMeta(spark, path)
-    val residual = meta.getAs[Boolean]("residual")
-    val epoch = meta.getAs[Long]("epoch")
-    val payload = ivfPqPayloadCols(meta)
-    requirePayloadCols(newVectors, idCol, vecCol, payload,
-      "appendIvfPqIndex")
-    val rotation =
-      if (ivfPqOpqFlag(meta)) Some(loadIvfPqRotation(spark, path))
-      else None
-    val centroids = spark.read.parquet(s"$path/centroids.parquet")
-    val codebooks = spark.read.parquet(s"$path/codebooks.parquet")
-    val c0 = newVectors.select(col(idCol).as("n_id") +:
-      VectorFns.unitizeNative(col(vecCol)).as("n_v") +: payload.map(col): _*)
-    // an OPQ artifact's model lives in the rotated space — new arrivals
-    // rotate against the STORED matrix before assign/encode
-    val c = rotation match {
-      case Some((r, dim)) => c0.withColumn("n_v",
-        rotatedUnit(col("n_v"), r, dim, "appendIvfPqIndex"))
-      case None => c0
-    }
+    val model = loadIndexModel(spark, path)
     commitIvfPqAppend(spark, path,
-      ivfPqIndexRows(ivfPqTrainRows(c, centroids, residual), codebooks),
-      epoch)
+      encodeArrivals(model, newVectors, idCol, vecCol, "appendIvfPqIndex"),
+      model.epoch)
   }
 
   /** Commit half of [[appendIvfPqIndex]], split out so the epoch guard is
@@ -2416,17 +2314,9 @@ object Similarity {
     * swapping the root between model load and commit throws. */
   def ingestIvfPqBatch(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, vecCol: String, batchId: Long): Unit = {
-    // epoch before models — see appendIvfPqIndex's capture-order note
-    val meta = readIvfPqMeta(spark, path)
-    val centroids = spark.read.parquet(s"$path/centroids.parquet")
-    val codebooks = spark.read.parquet(s"$path/codebooks.parquet")
+      batch: DataFrame, idCol: String, vecCol: String, batchId: Long): Unit =
     commitIvfPqIngest(spark, path, batch, idCol, vecCol, batchId,
-      centroids, codebooks, meta.getAs[Boolean]("residual"),
-      meta.getAs[Long]("epoch"), ivfPqPayloadCols(meta),
-      rotation = if (ivfPqOpqFlag(meta)) Some(loadIvfPqRotation(spark, path))
-                 else None)
-  }
+      loadIndexModel(spark, path))
 
   /** Encode-and-land core shared by [[ingestIvfPqBatch]] and the streaming
     * sink (which pre-loads the bounded model tables once and passes them
@@ -2434,7 +2324,7 @@ object Similarity {
     * over the batch, one delta-partition overwrite — then (r19) a
     * POST-write epoch re-check that QUARANTINES the landed batch dir on
     * mismatch: a rebuild that swapped the root before the write began
-    * would otherwise leave codes encoded against the superseded model
+    * would otherwise leave rows encoded against the superseded model
     * sitting inside the NEW root's delta (the silent corruption the
     * epoch exists to prevent); the batch dir is deterministic
     * (`batch_id=<id>`) so the mismatch path deletes exactly what this
@@ -2444,24 +2334,13 @@ object Similarity {
   private[graft] def commitIvfPqIngest(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, vecCol: String, batchId: Long,
-      centroids: DataFrame, codebooks: DataFrame, residual: Boolean,
-      expectedEpoch: Long, payload: Seq[String] = Nil,
-      rotation: Option[(Array[Double], Int)] = None,
-      afterCheck: () => Unit = () => ()): Unit = {
-    requireIvfPqEpoch(spark, path, expectedEpoch, "ivfPqIngest")
+      model: IndexModel, afterCheck: () => Unit = () => ()): Unit = {
+    requireIvfPqEpoch(spark, path, model.epoch, "ivfPqIngest")
     afterCheck() // test seam: a rebuild racing the encode job lands here
-    requirePayloadCols(batch, idCol, vecCol, payload, "ivfPqIngest")
-    val c0 = batch.select(col(idCol).as("n_id") +:
-      VectorFns.unitizeNative(col(vecCol)).as("n_v") +: payload.map(col): _*)
-    val c = rotation match {
-      case Some((r, dim)) => c0.withColumn("n_v",
-        rotatedUnit(col("n_v"), r, dim, "ivfPqIngest"))
-      case None => c0
-    }
     val dest = s"$path/ingest.parquet/batch_id=$batchId"
-    ivfPqIndexRows(ivfPqTrainRows(c, centroids, residual), codebooks)
+    encodeArrivals(model, batch, idCol, vecCol, "ivfPqIngest")
       .write.mode("overwrite").parquet(dest)
-    try requireIvfPqEpoch(spark, path, expectedEpoch, "ivfPqIngest")
+    try requireIvfPqEpoch(spark, path, model.epoch, "ivfPqIngest")
     catch {
       case e: IllegalStateException =>
         try {
@@ -2478,10 +2357,10 @@ object Similarity {
     }
   }
 
-  /** Compact a stored composed index: rebuild centroids + codebooks +
-    * codes from `corpus` — the GROWN source of truth (base source plus
-    * every ingested/appended arrival; the index stores codes, not
-    * vectors, so compaction must re-read the real vectors) — with the
+  /** Compact a stored index: rebuild centroids + codebooks + codes
+    * from `corpus` — the GROWN source of truth (base source plus every
+    * ingested/appended arrival; the PQ codec stores codes, not vectors,
+    * so compaction must re-read the real vectors) — with the
     * artifact's OWN training config from `meta.parquet`, and swap the
     * root in one atomic publish that drops the ingest delta. The third
     * act of the ingest story: [[graft.streaming.DocStreams
@@ -2522,10 +2401,10 @@ object Similarity {
       // an OPQ compact retrains the ROTATION too (rebuild semantics:
       // the grown corpus deserves a fresh basis, same as fresh cells
       // and codebooks)
-      opq = ivfPqOpqFlag(meta))
+      opq = ivfPqOpqFlag(meta), codec = ivfPqCodec(meta))
   }
 
-  /** Operational health report for a stored composed IVF+PQ index — the
+  /** Operational health report for a stored index (either codec) — the
     * one-row "rebuild yet?" dashboard the append/ingest contracts defer
     * to ([[appendIvfPqIndex]], [[graft.streaming.DocStreams.ivfPqIngestSink]]):
     *
@@ -2539,7 +2418,8 @@ object Similarity {
     *    that hits it scan-heavy) and recall (drifted arrivals piling
     *    into few cells defeat nProbe pruning);
     *  - `bad_codes` — rows whose code array is structurally wrong
-    *    (length ≠ m or a code outside [0, ksub)): always 0 for indexes
+    *    (length ≠ m or a code outside [0, ksub); under the raw codec, a
+    *    vector narrower or wider than the centroids): always 0 for indexes
     *    written here; nonzero means artifact corruption. The m/ksub
     *    bounds come from `meta.parquet` — the publish-time record —
     *    NOT from the codebooks table under audit (deriving them from
@@ -2550,7 +2430,8 @@ object Similarity {
     *    publish record: not exactly m×ksub distinct (sub, code) rows
     *    covering [0,m)×[0,ksub), or non-uniform codeword length. A
     *    torn/foreign codebooks table is reported HERE instead of
-    *    corrupting the `bad_codes` arithmetic;
+    *    corrupting the `bad_codes` arithmetic (always 0 under the raw
+    *    codec, which has none);
     *  - `tombstone_rows` / `dead_rows` — distinct ids deleted via
     *    [[deleteFromIvfPqIndex]], and how many stored rows they
     *    suppress (dead rows still occupy cells and probe cost until
@@ -2568,17 +2449,22 @@ object Similarity {
     // first read goes through readIvfPqMeta, which owns swap recovery —
     // the one recovery site every meta consumer shares
     val metaRow = readIvfPqMeta(spark, path)
-    val nLists = spark.read.parquet(s"$path/centroids.parquet").count()
+    val raw = ivfPqCodec(metaRow) == "raw"
+    val cen = spark.read.parquet(s"$path/centroids.parquet")
+      .agg(count(lit(1)), max(size(col("cv")))).head()
+    val nLists = cen.getLong(0)
     val (m, ksub) =
       (metaRow.getAs[Int]("m").toLong, metaRow.getAs[Int]("ksub").toLong)
-    val cbk = spark.read.parquet(s"$path/codebooks.parquet")
+    // the raw codec trains no codebooks: nothing to disagree with
+    lazy val cbk = spark.read.parquet(s"$path/codebooks.parquet")
       .agg(count(lit(1)).as("rows"),
         countDistinct(col("sub"), col("code")).as("sc"),
         min(col("sub")).as("s0"), max(col("sub")).as("s1"),
         min(col("code")).as("c0"), max(col("code")).as("c1"),
         countDistinct(size(col("cv"))).as("lens")).head()
     val badCodebook =
-      if (cbk.getLong(0) == 0L) 1L
+      if (raw) 0L
+      else if (cbk.getLong(0) == 0L) 1L
       else if (cbk.getLong(0) == m * ksub && cbk.getLong(1) == m * ksub &&
         cbk.getInt(2) == 0 && cbk.getInt(3) == m - 1 &&
         cbk.getInt(4) == 0 && cbk.getInt(5) == ksub - 1 &&
@@ -2611,12 +2497,13 @@ object Similarity {
       } else if (fs.exists(new org.apache.hadoop.fs.Path(
         s"$path/rotation.parquet"))) 1L
       else 0L
+    val stored = if (raw) "n_v" else "codes"
     val base = spark.read.parquet(s"$path/index.parquet")
-      .select("n_id", "cell", "codes")
+      .select("n_id", "cell", stored)
     val ingest = new org.apache.hadoop.fs.Path(s"$path/ingest.parquet")
     val delta =
       if (fs.exists(ingest))
-        spark.read.parquet(ingest.toString).select("n_id", "cell", "codes")
+        spark.read.parquet(ingest.toString).select("n_id", "cell", stored)
       else null
     val all = (if (delta == null) base.withColumn("is_delta", lit(0L))
                else base.withColumn("is_delta", lit(0L))
@@ -2637,10 +2524,13 @@ object Similarity {
       else all.join(broadcast(tomb.withColumn("__dead", lit(1L))),
         Seq("n_id"), "left")
         .withColumn("__dead", coalesce(col("__dead"), lit(0L)))
+    // a raw row is structurally bad when its vector is not centroid-wide
+    val bad =
+      if (raw) size(col("n_v")) =!= lit(if (cen.isNullAt(1)) -1 else cen.getInt(1))
+      else size(col("codes")) =!= lit(m.toInt) ||
+        exists(col("codes"), c => c < 0 || c >= lit(ksub.toInt))
     val r = flagged.select(col("cell"), col("is_delta"), col("__dead"),
-        (size(col("codes")) =!= lit(m.toInt) ||
-          exists(col("codes"), c => c < 0 || c >= lit(ksub.toInt)))
-          .cast("long").as("bad"))
+        bad.cast("long").as("bad"))
       .groupBy("cell")
       .agg(count(lit(1)).as("pop"), sum("bad").as("bad"),
         sum("is_delta").as("d"), sum("__dead").as("dd"))
@@ -2682,33 +2572,26 @@ object Similarity {
             org.apache.spark.sql.types.LongType))))
   }
 
-  /** Open a stored composed index for SERVING — the one implementation
-    * of the open preamble every stored-search path shares (the r18
-    * review found three drifting copies): validated publish record
-    * (swap recovery + pre-epoch rejection via [[readIvfPqMeta]]), the
-    * bounded model tables, and the code table with any streaming-ingest
-    * delta unioned in ([[graft.streaming.DocStreams.ivfPqIngestSink]]
-    * lands arrivals under `ingest.parquet/batch_id=<id>`;
-    * [[compactIvfPqIndex]] folds them away). Returns
-    * (residual, centroids, codebooks, index). [[ivfPqIndexHealth]] does
+  /** Open a stored index for SERVING — the one implementation of the
+    * open every stored-search path shares (the r18 review found three
+    * drifting copies): the validated model ([[loadIndexModel]]: swap
+    * recovery, record/codec validation) and the stored rows with any
+    * streaming-ingest delta unioned in
+    * ([[graft.streaming.DocStreams.ivfPqIngestSink]] lands arrivals
+    * under `ingest.parquet/batch_id=<id>`; [[compactIvfPqIndex]] folds
+    * them away) and tombstoned ids removed. [[ivfPqIndexHealth]] does
     * NOT read through here by design — it must keep base and delta
     * separate to report the split. */
-  private def openStoredIvfPq(
+  private def openStoredIndex(
       spark: org.apache.spark.sql.SparkSession, path: String)
-      : (Boolean, Option[(Array[Double], Int)], DataFrame, DataFrame,
-         DataFrame) = {
-    val meta = readIvfPqMeta(spark, path)
-    val rotation =
-      if (ivfPqOpqFlag(meta)) Some(loadIvfPqRotation(spark, path))
-      else None
-    val centroids = spark.read.parquet(s"$path/centroids.parquet")
-    val codebooks = spark.read.parquet(s"$path/codebooks.parquet")
+      : (IndexModel, DataFrame) = {
+    val model = loadIndexModel(spark, path)
     val rootFs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // explicit column list (structure + recorded payload): base and
     // delta then union by construction, and a foreign column landed in
     // either table can never silently ride into the serving plan
-    val cols = (Seq("n_id", "cell", "codes") ++ ivfPqPayloadCols(meta))
+    val cols = (Seq("n_id", "cell", model.codeCol) ++ model.payload)
       .map(col)
     val baseIndex = spark.read.parquet(s"$path/index.parquet")
       .select(cols: _*)
@@ -2720,7 +2603,7 @@ object Similarity {
       else baseIndex
     // tombstones ([[deleteFromIvfPqIndex]]) suppress deleted ids at the
     // one site every serving path shares — BEFORE the probe join and
-    // ADC scan, so dead rows neither appear in results nor waste
+    // scoring, so dead rows neither appear in results nor waste
     // shortlist slots. Broadcast anti: the tombstone table is bounded
     // by the deletes between compactions.
     val tomb = new org.apache.hadoop.fs.Path(s"$path/tombstones.parquet")
@@ -2729,12 +2612,60 @@ object Similarity {
         index.join(broadcast(spark.read.parquet(tomb.toString)
           .select("n_id")), Seq("n_id"), "left_anti")
       else index
-    (meta.getAs[Boolean]("residual"), rotation, centroids, codebooks,
-      served)
+    (model, served)
+  }
+
+  /** The query preamble every PQ serving path shares ([[ivfPqStoredTopK]],
+    * the probe sweeps, [[pqStoredShortlistSweep]] and their filtered
+    * variants): open the artifact with `where` applied to the stored
+    * scan (eligibility prunes the scan and its parquet row groups, never
+    * a finished top-k), unitize the queries, rotate them into an OPQ
+    * artifact's space, project the per-query LUT once BEFORE the probe
+    * fanout, probe the `nProbe` nearest cells (ranked — `probe_rank`
+    * answers every smaller budget by filter) and ADC-score the probed
+    * cells' codes, adding the exact q·centroid term under residual
+    * encoding. Returns the original-space (q_id, q_v) queries for the
+    * exact re-rank (rotation preserves dots, and the re-rank corpus is
+    * original-space) and the scored rows (n_id, probe_rank, cos_adc,
+    * ...). */
+  private def storedAdcScan(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      queries: DataFrame, queryId: String, queryVec: String, nProbe: Int,
+      where: Option[Column], caller: String): (DataFrame, DataFrame) = {
+    val (model, served) = openStoredIndex(spark, path)
+    val (cb, _) = collectCodebooks(model.codebooks.getOrElse(throw
+      new IllegalArgumentException(s"$caller: the index at $path stores " +
+        "the raw codec (vectors, no codes) — search it with annIvfStored")))
+    val ksub = cb.head.length
+    val index = where.map(served.filter).getOrElse(served)
+    val q = queries.select(col(queryId).as("q_id"),
+        VectorFns.unitizeNative(col(queryVec)).as("q_v"))
+      .withColumn("q_sv", model.rotation match {
+        case Some((r, dim)) => rotatedUnit(col("q_v"), r, dim, caller)
+        case None => col("q_v")
+      })
+    // q_v is not needed past the LUT — the re-rank re-derives it from q
+    val probed = assignCellsRanked(
+      q.withColumn("q_lut", graft.plans.PqKernels.lutCol(col("q_sv"),
+        graft.plans.PqKernels.flatCodebook(cb), cb.length, ksub))
+        .drop("q_v"),
+      "q_id", "q_sv", model.centroids, p = nProbe)
+    val adc = graft.plans.PqKernels.adcCol(col("codes"), col("q_lut"), ksub)
+    // the ranked assignment carries each probed cell's cv, so the
+    // residual q·c term needs no centroid join
+    val scored =
+      if (model.residual)
+        index.join(broadcast(probed
+            .withColumn("__qc", VectorFns.dotNative(col("q_sv"), col("cv")))
+            .drop("cv")), Seq("cell"))
+          .withColumn("cos_adc", col("__qc") + adc)
+      else index.join(broadcast(probed.drop("cv")), Seq("cell"))
+        .withColumn("cos_adc", adc)
+    (q.select("q_id", "q_v"), scored)
   }
 
   /** Exact re-rank of shortlisted candidates that REFUSES to silently
-    * drop ids missing from `c` (the caller-supplied re-rank corpus):
+    * drop ids missing from `corpusForRerank`:
     * shared by every STORED-index search path, where the corpus argument
     * can drift from what was indexed — a plain inner join would then
     * shrink each query's candidate set (and its recall) with no
@@ -2760,8 +2691,11 @@ object Similarity {
     * reported as index-side instead of misdirecting the operator at
     * corpusForRerank. */
   private def rerankChecked(
-      cand: DataFrame, c: DataFrame, qkeyed: DataFrame,
+      cand: DataFrame, corpusForRerank: DataFrame, corpusId: String,
+      corpusVec: String, qkeyed: DataFrame,
       caller: String, allowVanished: Boolean = false): DataFrame = {
+    val c = corpusForRerank.select(col(corpusId).as("n_id"),
+      VectorFns.unitizeNative(col(corpusVec)).as("n_v"))
     val wq = Window.partitionBy("q_id")
     val checked = cand
       // pair count on the SHORTLIST side, before the corpus join: > 1
@@ -2897,60 +2831,15 @@ object Similarity {
       caller: String): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val (residual, rotation, centroids, codebooks, indexAll) =
-      openStoredIvfPq(spark, path)
-    // the predicate lands HERE — on the stored code table, before the
-    // probe join and the ADC kernel: eligibility prunes the scan (and
-    // its parquet row groups), never the finished top-k
-    val index = where.map(indexAll.filter).getOrElse(indexAll)
-    val (cb, _) = collectCodebooks(codebooks)
-    val cbF = graft.plans.PqKernels.flatCodebook(cb)
-    val ksub = cb.head.length
-    // an OPQ artifact's cells/codes live in the rotated space: the
-    // SEARCH vector q_sv rotates against the stored matrix, while q_v
-    // stays in the original space for the exact re-rank (the rotation
-    // preserves dots, so either space gives the same cosines — the
-    // re-rank corpus is original-space, so original is the cheap side)
-    val q = queries.select(col(queryId).as("q_id"),
-        VectorFns.unitizeNative(col(queryVec)).as("q_v"))
-      .withColumn("q_sv", rotation match {
-        case Some((r, dim)) => rotatedUnit(col("q_v"), r, dim, caller)
-        case None => col("q_v")
-      })
-    // LUT projected BEFORE the probe fanout (once per query row, copied
-    // into the nProbe probe rows); the q·c term is inherently per
-    // (query, cell) and stays after it
-    // q_v (original space) is NOT needed past this point — the re-rank
-    // re-derives it from `q` — so drop it before the nProbe fanout and
-    // the per-cell broadcast (explicit, though column pruning would
-    // also strip unreferenced vectors from the exchange)
-    val qLut = q.withColumn("q_lut", graft.plans.PqKernels.lutCol(
-      col("q_sv"), cbF, cb.length, ksub)).drop("q_v")
-    val probedBase = assignCells(qLut, "q_id", "q_sv", centroids,
-      p = nProbe)
-    // the centroid join exists only to recover cv for the residual
-    // q·c term — the plain (default) path skips the join entirely
-    val scored =
-      if (residual) {
-        val probed = probedBase.join(broadcast(centroids), Seq("cell"))
-          .withColumn("__qc", VectorFns.dotNative(col("q_sv"), col("cv")))
-          .drop("cv")
-        index.join(broadcast(probed), Seq("cell"))
-          .withColumn("cos_adc", col("__qc") +
-            graft.plans.PqKernels.adcCol(col("codes"), col("q_lut"), ksub))
-      } else
-        index.join(broadcast(probedBase), Seq("cell"))
-          .withColumn("cos_adc",
-            graft.plans.PqKernels.adcCol(col("codes"), col("q_lut"), ksub))
+    val (q, scored) = storedAdcScan(spark, path, queries, queryId, queryVec,
+      nProbe, where, caller)
     val ws = Window.partitionBy("q_id")
       .orderBy(round(col("cos_adc"), 6).desc, col("n_id"))
     val cand = scored.withColumn("rank", row_number().over(ws))
       .filter(col("rank") <= shortlist)
       .select("q_id", "n_id")
-    val c = corpusForRerank.select(col(corpusId).as("n_id"),
-      VectorFns.unitizeNative(col(corpusVec)).as("n_v"))
-    val rescored = rerankChecked(cand, c, q.select("q_id", "q_v"),
-      caller, allowVanished = where.isDefined)
+    val rescored = rerankChecked(cand, corpusForRerank, corpusId, corpusVec,
+      q, caller, allowVanished = where.isDefined)
     val w = Window.partitionBy("q_id")
       .orderBy(round(col("cos"), 6).desc, col("n_id"))
     rescored.withColumn("rank", row_number().over(w))
@@ -3022,41 +2911,8 @@ object Similarity {
     require(probes.nonEmpty, "probes must be non-empty")
     val ps = probes.distinct.sorted
     require(ps.head >= 1, s"every probe budget must be >= 1, got ${ps.head}")
-    val maxP = ps.last
-    val (residual, rotation, centroids, codebooks, indexAll) =
-      openStoredIvfPq(spark, path)
-    // filtered sweep: eligibility prunes the scan, never the curve
-    val index = where.map(indexAll.filter).getOrElse(indexAll)
-    val (cb, _) = collectCodebooks(codebooks)
-    val cbF = graft.plans.PqKernels.flatCodebook(cb)
-    val ksub = cb.head.length
-    // OPQ: probe/ADC in the rotated space, exact re-rank in the
-    // original (the ivfPqStoredTopKCore convention)
-    val q = queries.select(col(queryId).as("q_id"),
-        VectorFns.unitizeNative(col(queryVec)).as("q_v"))
-      .withColumn("q_sv", rotation match {
-        case Some((r, dim)) =>
-          rotatedUnit(col("q_v"), r, dim, caller)
-        case None => col("q_v")
-      })
-    // q_v dropped before the fanout — the re-rank re-derives it from `q`
-    val qLut = q.withColumn("q_lut", graft.plans.PqKernels.lutCol(
-      col("q_sv"), cbF, cb.length, ksub)).drop("q_v")
-    // the ranked assignment keeps cv from its own centroid fanout, so
-    // the residual q·c term needs no second centroid join here
-    val probedR = assignCellsRanked(qLut, "q_id", "q_sv", centroids,
-      p = maxP)
-    val probed =
-      if (residual) probedR
-        .withColumn("__qc", VectorFns.dotNative(col("q_sv"), col("cv")))
-        .drop("cv")
-      else probedR.drop("cv")
-    val scoredBase = index.join(broadcast(probed), Seq("cell"))
-    val scored =
-      if (residual) scoredBase.withColumn("cos_adc", col("__qc") +
-        graft.plans.PqKernels.adcCol(col("codes"), col("q_lut"), ksub))
-      else scoredBase.withColumn("cos_adc",
-        graft.plans.PqKernels.adcCol(col("codes"), col("q_lut"), ksub))
+    val (q, scored) = storedAdcScan(spark, path, queries, queryId, queryVec,
+      ps.last, where, caller)
     val adcW = Window.partitionBy("q_id")
       .orderBy(round(col("cos_adc"), 6).desc, col("n_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3074,10 +2930,8 @@ object Similarity {
       .filter(ps.map(p0 => col(s"__in_$p0")).reduce(_ || _))
       .select(col("q_id") +: col("n_id") +:
         ps.map(p0 => col(s"__in_$p0")): _*)
-    val c = corpusForRerank.select(col(corpusId).as("n_id"),
-      VectorFns.unitizeNative(col(corpusVec)).as("n_v"))
-    val rescored = rerankChecked(cand, c, q.select("q_id", "q_v"),
-      caller, allowVanished = where.isDefined)
+    val rescored = rerankChecked(cand, corpusForRerank, corpusId, corpusVec,
+      q, caller, allowVanished = where.isDefined)
     val cosW = Window.partitionBy("q_id")
       .orderBy(round(col("cos"), 6).desc, col("n_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -843,7 +843,7 @@ object TextAnalysis {
     * [[bpeMerges]] and write the merge table as a versioned on-disk
     * artifact with the write-then-swap discipline (one table, one
     * atomic root swap — the [[Classify.writeNbModel]] /
-    * `Similarity.writePqIndex` contract, completing the
+    * `Similarity.writeIvfPqIndex` contract, completing the
     * learn-once/apply-many story for the BPE family: train here once,
     * then [[bpeApply]] batches and `DocStreams.bpeCountArrivals`
     * streams against [[readBpeModel]]'s table across restarts, the

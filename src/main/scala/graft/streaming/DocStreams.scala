@@ -594,43 +594,15 @@ object DocStreams {
           lit(0L), (acc, x) => acc + x))
   }
 
-  /** The ONE model-capture preamble both ingest sinks share (r19 review:
-    * two drifting copies is how the r17 publish bugs happened). Capture
-    * order matters: the EPOCH is read BEFORE the model tables. A swap
-    * completing between the two then pairs the NEW model with the OLD
-    * epoch and the first commit fails loudly on the guard — the safe
-    * direction. The reverse order (models first) would pair the OLD
-    * model with the NEW epoch, and every commit would pass the guard
-    * while landing stale-model codes: the exact silent corruption the
-    * epoch exists to prevent (r18 review finding). Model tables come
-    * back as bounded LOCAL relations — micro-batches re-read nothing
-    * but the 1-row meta at commit time. */
-  private def captureStoredIvfPqModel(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : (Boolean, Long, Seq[String], Option[(Array[Double], Int)],
-         DataFrame, DataFrame) = {
-    val Sim = graft.operators.Similarity
-    def localCopy(p: String) = {
-      val df = spark.read.parquet(p)
-      Sim.localFrame(spark, df.collect(), df.schema)
-    }
-    val meta = Sim.readIvfPqMeta(spark, path)
-    (meta.getAs[Boolean]("residual"), meta.getAs[Long]("epoch"),
-      Sim.ivfPqPayloadCols(meta),
-      if (Sim.ivfPqOpqFlag(meta)) Some(Sim.loadIvfPqRotation(spark, path))
-      else None,
-      localCopy(s"$path/centroids.parquet"),
-      localCopy(s"$path/codebooks.parquet"))
-  }
-
-  /** Continuous vector ingest into a stored composed IVF+PQ index
-    * ([[graft.operators.Similarity.writeIvfPqIndex]]) — the streaming
-    * twin of [[graft.operators.Similarity.appendIvfPqIndex]]: each
-    * micro-batch is assigned against the STORED centroids and encoded
-    * against the STORED codebooks (honoring the artifact's residual
-    * flag) in one map pass — no training, no corpus re-read — through
-    * the batch appender's OWN encode stage
-    * ([[graft.operators.Similarity.ivfPqIndexRows]]), so the two paths
+  /** Continuous vector ingest into a stored index
+    * ([[graft.operators.Similarity.writeIvfPqIndex]], either codec) — the
+    * streaming twin of [[graft.operators.Similarity.appendIvfPqIndex]]:
+    * each micro-batch is assigned against the STORED centroids and
+    * encoded per the artifact's codec (PQ codes against the STORED
+    * codebooks, honoring the residual flag, or the raw unit vector) in
+    * one map pass — no training, no corpus re-read — through the batch
+    * appender's OWN encode step
+    * ([[graft.operators.Similarity.encodeArrivals]]), so the two paths
     * cannot diverge (StreamingSpec pins parity).
     *
     * Unlike the batch appender (parquet append-mode, NOT idempotent),
@@ -645,8 +617,9 @@ object DocStreams {
     * `ivf_pq_health`'s delta share says so.
     *
     * The model tables are loaded ONCE at construction into local
-    * relations (bounded: nLists centroids, m×ksub codewords) — micro-
-    * batches re-read nothing except the 1-row meta: each batch
+    * relations ([[graft.operators.Similarity.loadIndexModel]], epoch
+    * before model tables; bounded: nLists centroids, m×ksub codewords) —
+    * micro-batches re-read nothing except the 1-row meta: each batch
     * re-verifies the index's publish EPOCH before landing
     * ([[graft.operators.Similarity.commitIvfPqIngest]]) so a
     * rebuild/compaction swapping the root mid-stream FAILS the batch
@@ -659,15 +632,14 @@ object DocStreams {
     require(stream.isStreaming, "stream must be a streaming DataFrame")
     val spark = stream.sparkSession
     val Sim = graft.operators.Similarity
-    val (residual, epoch, payload, rotation, centroids, codebooks) =
-      captureStoredIvfPqModel(spark, path)
+    val model = Sim.loadIndexModel(spark, path).localized
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           if (!batch.isEmpty)
             Sim.commitIvfPqIngest(spark, path, batch.toDF(), idCol, vecCol,
-              id, centroids, codebooks, residual, epoch, payload, rotation)
+              id, model)
           (): Unit
       }
       .start()
@@ -724,8 +696,8 @@ object DocStreams {
         s"(${evalQueries.columns.mkString(", ")})")
     val spark = stream.sparkSession
     val Sim = graft.operators.Similarity
-    val (residual, epoch, payload, rotation, centroids, codebooks) =
-      captureStoredIvfPqModel(spark, path)
+    val model = Sim.loadIndexModel(spark, path).localized
+    val payload = model.payload
     val vecRoot = s"$outRoot/vectors"
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -733,7 +705,7 @@ object DocStreams {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
           if (!batch.isEmpty) {
             Sim.commitIvfPqIngest(spark, path, batch.toDF(), idCol, vecCol,
-              id, centroids, codebooks, residual, epoch, payload, rotation)
+              id, model)
             batch.toDF().select(col(idCol) +: col(vecCol) +:
                 payload.map(col): _*)
               .write.mode("overwrite").parquet(s"$vecRoot/batch_id=$id")

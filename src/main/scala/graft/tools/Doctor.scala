@@ -85,13 +85,13 @@ object Doctor {
         zonePruningAudit(spark, dir).orderBy("zone"))
   }
 
-  /** Stored IVF+PQ index health as a doctor section — the
+  /** Stored vector index health (either codec) as a doctor section — the
     * [[graft.operators.Similarity.ivfPqIndexHealth]] dashboard plus the
     * one-line operational verdict, so "rebuild yet?" is answerable from
     * the same command that audits the corpus the index serves. */
   def indexSection(
       spark: SparkSession, indexPath: String): Seq[(String, DataFrame)] =
-    Seq(s"stored IVF+PQ index health ($indexPath)" ->
+    Seq(s"stored vector index health ($indexPath)" ->
       graft.operators.Similarity.ivfPqIndexHealth(spark, indexPath))
 
   /** The operational verdict over a health row — thresholds are advisory
@@ -108,15 +108,18 @@ object Doctor {
     val share = if (total > 0) delta.toDouble / total else 0.0
     if (h.getAs[Long]("bad_codebook") != 0L)
       "CORRUPT: codebooks table disagrees with the publish record — " +
-        "restore from a good publish or rebuild (writeIvfPqIndex)"
+        "restore from a good publish or rebuild (writeIvfPqIndex with " +
+        "the recorded config and codec; compactIvfPqIndex replays them)"
     else if (h.getAs[Long]("bad_rotation") != 0L)
       "CORRUPT: OPQ rotation is missing, torn, non-orthonormal, or " +
         "foreign to the publish record — codes are meaningless without " +
-        "it; restore from a good publish or rebuild (writeIvfPqIndex)"
+        "it; restore from a good publish or rebuild (writeIvfPqIndex " +
+        "with the recorded config and codec)"
     else if (h.getAs[Long]("bad_codes") != 0L)
       s"CORRUPT: ${h.getAs[Long]("bad_codes")} structurally invalid " +
-        "index rows — rebuild (writeIvfPqIndex); audit the corpus with " +
-        "embed_integrity first"
+        "index rows (PQ codes outside the codebook, or raw vectors not " +
+        "centroid-wide) — rebuild (writeIvfPqIndex with the recorded " +
+        "codec); audit the corpus with embed_integrity first"
     else if (share > 0.25)
       f"COMPACT: ${share * 100}%.0f%% of the index is ingest delta " +
         "encoded by a model that never saw it — compactIvfPqIndex over " +

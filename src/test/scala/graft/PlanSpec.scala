@@ -527,8 +527,8 @@ class PlanSpec extends SparkSpec {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val idx = java.nio.file.Files.createTempDirectory("graft-plan-pqsw").toString
     try {
-      graft.operators.Similarity.writePqIndex(e, "vec_id", "embedding",
-        idx, m = 8, ksub = 16, iters = 1)
+      graft.operators.Similarity.writeIvfPqIndex(e, "vec_id", "embedding",
+        idx, nLists = 1, lloydIters = 0, m = 8, ksub = 16, pqIters = 1)
       val q = graft.operators.Similarity.pqStoredShortlistSweep(spark, idx,
         e, "vec_id", "embedding", e.filter(col("vec_id") < 3), "vec_id",
         "embedding", k = 3, shortlists = Seq(3, 6, 12))

@@ -11,6 +11,17 @@ class SimilaritySpec extends SparkSpec {
   private lazy val emb = graft.engine.Tables.load(spark, dir, "embeddings")
   private lazy val queries = emb.filter(col("vec_id") < 10)
 
+  test("vector-index keys release every checkpointed arm once their result is collected") {
+    Seq("ivf_pq_opq_sweep", "ivf_pq_incr", "ivf_pq_delete",
+      "ivf_pq_probe_sweep", "ivf_pq_filtered_sweep", "pq_shortlist_sweep",
+      "ann_probe_sweep").foreach { key =>
+      val (rows, added) =
+        persistedBy(SparkEntry.queries(key)(spark, dir).collect())
+      assert(rows.nonEmpty, key)
+      assert(added.isEmpty, s"$key left persisted RDDs ${added.mkString(", ")}")
+    }
+  }
+
   test("bruteForceTopK: each query's rank-1 neighbor is itself with cosine 1") {
     val top = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
       queries, "vec_id", "embedding", k = 5)
@@ -431,10 +442,18 @@ class SimilaritySpec extends SparkSpec {
     df.select("q_id", "n_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
+  // the plain-IVF artifact is the stored index's raw codec
+  private def writeRawIvf(df: org.apache.spark.sql.DataFrame, idx: String) =
+    Similarity.writeIvfPqIndex(df, "vec_id", "embedding", idx,
+      nLists = 8, lloydIters = 1, codec = "raw")
+
   test("writeIvfIndex round-trip: stored index answers identically to the in-memory build") {
     val idx = java.nio.file.Files.createTempDirectory("ivf-rt").toString
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx,
-      nLists = 8, lloydIters = 1)
+    writeRawIvf(emb, idx)
+    val meta = spark.read.parquet(s"$idx/meta.parquet").head()
+    assert(meta.getAs[String]("codec") == "raw" && meta.getAs[Long]("epoch") == 1L)
+    assert(!new java.io.File(s"$idx/codebooks.parquet").exists(),
+      "the raw codec trains no codebooks")
     // the in-memory comparator built the same deterministic way
     val c = emb.select(col("vec_id").as("n_id"),
       graft.functions.VectorFns.unitizeNative(col("embedding")).as("n_v"))
@@ -447,27 +466,33 @@ class SimilaritySpec extends SparkSpec {
       queries, "vec_id", "embedding", k = 5, nProbe = 2)
     assert(topkSet(stored) == topkSet(mem),
       "stored and in-memory IVF must answer bit-identically")
+    // the PQ serving paths refuse a raw artifact by name
+    val ex = intercept[IllegalArgumentException](Similarity.ivfPqStoredTopK(
+      spark, idx, emb, "vec_id", "embedding", queries, "vec_id",
+      "embedding", k = 5, shortlist = 10))
+    assert(ex.getMessage.contains("annIvfStored"), ex.getMessage)
     // a rebuild over the same corpus is a no-op diff (deterministic seeds).
     // Materialize the first snapshot BEFORE rebuilding: the swap renames
     // the live dir's files out from under a still-lazy reader.
-    val (cen1, asg1) = Similarity.readIvfIndex(spark, idx)
+    def tables() = (spark.read.parquet(s"$idx/centroids.parquet"),
+      spark.read.parquet(s"$idx/index.parquet"))
+    val (cen1, asg1) = tables()
     val cen1Rows = cen1.collect().toSet
-    val asg1N = asg1.count()
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx,
-      nLists = 8, lloydIters = 1)
-    val (cen2, asg2) = Similarity.readIvfIndex(spark, idx)
+    val asg1Rows = asg1.collect().map(_.toSeq).toSet
+    writeRawIvf(emb, idx)
+    val (cen2, asg2) = tables()
     assert(cen1Rows == cen2.collect().toSet)
-    assert(asg1N == asg2.count())
+    assert(asg1Rows == asg2.collect().map(_.toSeq).toSet)
   }
 
   test("appendIvfIndex: incremental half equals building the assignment over the full corpus") {
     val idx = java.nio.file.Files.createTempDirectory("ivf-app").toString
     val half1 = emb.filter(col("vec_id") % 2 === 0)
     val half2 = emb.filter(col("vec_id") % 2 === 1)
-    Similarity.writeIvfIndex(half1, "vec_id", "embedding", idx,
-      nLists = 8, lloydIters = 1)
-    Similarity.appendIvfIndex(spark, idx, half2, "vec_id", "embedding")
-    val (centroids, assigned) = Similarity.readIvfIndex(spark, idx)
+    writeRawIvf(half1, idx)
+    Similarity.appendIvfPqIndex(spark, idx, half2, "vec_id", "embedding")
+    val centroids = spark.read.parquet(s"$idx/centroids.parquet")
+    val assigned = spark.read.parquet(s"$idx/index.parquet")
     assert(assigned.count() == emb.count(),
       "append must index every new vector exactly once")
     // per-row map-side assignment: assigning the halves separately against
@@ -531,22 +556,34 @@ class SimilaritySpec extends SparkSpec {
         m = 2, ksub = 4))
   }
 
+  // flat PQ is the stored index with one cell and no Lloyd pass
+  private def writeFlatPq(idx: String) =
+    Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
+      nLists = 1, lloydIters = 0, m = 8, ksub = 16, pqIters = 2)
+
   test("writePqIndex round-trip: stored codes answer identically to the in-memory path") {
     val idx = java.nio.file.Files.createTempDirectory("graft-pq-spec").toString
     try {
-      Similarity.writePqIndex(emb, "vec_id", "embedding", idx,
-        m = 8, ksub = 16, iters = 2)
-      val (cbStored, codesStored) = Similarity.readPqIndex(spark, idx)
+      writeFlatPq(idx)
+      val cbStored = spark.read.parquet(s"$idx/codebooks.parquet")
+      val codesStored = spark.read.parquet(s"$idx/index.parquet")
+      assert(codesStored.select("cell").distinct().count() == 1L,
+        "a flat PQ artifact is one cell")
+      // the one-cell layout trains exactly pqTopKRerank's codebooks
+      assert(cbStored.collect().map(_.toSeq).toSet ==
+        Similarity.pqCodebooks(emb, "vec_id", "embedding", m = 8, ksub = 16,
+          iters = 2).collect().map(_.toSeq).toSet)
       // persisted codes == re-encoding against the persisted codebooks
       val again = Similarity.pqEncode(emb, "vec_id", "embedding", cbStored)
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-      val stored = codesStored.collect()
+      val stored = codesStored.select("n_id", "codes").collect()
         .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
       assert(stored == again)
       // and the stored query path equals the in-memory rerank end-to-end
       val q = emb.filter(col("vec_id") < 5)
-      val a = Similarity.pqTopKStored(spark, idx, emb, "vec_id", "embedding",
-          q, "vec_id", "embedding", k = 5, shortlist = 20)
+      val a = Similarity.ivfPqStoredTopK(spark, idx, emb, "vec_id",
+          "embedding", q, "vec_id", "embedding", k = 5, shortlist = 20,
+          nProbe = 1)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       val b = Similarity.pqTopKRerank(emb, "vec_id", "embedding",
           q, "vec_id", "embedding", k = 5, shortlist = 20,
@@ -704,7 +741,8 @@ class SimilaritySpec extends SparkSpec {
         .select(col("vec_id").as("n_id"),
           graft.functions.VectorFns.unitizeNative(col("embedding")).as("n_v"))
       Similarity.ivfPqIndexRows(
-          Similarity.ivfPqTrainRows(c, centroids, residual = false), codebooks)
+          Similarity.ivfPqTrainRows(c, centroids, residual = false),
+          Some(codebooks))
         .write.parquet(s"$idx/ingest.parquet/batch_id=0")
       val h1 = Similarity.ivfPqIndexHealth(spark, idx).head()
       assert(h1.getAs[Long]("total_indexed") == emb.count())
@@ -728,27 +766,6 @@ class SimilaritySpec extends SparkSpec {
       val h2 = Similarity.ivfPqIndexHealth(spark, idx).head()
       assert(h2.getAs[Long]("bad_codes") == 2L, h2.toString)
       assert(h2.getAs[Long]("total_indexed") == emb.count() + 2)
-    } finally fs.delete(new org.apache.hadoop.fs.Path(idx), true)
-  }
-
-  test("readIvfIndex recovers a legacy per-table crash window (pre-r17 artifact with a table stranded at .old)") {
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-legacy").toString
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx,
-        nLists = 4, lloydIters = 1)
-      val before = Similarity.readIvfIndex(spark, idx)._1.count()
-      // simulate the pre-r17 per-table swap dying between its renames:
-      // centroids live path absent, only copy at .old — root recovery
-      // alone is a no-op here (the root exists)
-      val live = new org.apache.hadoop.fs.Path(s"$idx/centroids.parquet")
-      require(fs.rename(live,
-        new org.apache.hadoop.fs.Path(s"$idx/centroids.parquet.old")))
-      val (centroids, assigned) = Similarity.readIvfIndex(spark, idx)
-      assert(centroids.count() == before,
-        "per-table recovery must restore the stranded table")
-      assert(assigned.count() > 0)
     } finally fs.delete(new org.apache.hadoop.fs.Path(idx), true)
   }
 
@@ -825,53 +842,50 @@ class SimilaritySpec extends SparkSpec {
         q, "vec_id", "embedding", k = 10, shortlist = 5))
   }
 
+  // both codecs of the one stored artifact share the epoch-guarded
+  // grow paths: PQ codes and the plain-IVF raw vectors
+  private val codecs = Seq("pq", "raw")
+
   test("epoch guard: a rebuild between model load and commit makes append/ingest THROW with nothing landed") {
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivfpq-ep").toString
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      Similarity.writeIvfPqIndex(emb.filter(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", idx, nLists = 4, lloydIters = 1,
-        m = 8, ksub = 16, pqIters = 1)
-      assert(Similarity.readIvfPqEpoch(spark, idx) == 1L)
-      // simulate the race the scaladoc documents: model loaded at epoch 1,
-      // a rebuild swaps the root (epoch 2) before the commit
-      val centroids = spark.read.parquet(s"$idx/centroids.parquet")
-        .collect()
-      val staleCentroids = Similarity.localFrame(spark, centroids,
-        spark.read.parquet(s"$idx/centroids.parquet").schema)
-      val staleCodebooks = Similarity.localFrame(spark,
-        spark.read.parquet(s"$idx/codebooks.parquet").collect(),
-        spark.read.parquet(s"$idx/codebooks.parquet").schema)
-      Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", idx,
-        nLists = 4, lloydIters = 1, m = 8, ksub = 16, pqIters = 1)
-      assert(Similarity.readIvfPqEpoch(spark, idx) == 2L)
-      val rebuiltCount = spark.read.parquet(s"$idx/index.parquet").count()
-      val odd = emb.filter(col("vec_id") % 2 === 1)
-      val c = odd.select(col("vec_id").as("n_id"),
-        graft.functions.VectorFns.unitizeNative(col("embedding")).as("n_v"))
-      val staleRows = Similarity.ivfPqIndexRows(
-        Similarity.ivfPqTrainRows(c, staleCentroids, residual = false),
-        staleCodebooks)
-      val exA = intercept[IllegalStateException](
-        Similarity.commitIvfPqAppend(spark, idx, staleRows,
-          expectedEpoch = 1L))
-      assert(exA.getMessage.contains("republished"), exA.getMessage)
-      assert(spark.read.parquet(s"$idx/index.parquet").count() == rebuiltCount,
-        "the stale append must land NOTHING in the new root")
-      val exI = intercept[IllegalStateException](
-        Similarity.commitIvfPqIngest(spark, idx, odd, "vec_id", "embedding",
-          batchId = 0L, centroids = staleCentroids,
-          codebooks = staleCodebooks, residual = false, expectedEpoch = 1L))
-      assert(exI.getMessage.contains("republished"), exI.getMessage)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/ingest.parquet")),
-        "the stale ingest batch must land NOTHING in the new root")
-      // the happy path still commits at the CURRENT epoch
-      Similarity.appendIvfPqIndex(spark, idx, odd.limit(1), "vec_id",
-        "embedding")
-      assert(spark.read.parquet(s"$idx/index.parquet").count() ==
-        rebuiltCount + 1)
-    } finally fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+    codecs.foreach { codec =>
+      val idx = java.nio.file.Files.createTempDirectory(s"graft-ep-$codec").toString
+      val fs = new org.apache.hadoop.fs.Path(idx)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def write(df: org.apache.spark.sql.DataFrame): Unit =
+        Similarity.writeIvfPqIndex(df, "vec_id", "embedding", idx,
+          nLists = 4, lloydIters = 1, m = 8, ksub = 16, pqIters = 1,
+          codec = codec)
+      try {
+        write(emb.filter(col("vec_id") % 2 === 0))
+        assert(Similarity.readIvfPqEpoch(spark, idx) == 1L)
+        // simulate the race the scaladoc documents: model loaded at epoch 1,
+        // a rebuild swaps the root (epoch 2) before the commit
+        val stale = Similarity.loadIndexModel(spark, idx).localized
+        write(emb)
+        assert(Similarity.readIvfPqEpoch(spark, idx) == 2L)
+        val rebuiltCount = spark.read.parquet(s"$idx/index.parquet").count()
+        val odd = emb.filter(col("vec_id") % 2 === 1)
+        val staleRows = Similarity.encodeArrivals(stale, odd, "vec_id",
+          "embedding", "spec")
+        val exA = intercept[IllegalStateException](
+          Similarity.commitIvfPqAppend(spark, idx, staleRows,
+            expectedEpoch = stale.epoch))
+        assert(exA.getMessage.contains("republished"), s"$codec: ${exA.getMessage}")
+        assert(spark.read.parquet(s"$idx/index.parquet").count() == rebuiltCount,
+          s"$codec: the stale append must land NOTHING in the new root")
+        val exI = intercept[IllegalStateException](
+          Similarity.commitIvfPqIngest(spark, idx, odd, "vec_id", "embedding",
+            batchId = 0L, model = stale))
+        assert(exI.getMessage.contains("republished"), s"$codec: ${exI.getMessage}")
+        assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/ingest.parquet")),
+          s"$codec: the stale ingest batch must land NOTHING in the new root")
+        // the happy path still commits at the CURRENT epoch
+        Similarity.appendIvfPqIndex(spark, idx, odd.limit(1), "vec_id",
+          "embedding")
+        assert(spark.read.parquet(s"$idx/index.parquet").count() ==
+          rebuiltCount + 1)
+      } finally fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+    }
   }
 
   test("compactIvfPqIndex: drops the ingest delta in one swap, bumps the epoch, and row-equals a fresh rebuild on the grown corpus") {
@@ -997,65 +1011,61 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("epoch guard covers the FULL append/ingest job: a rebuild racing the encode throws with nothing visible landed, and a poisoned ingest batch is quarantined") {
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivfpq-race").toString
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val even = emb.filter(col("vec_id") % 2 === 0)
-      val odd = emb.filter(col("vec_id") % 2 === 1)
-      def rebuild(): Unit = Similarity.writeIvfPqIndex(emb, "vec_id",
-        "embedding", idx, nLists = 4, lloydIters = 1, m = 8, ksub = 16,
-        pqIters = 1)
-      Similarity.writeIvfPqIndex(even, "vec_id", "embedding", idx,
-        nLists = 4, lloydIters = 1, m = 8, ksub = 16, pqIters = 1)
-      val staleCentroids = Similarity.localFrame(spark,
-        spark.read.parquet(s"$idx/centroids.parquet").collect(),
-        spark.read.parquet(s"$idx/centroids.parquet").schema)
-      val staleCodebooks = Similarity.localFrame(spark,
-        spark.read.parquet(s"$idx/codebooks.parquet").collect(),
-        spark.read.parquet(s"$idx/codebooks.parquet").schema)
-      val c = odd.select(col("vec_id").as("n_id"),
-        graft.functions.VectorFns.unitizeNative(col("embedding")).as("n_v"))
-      val staleRows = Similarity.ivfPqIndexRows(
-        Similarity.ivfPqTrainRows(c, staleCentroids, residual = false),
-        staleCodebooks)
-      // (a) the rebuild swaps the root WHILE the append's encode job is
-      // staged but uncommitted — the pre-r19 guard (checked only before
-      // the write) would have let these stale codes land
-      val exA = intercept[IllegalStateException](
-        Similarity.commitIvfPqAppend(spark, idx, staleRows,
-          expectedEpoch = 1L, afterStage = rebuild))
-      assert(exA.getMessage.contains("republished"), exA.getMessage)
-      val rebuiltCount = emb.count()
-      assert(spark.read.parquet(s"$idx/index.parquet").count() == rebuiltCount,
-        "the raced append must land NOTHING visible in the new root")
-      assert(!fs.listStatus(new org.apache.hadoop.fs.Path(idx))
-        .exists(_.getPath.getName.startsWith(".stage-")),
-        "no staging debris may survive in the live root")
-      // (b) the rebuild swaps the root between the ingest's fail-fast
-      // check and its write — the batch dir lands INSIDE the new root,
-      // encoded against the superseded model; the post-write re-check
-      // must quarantine exactly that dir
-      Similarity.writeIvfPqIndex(even, "vec_id", "embedding", idx,
-        nLists = 4, lloydIters = 1, m = 8, ksub = 16, pqIters = 1)
-      val epochNow = Similarity.readIvfPqEpoch(spark, idx)
-      val exB = intercept[IllegalStateException](
-        Similarity.commitIvfPqIngest(spark, idx, odd, "vec_id",
-          "embedding", batchId = 5L, centroids = staleCentroids,
-          codebooks = staleCodebooks, residual = false,
-          expectedEpoch = epochNow, afterCheck = rebuild))
-      assert(exB.getMessage.contains("republished"), exB.getMessage)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(
-        s"$idx/ingest.parquet")),
-        "the poisoned batch must be quarantined (and no empty delta " +
-          "root left behind)")
-      assert(spark.read.parquet(s"$idx/index.parquet").count() == rebuiltCount)
-      // the artifact still serves cleanly after both raced commits
-      val q = emb.filter(col("vec_id") === 0)
-      assert(Similarity.ivfPqStoredTopK(spark, idx, emb, "vec_id",
-        "embedding", q, "vec_id", "embedding", k = 3, shortlist = 50,
-        nProbe = 4).count() == 3)
-    } finally fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+    codecs.foreach { codec =>
+      val idx = java.nio.file.Files.createTempDirectory(s"graft-race-$codec").toString
+      val fs = new org.apache.hadoop.fs.Path(idx)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      try {
+        val even = emb.filter(col("vec_id") % 2 === 0)
+        val odd = emb.filter(col("vec_id") % 2 === 1)
+        def write(df: org.apache.spark.sql.DataFrame): Unit =
+          Similarity.writeIvfPqIndex(df, "vec_id", "embedding", idx,
+            nLists = 4, lloydIters = 1, m = 8, ksub = 16, pqIters = 1,
+            codec = codec)
+        def rebuild(): Unit = write(emb)
+        write(even)
+        val stale = Similarity.loadIndexModel(spark, idx).localized
+        val staleRows = Similarity.encodeArrivals(stale, odd, "vec_id",
+          "embedding", "spec")
+        // (a) the rebuild swaps the root WHILE the append's encode job is
+        // staged but uncommitted — the pre-r19 guard (checked only before
+        // the write) would have let these stale rows land
+        val exA = intercept[IllegalStateException](
+          Similarity.commitIvfPqAppend(spark, idx, staleRows,
+            expectedEpoch = stale.epoch, afterStage = rebuild))
+        assert(exA.getMessage.contains("republished"), s"$codec: ${exA.getMessage}")
+        val rebuiltCount = emb.count()
+        assert(spark.read.parquet(s"$idx/index.parquet").count() == rebuiltCount,
+          s"$codec: the raced append must land NOTHING visible in the new root")
+        assert(!fs.listStatus(new org.apache.hadoop.fs.Path(idx))
+          .exists(_.getPath.getName.startsWith(".stage-")),
+          s"$codec: no staging debris may survive in the live root")
+        // (b) the rebuild swaps the root between the ingest's fail-fast
+        // check and its write — the batch dir lands INSIDE the new root,
+        // encoded against the superseded model; the post-write re-check
+        // must quarantine exactly that dir
+        write(even)
+        val exB = intercept[IllegalStateException](
+          Similarity.commitIvfPqIngest(spark, idx, odd, "vec_id",
+            "embedding", batchId = 5L, model = stale.copy(meta =
+              Similarity.readIvfPqMeta(spark, idx)), afterCheck = rebuild))
+        assert(exB.getMessage.contains("republished"), s"$codec: ${exB.getMessage}")
+        assert(!fs.exists(new org.apache.hadoop.fs.Path(
+          s"$idx/ingest.parquet")),
+          s"$codec: the poisoned batch must be quarantined (and no empty " +
+            "delta root left behind)")
+        assert(spark.read.parquet(s"$idx/index.parquet").count() == rebuiltCount)
+        // the artifact still serves cleanly after both raced commits
+        val q = emb.filter(col("vec_id") === 0)
+        val served =
+          if (codec == "raw") Similarity.annIvfStored(spark, idx, q, "vec_id",
+            "embedding", k = 3, nProbe = 4)
+          else Similarity.ivfPqStoredTopK(spark, idx, emb, "vec_id",
+            "embedding", q, "vec_id", "embedding", k = 3, shortlist = 50,
+            nProbe = 4)
+        assert(served.count() == 3)
+      } finally fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+    }
   }
 
   test("filtered search: eligibility is exact, scarce strata legitimately return < k without raising, and payload survives the grow paths") {
@@ -1615,7 +1625,8 @@ class SimilaritySpec extends SparkSpec {
       val ex = intercept[IllegalStateException](
         Similarity.appendIvfPqIndex(spark, idx, emb.limit(1), "vec_id",
           "embedding"))
-      assert(ex.getMessage.contains("pre-epoch"), ex.getMessage)
+      assert(ex.getMessage.contains("pre-epoch") &&
+        ex.getMessage.contains("rebuild required"), ex.getMessage)
       val ex2 = intercept[IllegalStateException](
         Similarity.ivfPqIndexHealth(spark, idx))
       assert(ex2.getMessage.contains("pre-epoch"), ex2.getMessage)
@@ -1626,7 +1637,50 @@ class SimilaritySpec extends SparkSpec {
       assert(Similarity.readIvfPqEpoch(spark, idx) == 1L)
       assert(Similarity.ivfPqIndexHealth(spark, idx).head()
         .getAs[Long]("bad_codebook") == 0L)
+      // a codec this engine does not know is a rebuild, not a guess
+      val metaDf = spark.read.parquet(s"$idx/meta.parquet")
+      Similarity.localFrame(spark, metaDf.collect(), metaDf.schema)
+        .withColumn("codec", lit("opq4"))
+        .write.mode("overwrite").parquet(s"$idx/meta.parquet")
+      val ex3 = intercept[IllegalStateException](
+        Similarity.ivfPqStoredTopK(spark, idx, emb, "vec_id", "embedding",
+          emb.limit(1), "vec_id", "embedding", k = 1, shortlist = 1))
+      assert(ex3.getMessage.contains("codec 'opq4'") &&
+        ex3.getMessage.contains("rebuild required"), ex3.getMessage)
     } finally fs.delete(new org.apache.hadoop.fs.Path(idx), true)
+    // the layouts that predate the publish record entirely: plain IVF
+    // (centroids + assigned) and flat PQ (codebooks + codes), no meta
+    val c = emb.select(col("vec_id").as("n_id"),
+      graft.functions.VectorFns.unitizeNative(col("embedding")).as("n_v"))
+    val cents = Similarity.kmeansCentroids(c, "n_id", "n_v", k = 4,
+      assumeUnit = true)
+    val cbs = Similarity.pqCodebooks(emb, "vec_id", "embedding", m = 8,
+      ksub = 16, iters = 1)
+    Seq(
+      "ivf" -> Seq("centroids" -> cents,
+        "assigned" -> Similarity.assignCell(c, "n_id", "n_v", cents)),
+      "pq" -> Seq("codebooks" -> cbs, "codes" -> Similarity.pqEncode(
+        emb, "vec_id", "embedding", cbs))).foreach { case (kind, tables) =>
+      val old = java.nio.file.Files.createTempDirectory(s"graft-old-$kind")
+        .toString
+      try {
+        tables.foreach { case (name, df) =>
+          df.write.parquet(s"$old/$name.parquet") }
+        Seq[() => Any](
+          () => Similarity.annIvfStored(spark, old, emb.limit(1), "vec_id",
+            "embedding", k = 1),
+          () => Similarity.ivfPqStoredTopK(spark, old, emb, "vec_id",
+            "embedding", emb.limit(1), "vec_id", "embedding", k = 1,
+            shortlist = 1),
+          () => Similarity.appendIvfPqIndex(spark, old, emb.limit(1),
+            "vec_id", "embedding"),
+          () => Similarity.ivfPqIndexHealth(spark, old)).foreach { f =>
+          val ex = intercept[IllegalStateException](f())
+          assert(ex.getMessage.contains("rebuild required") &&
+            ex.getMessage.contains("no meta.parquet"), s"$kind: ${ex.getMessage}")
+        }
+      } finally fs.delete(new org.apache.hadoop.fs.Path(old), true)
+    }
   }
 
   test("pqStoredShortlistSweep: one-scan curve equals pqTopKStored run per cut, exactly") {
@@ -1635,8 +1689,7 @@ class SimilaritySpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       val q = emb.filter(col("vec_id") < 5)
-      Similarity.writePqIndex(emb, "vec_id", "embedding", idx,
-        m = 8, ksub = 16, iters = 2)
+      writeFlatPq(idx)
       val cuts = Seq(3, 5, 9)
       val sweep = Similarity.pqStoredShortlistSweep(spark, idx, emb,
           "vec_id", "embedding", q, "vec_id", "embedding", k = 3,
@@ -1645,14 +1698,17 @@ class SimilaritySpec extends SparkSpec {
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getInt(3),
           r.getDouble(4)))
         .groupBy(_._1)
+      // per cut: the flat artifact's one-cell stored search (the former
+      // pqTopKStored)
       cuts.foreach { sl =>
-        val single = Similarity.pqTopKStored(spark, idx, emb, "vec_id",
-            "embedding", q, "vec_id", "embedding", k = 3, shortlist = sl)
+        val single = Similarity.ivfPqStoredTopK(spark, idx, emb, "vec_id",
+            "embedding", q, "vec_id", "embedding", k = 3, shortlist = sl,
+            nProbe = 1)
           .collect()
           .map(r => (sl, r.getLong(0), r.getLong(1), r.getInt(2),
             r.getDouble(3))).toSet
         assert(sweep(sl).toSet == single,
-          s"sweep cut $sl diverges from pqTopKStored")
+          s"sweep cut $sl diverges from the one-cell ivfPqStoredTopK")
       }
       intercept[IllegalArgumentException](
         Similarity.pqStoredShortlistSweep(spark, idx, emb, "vec_id",
